@@ -7,7 +7,8 @@ past" semantics of the reference's point-in-time join
 (docs/concepts/point-in-time-join.md:19-77). Rows with no match keep
 nulls (left outer); null observation keys never match.
 
-Strategies (same pair as the SWA engine):
+One match formulation plus one fetch — a join over a UNION ALL with the
+payload join pushed past it:
 
 - ``union`` (default, pure JVM): union obs+fact rows on (key, ts),
   compute ``last(value, ignorenulls=True)`` over
@@ -15,25 +16,28 @@ Strategies (same pair as the SWA engine):
   preceding row frame, keep obs rows. Fact rows sort before obs rows at
   the same timestamp, so a fact row AT the observation time is matched
   (right-inclusive). Single shuffle + sort, whole-stage codegen.
-  Tolerance is enforced by also carrying the matched fact ts.
+  Tolerance is enforced by also carrying the matched fact ts. Hot keys
+  salt in replicate mode (``hot_key_threshold``).
 
-- ``cogroup``: Arrow kernel with ``np.searchsorted``
-  (kernels.asof_indices) — used when tolerance windows make the union
-  formulation awkward or as the building block for salted skew handling.
+- ``prune`` (wide fact payloads): the same union window over
+  (key, ts) ONLY resolves each observation's matched fact timestamp;
+  :func:`asof_fetch` then fetches the matched payload rows by hash join,
+  so the payload never enters a sort.
+
+- :func:`asof_fetch`: the payload fetch for a precomputed match
+  timestamp — what ``prune`` runs after its match, and what a fused
+  SWA ``LATEST`` pass over the fact ts feeds directly.
 """
 
 from __future__ import annotations
 
 from typing import Optional, Sequence
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from feathr_spark.functions.timestamps import to_epoch_micros
-from feathr_spark.operators import kernels
 from feathr_spark.session import track_cache
 from feathr_spark.operators.swa import (
     _default_buckets,
@@ -59,7 +63,8 @@ def _est_width(dt) -> int:
                        T.TimestampNTZType, T.DecimalType)):
         return 8
     if isinstance(dt, (T.StringType, T.BinaryType)):
-        return 48
+        # document text / serialized blobs run to KBs per value
+        return 1024
     if isinstance(dt, T.StructType):
         return sum(_est_width(f.dataType) for f in dt.fields)
     # arrays/maps: token arrays are "KBs each" (docstring) — assume 2 KB
@@ -72,6 +77,22 @@ def _tiebreak(vcols):
     if not vcols:
         return F.lit(0).cast("long")
     return F.xxhash64(F.struct(*[F.col(v) for v in vcols]))
+
+
+def _parse_value_cols(value_cols):
+    """``expr AS name`` specs -> (output names, exprs aliased ``__v{i}``).
+    Plain column names pass through as their own output name."""
+    out_names, vexprs = [], []
+    for i, vc in enumerate(value_cols):
+        low = vc.lower()
+        if " as " in low:
+            expr_part = vc[: low.rindex(" as ")]
+            name = vc[low.rindex(" as ") + 4:].strip()
+        else:
+            expr_part, name = vc, vc
+        out_names.append(name)
+        vexprs.append(F.expr(expr_part).alias(f"__v{i}"))
+    return out_names, vexprs
 
 
 def asof_join(
@@ -124,23 +145,12 @@ def asof_join(
     fact2 = fact2.where(cond)
     obs_main = _isolate_null_keys(obs2, n_keys)
 
-    # project fact values
-    out_names = []
-    vexprs = []
-    for i, vc in enumerate(value_cols):
-        low = vc.lower()
-        if " as " in low:
-            expr_part = vc[: low.rindex(" as ")]
-            name = vc[low.rindex(" as ") + 4 :].strip()
-        else:
-            expr_part, name = vc, vc
-        out_names.append(name + suffix)
-        vexprs.append(F.expr(expr_part).alias(f"__v{i}"))
+    out_names, vexprs = _parse_value_cols(value_cols)
+    out_names = [name + suffix for name in out_names]
     # long cast: the bucket xxhash64 must agree with the obs side's long __nk
     fact_proj = fact2.select(*_key_cols(n_keys), F.col("__ts"),
                              F.lit(0).cast("long").alias("__nk"), *vexprs)
     vcols = [f"__v{i}" for i in range(len(value_cols))]
-    vtypes = {f.name: f.dataType for f in fact_proj.schema.fields}
 
     if strategy == "union":
         salted = bool(hot_key_threshold)
@@ -156,19 +166,12 @@ def asof_join(
             raise ValueError("prune strategy handles hot keys without salting; "
                              "drop hot_key_threshold")
         joined = _asof_prune(obs_main, fact_proj, n_keys, vcols, delay_us, tol_us)
-    elif strategy == "cogroup":
-        joined = _asof_cogroup(obs_main, fact_proj, n_keys, vcols, vtypes,
-                               obs.schema, out_names, delay_us, tol_us,
-                               hot_key_threshold=hot_key_threshold,
-                               salt_buckets=salt_buckets)
     else:
         raise ValueError(f"unknown strategy {strategy!r}")
 
-    if strategy in ("union", "prune"):
-        for vcol, name in zip(vcols, out_names):
-            joined = joined.withColumnRenamed(vcol, name)
-        joined = joined.drop(*[c for c in joined.columns if c.startswith("__")])
-    return joined
+    for vcol, name in zip(vcols, out_names):
+        joined = joined.withColumnRenamed(vcol, name)
+    return joined.drop(*[c for c in joined.columns if c.startswith("__")])
 
 
 def _asof_union(obs, fact_proj, n_keys, vcols, delay_us, tol_us, salted=False,
@@ -178,11 +181,11 @@ def _asof_union(obs, fact_proj, n_keys, vcols, delay_us, tol_us, salted=False,
     replicated into every salt bucket by swa._salt, so each observation
     still sees its key's full history while the hot key's sort fans out
     across salt_buckets partitions. Keeps wide payload columns entirely
-    JVM-side (no Arrow round-trip), unlike the cogroup path.
+    JVM-side (no Arrow round-trip).
 
     ``emit_match_ts=True`` additionally emits ``__match_ts`` (the matched
     fact row's timestamp, null when unmatched / out of tolerance) — the
-    handle the ``prune`` strategy uses to fetch payload afterwards."""
+    handle the ``prune`` strategy hands to :func:`asof_fetch`."""
     kcols = _key_cols(n_keys)
     if salted:
         kcols = kcols + ["__salt"]
@@ -236,26 +239,21 @@ def _asof_prune(obs, fact_proj, n_keys, vcols, delay_us, tol_us):
     1. **Slim match**: union as-of over (keys, ts) ONLY — resolves each
        observation's matched fact timestamp (``__match_ts``). The sort
        carries a few dozen bytes per fact row. The result is persisted
-       (MEMORY_AND_DISK): it is referenced twice below, and when ``obs``
-       is itself a computed pipeline (the planner's multi-stage output)
-       an unpersisted branch would re-execute that whole upstream DAG —
+       (MEMORY_AND_DISK): the fetch scans it twice, and when ``obs`` is
+       itself a computed pipeline (the planner's multi-stage output) an
+       unpersisted branch would re-execute that whole upstream DAG —
        measured as a 2x job on the flagship. Obs-scale narrow data;
        eviction just recomputes (resumable, unlike a localCheckpoint).
-    2. **Pruned fetch**: left-semi the fact payload by the DISTINCT
-       matched ``(key, ts)`` pairs, collapse exact-ts ties on the
-       matched subset only, then hash-join (``SHUFFLE_HASH`` — no sort)
-       back to the slim result. The semi join, the dedup, and the fact
-       side of the final join all hash-partition on the same key set,
-       so the payload crosses exactly ONE exchange; Spark's runtime
-       bloom filter (on in session.py) can push the pair filter below
-       even that.
-
-    Exact-duplicate ``(key, ts)`` fact rows: one arbitrary row wins —
-    the same tie class the sort path resolves by partition order (both
-    nondeterministic under retry among bytewise-distinct ties).
+    2. **Pruned fetch**: :func:`asof_fetch` with the shuffle plan pinned
+       (``broadcast_threshold=None``, so no pair-count job): SHUFFLE_HASH
+       left-semi of the fact payload by the distinct matched
+       ``(key, ts)`` pairs, ``max_by`` payload-hash tie collapse (the
+       winner the union sort picks), SHUFFLE_HASH join back. The payload
+       crosses exactly ONE exchange; Spark's runtime bloom filter (on in
+       session.py) can push the pair filter below even that.
 
     On a cluster where fact is stored bucketed by key
-    (sources/bucketed.py) the final join elides its fact-side exchange
+    (sources/bucketed.py) the fetch elides its fact-side exchange
     entirely — the storage-partitioned layout is the end state for
     repeated 100 TB joins.
     """
@@ -278,128 +276,8 @@ def _asof_prune(obs, fact_proj, n_keys, vcols, delay_us, tol_us):
     # minhash_lsh_dedup, where the raced table carries wide signatures
     # and IS built eagerly.)
     slim = track_cache(slim.persist(StorageLevel.MEMORY_AND_DISK))
-    pairs = (slim.where(F.col("__match_ts").isNotNull())
-             .select(*kcols, F.col("__match_ts").alias("__ts"))
-             .dropDuplicates())
-    # pairs is the small (hash-build) side; SHUFFLE_HASH avoids sorting
-    # the fact payload in place. With fact stored/cached hash-partitioned
-    # by key (the entity-partitioned corpus layout) and
-    # requireAllClusterKeysForCoPartition=false (session.py), the fact
-    # side of this semi join AND of the final join reuse that
-    # partitioning — the payload crosses ZERO exchanges.
-    fact_m = fact_proj.join(pairs.hint("SHUFFLE_HASH"),
-                            on=kcols + ["__ts"], how="left_semi")
-    # one payload row per (key, ts): exact-ts ties collapse here, on the
-    # matched subset only, reusing the semi join's partitioning; max_by
-    # payload-hash = the same deterministic winner the union sort picks
-    if vcols:
-        fact_u = (fact_m.groupBy(*kcols, "__ts")
-                  .agg(F.max_by(F.struct(*[F.col(v) for v in vcols]),
-                                _tiebreak(vcols)).alias("__payload")))
-        right = fact_u.select(
-            *kcols, F.col("__ts").alias("__match_ts"),
-            *[F.col(f"__payload.{v}").alias(v) for v in vcols])
-    else:
-        right = fact_m.dropDuplicates(kcols + ["__ts"]).select(
-            *kcols, F.col("__ts").alias("__match_ts"))
-    # hint on RIGHT: the hash build side must be the (deduped, ≤ obs-scale)
-    # matched-payload table, not the obs-scale slim result
-    return slim.join(right.hint("SHUFFLE_HASH"),
-                     on=kcols + ["__match_ts"], how="left")
-
-
-def _asof_cogroup(obs, fact_proj, n_keys, vcols, vtypes, obs_schema, out_names,
-                  delay_us, tol_us, num_buckets=None,
-                  hot_key_threshold=None, salt_buckets=8):
-    """Bucketed multi-key as-of kernel (see swa._swa_cogroup: one Arrow
-    call per hash bucket of keys, per-key slices aligned inside).
-    Hot-key skew: fact rows of hot keys replicate into every salt
-    bucket, observations hash into one — each obs still sees its key's
-    full history (swa._salt, reference SaltedSparkJoin.scala:88-130)."""
-    kcols = _key_cols(n_keys)
-    seg_cols = kcols + ["__nk"]
-    if hot_key_threshold:
-        obs, fact_proj = _salt(obs, fact_proj, n_keys, hot_key_threshold, salt_buckets)
-        seg_cols = kcols + ["__nk", "__salt"]
-    obs_out_cols = [f.name for f in obs_schema.fields]
-    out_fields = list(obs_schema.fields) + [
-        T.StructField(name, vtypes[vcol]) for vcol, name in zip(vcols, out_names)
-    ]
-    out_schema = T.StructType(out_fields)
-
-    def kernel(obs_pdf: pd.DataFrame, fact_pdf: pd.DataFrame) -> pd.DataFrame:
-        # Null-key/null-ts rows (__nk != 0) never match any fact row by
-        # construction; answer them directly instead of letting their
-        # per-row-unique __nk ids inflate the composite key cardinality,
-        # which trips the int64 overflow guard and demotes the whole
-        # bucket to the per-key loop (see swa._make_kernel).
-        if "__nk" in obs_pdf.columns:
-            nk_arr = obs_pdf["__nk"].to_numpy()
-            bad = nk_arr != 0
-            if bad.any():
-                nulls = obs_pdf.loc[bad, obs_out_cols].reset_index(drop=True)
-                for name in out_names:
-                    nulls[name] = np.full(len(nulls), None, dtype=object)
-                if bad.all():
-                    return nulls
-                valid_res = kernel(obs_pdf[~bad].reset_index(drop=True), fact_pdf)
-                return pd.concat([valid_res, nulls], ignore_index=True)
-        n = len(obs_pdf)
-        if n == 0:
-            return pd.DataFrame({c.name: pd.Series(dtype="object") for c in out_schema.fields})
-        nf = len(fact_pdf)
-        obs_ts_raw = obs_pdf["__ts"].to_numpy(dtype=np.int64)
-        fact_ts_raw = fact_pdf["__ts"].to_numpy(dtype=np.int64) if nf else np.empty(0, np.int64)
-        oc, fc = kernels.combined_codes(
-            [obs_pdf[c] for c in seg_cols], [fact_pdf[c] for c in seg_cols])
-        obs_ord = np.lexsort((obs_ts_raw, oc))
-        fact_ord = np.lexsort((fact_ts_raw, fc)) if nf else np.empty(0, np.int64)
-        oc_s, obs_ts = oc[obs_ord], obs_ts_raw[obs_ord]
-        fc_s, fts = fc[fact_ord], fact_ts_raw[fact_ord]
-        o_starts, o_ends, f_los, f_his = kernels.key_segments(oc_s, fc_s)
-
-        val_arrays = {
-            vcol: (fact_pdf[vcol].to_numpy(dtype=object)[fact_ord] if nf
-                   else np.empty(0, object))
-            for vcol in vcols
-        }
-        outs = {name: np.full(n, None, dtype=object) for name in out_names}
-        # bucket-global fast path: one composite-key searchsorted for the
-        # whole bucket (kernels.global_asof_indices); per-key loop only on
-        # int64-composite overflow
-        g = kernels.global_asof_indices(fc_s, fts, oc_s, obs_ts, delay_us, tol_us) \
-            if nf else None
-        if g is not None:
-            idx, ok = g
-            for vcol, name in zip(vcols, out_names):
-                picked = val_arrays[vcol][idx].copy()
-                picked[~ok] = None
-                outs[name][:] = picked
-        else:
-            for gi in range(len(o_starts)):
-                o0, o1 = o_starts[gi], o_ends[gi]
-                fl, fh = f_los[gi], f_his[gi]
-                if fh <= fl:
-                    continue
-                idx, ok = kernels.asof_indices(fts[fl:fh], obs_ts[o0:o1], delay_us, tol_us)
-                for vcol, name in zip(vcols, out_names):
-                    picked = val_arrays[vcol][fl:fh][idx].copy()
-                    picked[~ok] = None
-                    outs[name][o0:o1] = picked
-
-        result = obs_pdf.iloc[obs_ord][obs_out_cols].reset_index(drop=True)
-        for name in out_names:
-            result[name] = outs[name]
-        return result
-
-    b = num_buckets or _default_buckets(obs)
-    bucket = F.pmod(F.xxhash64(*seg_cols), F.lit(b)).cast("int")
-    # explicit repartition: pin the kernel-stage task count at b (see
-    # swa._swa_cogroup — AQE would coalesce the bucket shuffle into a
-    # couple of fat waves and idle the tail)
-    obs_b = obs.withColumn("__b", bucket).repartition(b, "__b")
-    fact_b = fact_proj.withColumn("__b", bucket).repartition(b, "__b")
-    return obs_b.groupBy("__b").cogroup(fact_b.groupBy("__b")).applyInPandas(kernel, out_schema)
+    return asof_fetch(slim, fact_proj, kcols, kcols, "__match_ts", "__ts",
+                      vcols, broadcast_threshold=None)
 
 
 def asof_fetch(
@@ -427,7 +305,7 @@ def asof_fetch(
     1. distinct ``(key, match_ts)`` pairs from the observations,
     2. left-semi prune of the fact payload by those pairs,
     3. deterministic exact-ts tie collapse (``max_by`` payload hash —
-       the same rule as ``asof_join(strategy='prune')``),
+       the same winner as the ``union`` strategy's sort),
     4. hash join back (``SHUFFLE_HASH`` — the payload never enters a
        sort and crosses at most ONE exchange; zero with an
        entity-partitioned or bucketed fact, sources/bucketed.py).
@@ -452,7 +330,7 @@ def asof_fetch(
     Both row thresholds are additionally capped by ``broadcast_max_bytes``
     (default 256 MB) via a schema-derived row-width estimate — fixed
     widths for numeric/timestamp columns, conservative defaults for
-    variable-width ones (48 B strings, 2 KB arrays/maps, matching the
+    variable-width ones (1 KB strings/binary, 2 KB arrays/maps, matching the
     "KBs each for token arrays" payload shape) — so 4M pairs of wide
     multi-column keys or 500k token-array payload rows cannot produce a
     multi-GB broadcast just because the ROW count passes. The implied
@@ -476,16 +354,7 @@ def asof_fetch(
     observation by key — this is that join-back, with the match
     computed in the shared kernel pass).
     """
-    out_names, vexprs = [], []
-    for i, vc in enumerate(value_cols):
-        low = vc.lower()
-        if " as " in low:
-            expr_part = vc[: low.rindex(" as ")]
-            name = vc[low.rindex(" as ") + 4:].strip()
-        else:
-            expr_part, name = vc, vc
-        out_names.append(name)
-        vexprs.append(F.expr(expr_part).alias(f"__v{i}"))
+    out_names, vexprs = _parse_value_cols(value_cols)
     vcols = [f"__v{i}" for i in range(len(value_cols))]
     fk = [f"__fk{i}" for i in range(len(fact_keys))]
 

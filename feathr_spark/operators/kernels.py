@@ -1,4 +1,5 @@
-"""Vectorized numpy/pandas merge kernels for the as-of / sliding-window join.
+"""Vectorized numpy/pandas merge kernels for the sliding-window join (and,
+through a LATEST over the fact ts, the fused as-of match).
 
 These run inside cogrouped ``applyInPandas`` (Arrow-batched, one call per
 entity-key group) and are the vectorized replacement for the reference's
@@ -395,63 +396,8 @@ def global_count_distinct(fc: np.ndarray, fts: np.ndarray, oc: np.ndarray,
             - np.searchsorted(ends, comp_l, side="right"))
 
 
-def global_asof_indices(fc: np.ndarray, fts: np.ndarray, oc: np.ndarray,
-                        ots: np.ndarray, delay_us: int = 0,
-                        tolerance_us: int | None = None):
-    """Bucket-wide as-of match: latest fact with the SAME key and
-    ``ts <= obs_ts - delay`` per obs row — one composite searchsorted;
-    a picked index from another key's band is rejected by the
-    key-equality check. Returns (idx, ok) or None on overflow."""
-    n_obs = len(ots)
-    if len(fts) == 0:
-        return np.zeros(n_obs, dtype=np.int64), np.zeros(n_obs, dtype=bool)
-    kmax = int(max(fc.max(initial=0), oc.max(initial=0))) + 1
-    base = int(fts.min())
-    top = max(int(fts.max()), int(ots.max()) if n_obs else base)
-    span = top - base + 2
-    if kmax <= (2**62) // span:
-        comp_f = fc * span + (fts - base)
-        t_hi = np.clip(ots - delay_us - base, -1, span - 1)
-        hi = np.searchsorted(comp_f, oc * span + t_hi, side="right")
-    else:
-        # rank-compressed fallback (same two-tier scheme as
-        # global_window_bounds); None only past ~2e9 rows x keys
-        uts = np.unique(fts)
-        width = len(uts) + 1
-        if kmax > (2**62) // width:
-            return None
-        comp_f = fc * width + np.searchsorted(uts, fts)
-        r_hi = np.searchsorted(uts, ots - delay_us, side="right")
-        hi = np.searchsorted(comp_f, oc * width + r_hi, side="left")
-    idx = np.maximum(hi - 1, 0)
-    ok = (hi > 0) & (fc[idx] == oc)
-    if tolerance_us is not None:
-        ok &= fts[idx] > (ots - delay_us - tolerance_us)
-    return idx, ok
-
-
 def valid_mask(obj_arr: np.ndarray) -> np.ndarray:
     """Vectorized non-null mask over an object array (None/NaN-aware)."""
     if len(obj_arr) == 0:
         return np.zeros(0, dtype=bool)
     return ~pd.isna(pd.Series(obj_arr)).to_numpy()
-
-
-# ---------------------------------------------------------------------------
-# as-of join kernel helper
-# ---------------------------------------------------------------------------
-
-
-def asof_indices(fact_ts: np.ndarray, obs_ts: np.ndarray, delay_us: int = 0,
-                 tolerance_us: int | None = None):
-    """Latest fact index with ts <= obs_ts - delay (and within tolerance).
-
-    Returns (idx, ok): idx into ts-sorted fact, ok mask of matches.
-    """
-    hi = np.searchsorted(fact_ts, obs_ts - delay_us, side="right")
-    idx = hi - 1
-    ok = idx >= 0
-    if tolerance_us is not None:
-        safe = np.maximum(idx, 0)
-        ok &= fact_ts[safe] > (obs_ts - delay_us - tolerance_us)
-    return np.maximum(idx, 0), ok

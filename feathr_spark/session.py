@@ -72,6 +72,24 @@ def _sweep_stale(d: str, max_age_s: int = 7200) -> None:
         pass
 
 
+def _driver_mem(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap size: ``FEATHR_SPARK_DRIVER_MEM`` if set, else a
+    quarter of the host's MemTotal (at most 48g). The rest of physical
+    RAM is left to JVM off-heap memory, the Python workers and tmpfs
+    shuffle files: a heap sized past the host lets one long session grow
+    until the kernel OOM-kills the JVM (no swap)."""
+    env = os.environ.get("FEATHR_SPARK_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        with open(meminfo) as fh:
+            total_kb = next(int(line.split()[1]) for line in fh
+                            if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):  # pragma: no cover - non-Linux
+        return "4g"
+    return f"{min(48 * 1024, total_kb // 4096)}m"
+
+
 def _jvm_opts() -> str:
     """Executor/driver JVM options.
 
@@ -87,8 +105,7 @@ def _jvm_opts() -> str:
     and ad-hoc sessions should not pay ~40 s of startup pre-faulting.
     """
     if os.environ.get("FEATHR_SPARK_PRETOUCH", "") not in ("", "0"):
-        heap = os.environ.get("FEATHR_SPARK_DRIVER_MEM", "48g")
-        return f"-Xms{heap} -XX:+AlwaysPreTouch"
+        return f"-Xms{_driver_mem()} -XX:+AlwaysPreTouch"
     return ""
 
 
@@ -150,8 +167,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
-        # heap must leave room for tmpfs shuffle files (same physical RAM)
-        .config("spark.driver.memory", os.environ.get("FEATHR_SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _driver_mem())
         .config("spark.driver.extraJavaOptions", _jvm_opts())
         .config("spark.ui.enabled", "false")
         # runtime bloom-filter join: Spark-native replacement for the

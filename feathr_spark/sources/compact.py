@@ -60,7 +60,8 @@ def compact_parquet(
 
     - ``sort_by``: range-partition + sort within files on these columns
       (clusters row groups for min/max skipping — e.g. ``(source, ts)``
-      so time-range scans prune files). Without it, a plain coalesce-
+      so time-range scans prune files); with ``partition_by`` the range
+      leads with the partition columns. Without it, a plain coalesce-
       style repartition preserves existing order per file.
     - ``partition_by``: re-emit these as directory partitions (pass the
       existing partition columns to keep the layout). The shuffle then
@@ -105,8 +106,12 @@ def compact_parquet(
     n_files = max(1, round(before["bytes"] / (target_file_mb * 2**20)))
     df: DataFrame = spark.read.parquet(path)
     if sort_by:
-        out = (df.repartitionByRange(n_files, *sort_by)
-               .sortWithinPartitions(*sort_by))
+        # lead the range with the partition columns: each task then holds
+        # a contiguous run of partition values and writes into few
+        # directories (ranging on sort_by alone sends every partition
+        # value to every task — n_files x #values files)
+        keys = list(partition_by) + [c for c in sort_by if c not in partition_by]
+        out = df.repartitionByRange(n_files, *keys).sortWithinPartitions(*keys)
     elif partition_by:
         # hash-partition on the directory-partition columns so each task
         # writes into few directories (a plain repartition(n) lets every

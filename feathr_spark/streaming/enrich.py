@@ -7,7 +7,7 @@ enrichment of an event stream to the offline batch path
 (FeatureJoinJob.scala). This module closes that gap Spark-natively: each
 ``foreachBatch`` micro-batch is a plain DataFrame, so the engine's
 oracle-checked batch :func:`~feathr_spark.operators.asof.asof_join`
-(union / prune / cogroup strategies, salting, tolerance, delay) runs
+(union / prune strategies, salting, tolerance, delay) runs
 unchanged per batch — identical semantics online and offline, which is
 exactly the train/serve-skew guarantee a feature store exists to give.
 
@@ -23,10 +23,11 @@ Scale notes (100 TB / long-running stream):
   a replayed epoch (foreachBatch is at-least-once on retry) overwrites
   only its own partition, never duplicating rows: exactly-once output
   without a transactional sink.
-- Each batch is obs-sized, not corpus-sized: the as-of ``prune``
-  strategy keeps wide fact payloads (token arrays) out of every sort,
-  and AQE broadcasts the slim match table when the batch is small — the
-  common case for a streaming tick.
+- Each batch is obs-sized, not corpus-sized: ``strategy="prune"``
+  keeps wide fact payloads (token arrays) out of every sort — a slim
+  (key, ts) union match, then the :func:`asof_fetch` hash join of the
+  matched payload rows only. ``union`` (the default) carries the payload
+  through its window sort and suits narrow feature tables.
 """
 
 from __future__ import annotations

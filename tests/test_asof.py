@@ -10,7 +10,7 @@ import pytest
 from feathr_spark.datagen import corpus
 from feathr_spark.operators.asof import asof_join
 
-STRATEGIES = ["union", "cogroup", "prune"]
+STRATEGIES = ["union", "prune"]
 
 
 @pytest.mark.parametrize("strategy", STRATEGIES)
@@ -95,24 +95,38 @@ def test_asof_prune_union_exact_parity(spark):
     assert pruned.exceptAll(base).count() == 0
 
 
-def test_asof_salted_cogroup_parity(spark):
-    """Salted cogroup (hot-key fact replication) must equal the union
-    strategy row-for-row on the skewed corpus."""
-    fact, obs = corpus(spark, sf=0.0005)
-    kw = dict(obs_ts_format="epoch", fact_ts_format="epoch")
-    base = asof_join(obs, fact, ["doc_id"], ["doc_id"], "ts", "event_ts",
-                     ["n_tok as a_n_tok", "source as a_src"],
-                     strategy="union", **kw).orderBy("obs_id").toPandas()
-    salted = asof_join(obs, fact, ["doc_id"], ["doc_id"], "ts", "event_ts",
-                       ["n_tok as a_n_tok", "source as a_src"],
-                       strategy="cogroup", hot_key_threshold=20, salt_buckets=4,
-                       **kw).orderBy("obs_id").toPandas()
-    assert len(base) == len(salted)
-    a = base["a_n_tok"].astype("float").fillna(-1).to_numpy()
-    b = salted["a_n_tok"].astype("float").fillna(-1).to_numpy()
-    assert np.array_equal(a, b)
-    assert (base["a_src"].fillna("∅").to_numpy()
-            == salted["a_src"].fillna("∅").to_numpy()).all()
+def test_asof_unknown_strategy_raises(spark):
+    """Only ``union`` and ``prune`` remain; the former as-of cogroup
+    kernel is gone and its name is rejected."""
+    obs = spark.createDataFrame([(1, "a", 100.0)], "obs_id long, k string, ts double")
+    fact = spark.createDataFrame([("a", 50.0, 1.0)], "k string, ts double, v double")
+    with pytest.raises(ValueError, match="unknown strategy"):
+        asof_join(obs, fact, ["k"], ["k"], "ts", "ts", ["v"], strategy="cogroup")
+
+
+def test_asof_prune_plan_is_pinned_shuffle_fetch(spark, sf_dir):
+    """prune = slim union match + asof_fetch(broadcast_threshold=None):
+    two SHUFFLE_HASH joins (semi prune, join-back), no broadcast, and no
+    job runs before the caller's action (no pair-count job, slim is
+    persisted lazily)."""
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    purchases = ev.where("event_type = 'purchase'")
+    obs = ev.select("event_id", "user_id", "ts")
+    tracker = spark.sparkContext.statusTracker()
+    spark.sparkContext.setJobGroup("asof_prune_plan", "asof_prune_plan")
+    try:
+        out = asof_join(obs, purchases, ["user_id"], ["user_id"], "ts", "ts",
+                        ["value as v", "event_type as kind"],
+                        obs_ts_format="timestamp", fact_ts_format="timestamp",
+                        strategy="prune")
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert tracker.getJobIdsForGroup("asof_prune_plan") == []
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    assert plan.count("ShuffledHashJoin") == 2
+    assert "BroadcastHashJoin" not in plan
+    assert "SortMergeJoin" not in plan
+    assert out.count() == obs.count()
 
 
 def test_asof_salted_union_parity(spark):
@@ -206,6 +220,30 @@ def test_asof_fetch_regimes_identical(spark, sf_dir):
     plan = a._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     vec.unpersist()
+
+
+def test_asof_fetch_string_width_keeps_text_payload_off_broadcast(spark):
+    """Strings are estimated at KB scale, not 48 B: a document-text
+    payload under the row thresholds but over ``broadcast_max_bytes`` at
+    KB-per-string must take the shuffle fetch — no broadcast of either
+    the string-keyed pairs or the matched payloads. A 48 B estimate
+    (n * 104 B for key + ts + text) would grant both broadcasts here."""
+    from feathr_spark import asof_fetch
+
+    n = 200
+    fact = spark.createDataFrame(
+        [(f"doc{i}", 100 + i, "x" * 4096) for i in range(n)],
+        "k string, ts long, text string")
+    obs = spark.createDataFrame(
+        [(i, f"doc{i}", 100 + i) for i in range(n)],
+        "obs_id long, k string, m_ts long")
+    out = asof_fetch(obs, fact, ["k"], ["k"], "m_ts", "ts", ["text as got"],
+                     broadcast_max_bytes=n * 500)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" not in plan
+    assert plan.count("ShuffledHashJoin") == 2
+    got = out.orderBy("obs_id").collect()
+    assert len(got) == n and all(r["got"] == "x" * 4096 for r in got)
 
 
 def test_asof_fetch_byte_cap_overrides_row_threshold(spark, sf_dir):

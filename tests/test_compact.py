@@ -106,6 +106,26 @@ def test_compact_partitioned_file_counts_stay_compacted(spark, tmp_path):
                     if f.endswith(".parquet"))
             assert n <= 2, f"{d} has {n} files"
 
+    # with sort_by as well, the range shuffle must lead with the
+    # partition columns: ranging on sort_by alone sends every partition
+    # value to every task (n_files x #values files again)
+    path = str(tmp_path / "pf_sorted")
+    (spark.range(0, 30_000)
+     .select(F.col("id"), (F.col("id") % 4).cast("string").alias("src"),
+             F.sha2(F.col("id").cast("string"), 512).alias("pad"))
+     .repartition(40).write.option("compression", "none")
+     .partitionBy("src").parquet(path))
+    h0 = _content_hash(spark, path)
+    rep = compact_parquet(spark, path, target_file_mb=1, sort_by=["id"],
+                          partition_by=["src"])
+    assert rep["n_files_planned"] >= 3  # several ranges, or nothing to check
+    assert _content_hash(spark, path) == h0
+    for d in os.listdir(path):
+        if d.startswith("src="):
+            n = sum(1 for f in os.listdir(os.path.join(path, d))
+                    if f.endswith(".parquet"))
+            assert n <= 2, f"{d} has {n} files (sort_by + partition_by)"
+
 
 def test_compact_through_file_uri_and_stranded_old_recovery(spark, tmp_path):
     # the swap + byte accounting must run through the Hadoop FS API:

@@ -1,0 +1,45 @@
+"""Session defaults that depend on the host."""
+
+from __future__ import annotations
+
+import os
+
+import pytest
+
+from feathr_spark.session import _driver_mem, _jvm_opts
+
+_UNIT = {"k": 2**10, "m": 2**20, "g": 2**30, "t": 2**40}
+
+
+def _bytes(size: str) -> int:
+    return int(size[:-1]) * _UNIT[size[-1].lower()]
+
+
+def _mem_total_bytes(path: str = "/proc/meminfo") -> int:
+    with open(path) as fh:
+        return next(int(line.split()[1]) * 1024 for line in fh
+                    if line.startswith("MemTotal:"))
+
+
+@pytest.mark.skipif(not os.path.exists("/proc/meminfo"), reason="needs /proc/meminfo")
+def test_default_driver_heap_fits_this_host(monkeypatch):
+    monkeypatch.delenv("FEATHR_SPARK_DRIVER_MEM", raising=False)
+    heap = _bytes(_driver_mem())
+    assert 0 < heap <= _mem_total_bytes()
+    monkeypatch.setenv("FEATHR_SPARK_PRETOUCH", "1")
+    assert _jvm_opts() == f"-Xms{_driver_mem()} -XX:+AlwaysPreTouch"
+
+
+@pytest.mark.parametrize("total_kb", [1 << 20, 15_728_640, 64 << 20, 1 << 30])
+def test_default_driver_heap_never_exceeds_mem_total(monkeypatch, tmp_path, total_kb):
+    monkeypatch.delenv("FEATHR_SPARK_DRIVER_MEM", raising=False)
+    meminfo = tmp_path / "meminfo"
+    meminfo.write_text(f"MemTotal:       {total_kb} kB\nMemFree:        1024 kB\n")
+    heap = _bytes(_driver_mem(str(meminfo)))
+    assert 0 < heap <= total_kb * 1024 // 2  # headroom for workers + tmpfs shuffle
+    assert heap <= 48 * 2**30
+
+
+def test_driver_heap_env_override(monkeypatch):
+    monkeypatch.setenv("FEATHR_SPARK_DRIVER_MEM", "3g")
+    assert _driver_mem() == "3g"

@@ -602,10 +602,6 @@ def test_rank_compressed_composite_tier_matches_span_tier():
     cd2 = kernels.global_count_distinct(fc, fts * S, oc, ots * S, vals, W * S, D * S)
     assert (cd1 == cd2).all()
 
-    i1, ok1 = kernels.global_asof_indices(fc, fts, oc, ots, D)
-    i2, ok2 = kernels.global_asof_indices(fc, fts * S, oc, ots * S, D * S)
-    assert (ok1 == ok2).all() and (i1[ok1] == i2[ok2]).all()
-
 
 def test_salted_union_matches_unsalted_and_cogroup(spark):
     """Round-4: the pure-JVM union path gains hot-key salting (same

@@ -139,7 +139,7 @@ def brute_force_asof(obs, fact, delay, tolerance):
     return out
 
 
-@pytest.mark.parametrize("strategy", ["union", "cogroup", "prune"])
+@pytest.mark.parametrize("strategy", ["union", "prune"])
 @settings(max_examples=10, deadline=None, derandomize=True,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(fact=fact_rows, obs=obs_rows,
