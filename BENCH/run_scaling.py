@@ -195,15 +195,13 @@ def job(cpus: int, sf: float, warmup: int = 1, iters: int = 2,
               .select("doc_id").cache())
     hot_df.count()
 
-    swa_strategy = os.environ.get("FEATHR_BENCH_SWA_STRATEGY", "cogroup")
-
     def pipeline():
         # SWA: cogroup kernel + hot-key salting — the zipf-hottest doc_id
         # would otherwise be one straggler PYTHON kernel call bounding wall
         # time at any core count
         vec = join_window_agg_features(
             obs, fact, ["doc_id"], ["doc_id"], "ts", "event_ts", feats,
-            obs_ts_format="epoch", fact_ts_format="epoch", strategy=swa_strategy,
+            obs_ts_format="epoch", fact_ts_format="epoch", strategy="cogroup",
             hot_keys_df=hot_df, salt_buckets=16,
             prefilter_time_range=False,  # obs spans the full fact range here
         )

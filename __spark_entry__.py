@@ -617,8 +617,8 @@ def q_swa_multikey(spark, sf_dir):
 
 def q_swa_salted(spark, sf_dir):
     """Identical semantics to swa_sum_count_avg, with explicit hot-key
-    salting forced on — the correctness gate proves salting changes
-    nothing but the physical plan."""
+    salting forced on (cogroup, time-sliced salt) — the correctness gate
+    proves salting changes nothing but the physical plan."""
     from feathr_spark import SWAFeature, WindowSpec
 
     out = _swa(spark, sf_dir, [
@@ -635,16 +635,17 @@ def q_swa_salted(spark, sf_dir):
 
 
 def q_swa_salted_union(spark, sf_dir):
-    """Round-4 twin of swa_salted on the pure-JVM union strategy: the
-    salt column joins the window partition key (operators/swa.py
-    _swa_union salted=True) — same oracle, different physical plan."""
+    """Twin of swa_salted in the cogroup strategy's replicate salt mode
+    (hot-key fact rows copied into every salt bucket). The row name is
+    kept from the deleted salted-union strategy; the union strategy does
+    not salt. Same oracle, different physical plan."""
     from feathr_spark import SWAFeature, WindowSpec
 
     out = _swa(spark, sf_dir, [
         SWAFeature("s", "SUM", "value", WindowSpec(3600)),
         SWAFeature("c", "COUNT", "value", WindowSpec(3600)),
         SWAFeature("a", "AVG", "value", WindowSpec(3600)),
-    ], strategy="union", hot_key_threshold=50, salt_buckets=4)
+    ], strategy="cogroup", hot_key_threshold=50, salt_buckets=4, salt_mode="replicate")
     return out.select(
         "event_id",
         F.round("s", 4).alias("sum_1h"),
@@ -1703,8 +1704,8 @@ def q_swa_custom_agg(spark, sf_dir):
     """User-registered RANGE (max - min) aggregation through the public
     register_aggregation surface — the reference's ComplexAggregation /
     custom-UDAF parity (TimeWindowFeatureDefinition.scala:24-27). The fn
-    is vectorized numpy over per-key window slices and runs inside the
-    cogroup Arrow kernel; RANGE is SQL-expressible, so a DuckDB oracle
+    is vectorized numpy over window bounds into bucket-wide arrays and runs
+    inside the cogroup Arrow kernel; RANGE is SQL-expressible, so a DuckDB oracle
     value-checks the whole custom-agg plumbing."""
     import numpy as np
 

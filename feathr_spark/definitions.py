@@ -50,13 +50,15 @@ FRAME_AGGS = {"SUM", "COUNT", "AVG", "MIN", "MAX", "LATEST", "TIMESINCE"}
 
 # User-registered SWA aggregations (the reference's ComplexAggregation /
 # custom UDAF surface, TimeWindowFeatureDefinition.scala:24-27): the
-# callable runs inside the cogroup Arrow kernel on each per-key slice.
+# callable runs inside the cogroup Arrow kernel, once per hash bucket.
 @dataclass(frozen=True)
 class CustomAggregation:
     name: str
     # fn(values: np.ndarray[object], fact_ts: np.ndarray[int64 us],
     #    lo: np.ndarray, hi: np.ndarray) -> np.ndarray of len(lo);
-    # window i covers values[lo[i]:hi[i]] (ts-ascending), empty -> emit None
+    # values/fact_ts span the bucket's keys, ts-ascending within each key;
+    # window i covers values[lo[i]:hi[i]] (never crosses a key),
+    # empty -> emit None
     fn: Callable
     dtype: str = "double"  # Spark DDL type of the output column
 
@@ -67,8 +69,9 @@ CUSTOM_AGGS: dict[str, CustomAggregation] = {}
 def register_aggregation(name: str, fn: Callable, dtype: str = "double") -> None:
     """Register a custom sliding-window aggregation usable as
     ``SWAFeature(..., agg=name)``. Vectorized contract: ``fn`` receives
-    the key-slice's metric values + timestamps and the per-observation
-    window bounds ``(lo, hi)`` and returns one output per observation —
+    bucket-wide metric values + timestamps (sorted by ts within each key)
+    and the per-observation window bounds ``(lo, hi)``, where no window
+    crosses a key, and returns one output per observation —
     numpy in, numpy out, no per-row Python outside the fn. Runs on the
     cogroup (Arrow kernel) strategy only; the fn is closure-captured at
     plan time, so registration must happen on the driver before the join

@@ -2,21 +2,25 @@
 through a LATEST over the fact ts, the fused as-of match).
 
 These run inside cogrouped ``applyInPandas`` (Arrow-batched, one call per
-entity-key group) and are the vectorized replacement for the reference's
-row-at-a-time sorted-merge iterator
-(feathr-impl/.../swj/join/SlidingWindowJoinIterator.scala:59-124):
+hash bucket of entity keys) and are the vectorized replacement for the
+reference's row-at-a-time sorted-merge iterator
+(feathr-impl/.../swj/join/SlidingWindowJoinIterator.scala:59-124). Every
+function works on the bucket-wide arrays sorted by (key code, ts):
 
-- window bounds ``(t_obs - width - delay, t_obs - delay]`` via
-  ``np.searchsorted`` (the vectorized analogue of
-  moveStartIndex/moveEndIndex, SlidingWindowJoinIterator.scala:177-220)
+- window bounds ``(t_obs - width - delay, t_obs - delay]`` for every obs
+  row via two ``np.searchsorted`` over a composite (key, ts) code (the
+  vectorized analogue of moveStartIndex/moveEndIndex,
+  SlidingWindowJoinIterator.scala:177-220); a window never crosses a key,
+  so each aggregate below just reads ``[lo, hi)``
 - SUM/COUNT/AVG via float64 prefix sums (the vectorized analogue of the
-  incremental agg/deagg path, :252-271) — O(n + q) per group
+  incremental agg/deagg path, :252-271) — O(n + q) per bucket
 - MIN/MAX via a sparse table (O(n log n) build, O(1) per query)
 - LATEST via a last-valid-index scan; TIMESINCE via the sorted tail
+- COUNT_DISTINCT via interval stabbing (two searchsorteds per bucket)
 
-Determinism: fact rows are sorted by (ts) with a stable sort, and all
+Determinism: fact rows are sorted by (key, ts) with a stable sort, and all
 float accumulation is float64 prefix sums over that order, so results
-are reproducible given the same input rows per group.
+are reproducible given the same input rows per bucket.
 """
 
 from __future__ import annotations
@@ -27,17 +31,6 @@ import pandas as pd
 # ---------------------------------------------------------------------------
 # low-level primitives
 # ---------------------------------------------------------------------------
-
-
-def window_bounds(fact_ts: np.ndarray, obs_ts: np.ndarray, width_us: int, delay_us: int):
-    """Index ranges [lo, hi) into ts-sorted ``fact_ts`` for each obs time.
-
-    Window is left-exclusive / right-inclusive:
-    ``fact_ts > t - width - delay  AND  fact_ts <= t - delay``.
-    """
-    lo = np.searchsorted(fact_ts, obs_ts - width_us - delay_us, side="right")
-    hi = np.searchsorted(fact_ts, obs_ts - delay_us, side="right")
-    return lo, hi
 
 
 def _prefix_sum_count(v: np.ndarray):
@@ -90,7 +83,7 @@ def _last_valid_index(valid: np.ndarray) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# per-aggregate window evaluation (all inputs sorted by fact ts)
+# per-aggregate window evaluation over [lo, hi) of (key, ts)-sorted inputs
 # ---------------------------------------------------------------------------
 
 
@@ -141,26 +134,6 @@ def agg_timesince(fact_ts, obs_ts, lo, hi):
     return out
 
 
-def agg_count_distinct(codes, lo, hi):
-    """Exact distinct count of non-null metric values per window.
-
-    ``codes``: factorized int codes, -1 for null. Per-obs-row loop with a
-    vectorized inner unique — the one aggregate without a prefix-sum
-    form; the scalable alternative is APPROX_COUNT_DISTINCT on the
-    union-window path.
-    """
-    out = np.full(len(lo), np.nan)
-    for i in range(len(lo)):
-        if hi[i] > lo[i]:
-            c = codes[lo[i] : hi[i]]
-            c = c[c >= 0]
-            if len(c):
-                out[i] = len(np.unique(c))
-            elif hi[i] > lo[i]:
-                out[i] = np.nan  # rows exist but metric all-null -> null
-    return out
-
-
 def agg_pooling(arrs, lo, hi, op: str):
     """Element-wise pooling over array-valued metric (MaxPooling etc.).
 
@@ -181,45 +154,40 @@ def agg_grouped(codes, groups, v, lo, hi, agg: str, limit):
     """GroupBy-within-window: per obs row, aggregate metric per group
     value, emit array<struct<group,value>> sorted by value desc, top-K.
 
+    ``codes`` index ``groups`` (-1 for null) over the whole bucket; each
+    window compacts the codes it holds, so its cost follows the window
+    size, not the bucket's group count.
+
     Reference: GroupBySpec (SlidingWindowDataDef.scala:63-65) +
     takeTopK (SlidingWindowJoinIterator.scala:559-584).
     """
-    n_groups = len(groups)
+    if agg not in ("SUM", "COUNT", "AVG", "MIN", "MAX"):
+        raise ValueError(f"grouped SWA does not support {agg}")
     out = np.full(len(lo), None, dtype=object)
     valid = ~np.isnan(v)
     for i in range(len(lo)):
         s, e = lo[i], hi[i]
         if e <= s:
             continue
-        c = codes[s:e]
-        vv = v[s:e]
-        m = (c >= 0) & valid[s:e]
+        m = (codes[s:e] >= 0) & valid[s:e]
         if not m.any():
             continue
-        c, vv = c[m], vv[m]
-        sums = np.bincount(c, weights=vv, minlength=n_groups)
-        cnts = np.bincount(c, minlength=n_groups)
-        present = cnts > 0
-        if agg in ("SUM", "COUNT"):
-            vals = sums
-        elif agg == "AVG":
-            with np.errstate(invalid="ignore", divide="ignore"):
-                vals = np.where(present, sums / np.maximum(cnts, 1), np.nan)
-        elif agg in ("MIN", "MAX"):
+        present, c = np.unique(codes[s:e][m], return_inverse=True)
+        vv = v[s:e][m]
+        if agg in ("MIN", "MAX"):
             # fancy-assignment: last write per group wins, so order the
             # writes so the extremum lands last
             order = np.argsort(vv, kind="stable")
             if agg == "MIN":
                 order = order[::-1]
-            vals = np.full(n_groups, np.nan)
+            vals = np.full(len(present), np.nan)
             vals[c[order]] = vv[order]
         else:
-            raise ValueError(f"grouped SWA does not support {agg}")
-        gidx = np.nonzero(present)[0]
-        pairs = sorted(
-            ((groups[g], float(vals[g])) for g in gidx),
-            key=lambda t: (-t[1], t[0]),
-        )
+            vals = np.bincount(c, weights=vv, minlength=len(present))
+            if agg == "AVG":
+                vals = vals / np.bincount(c, minlength=len(present))
+        pairs = sorted(zip([groups[g] for g in present], vals.tolist()),
+                       key=lambda t: (-t[1], t[0]))
         if limit:
             pairs = pairs[:limit]
         out[i] = [{"group": g, "value": val} for g, val in pairs]
@@ -227,7 +195,7 @@ def agg_grouped(codes, groups, v, lo, hi, agg: str, limit):
 
 
 # ---------------------------------------------------------------------------
-# multi-key segmentation (bucketed cogroup)
+# bucket-wide key codes and window bounds (bucketed cogroup)
 # ---------------------------------------------------------------------------
 
 
@@ -235,10 +203,11 @@ def combined_codes(obs_cols: list, fact_cols: list):
     """Shared dense int64 codes for multi-column keys across two frames.
 
     Each column is factorized over the concatenation of both sides (nulls
-    become a real category), then columns are combined positionally into
-    a single int64 code; the accumulator is re-factorized before any
-    multiplication could overflow. Equal keys — across sides — get equal
-    codes, so one ``np.searchsorted`` aligns obs and fact segments.
+    become a real category) and folded into the running code, which is
+    re-factorized after every fold. Codes thus stay below the bucket's
+    distinct-key count: ``combo * k + codes`` never overflows, and the
+    composites of global_window_bounds / global_count_distinct stay
+    narrow. Equal keys — across sides — get equal codes.
     """
     n_obs = len(obs_cols[0]) if obs_cols else 0
     combo = None
@@ -249,30 +218,17 @@ def combined_codes(obs_cols: list, fact_cols: list):
         )
         codes, uniques = pd.factorize(both, use_na_sentinel=False)
         codes = codes.astype(np.int64)
-        k = max(len(uniques), 1)
         if combo is None:
             combo = codes
-        else:
-            if int(combo.max(initial=0)) > (2**62) // k:
-                combo = pd.factorize(combo)[0].astype(np.int64)
-            combo = combo * k + codes
+        elif len(uniques) > 1:
+            combo = pd.factorize(combo * len(uniques) + codes)[0].astype(np.int64)
     return combo[:n_obs], combo[n_obs:]
 
 
-def key_segments(obs_codes_sorted: np.ndarray, fact_codes_sorted: np.ndarray):
-    """Per-key slices over code-sorted frames.
-
-    Returns (obs_start, obs_end, fact_start, fact_end) — one entry per
-    distinct obs key; fact slices are empty where the key has no facts.
-    """
-    n = len(obs_codes_sorted)
-    starts = np.flatnonzero(np.r_[True, obs_codes_sorted[1:] != obs_codes_sorted[:-1]]) \
-        if n else np.empty(0, dtype=np.int64)
-    ends = np.r_[starts[1:], n] if n else np.empty(0, dtype=np.int64)
-    vals = obs_codes_sorted[starts] if n else np.empty(0, dtype=np.int64)
-    f_lo = np.searchsorted(fact_codes_sorted, vals, side="left")
-    f_hi = np.searchsorted(fact_codes_sorted, vals, side="right")
-    return starts, ends, f_lo, f_hi
+def _check_composite(kmax: int, width: int) -> None:
+    if kmax > (2**62) // width:
+        raise OverflowError(f"{kmax} key codes x {width} ranks overflow the int64 "
+                            "(key, ts) composite of one kernel bucket")
 
 
 def global_window_bounds(fc: np.ndarray, fts: np.ndarray, oc: np.ndarray,
@@ -289,14 +245,11 @@ def global_window_bounds(fc: np.ndarray, fts: np.ndarray, oc: np.ndarray,
     compression costs one extra sort but keeps the composite width at
     the number of distinct times actually present instead of the raw
     span, so a years-wide microsecond timeline costs ~log2(U) bits, not
-    ~45; overflow (and the per-key fallback) is then only reachable
-    past ~2e9 rows x keys per bucket. Replaces the per-key Python loop
-    (one searchsorted pair per key) with O((n+m) log n) total — the
-    difference between ~1e5 numpy calls and a handful per bucket.
+    ~45. O((n+m) log n) per bucket, whatever its key count.
 
-    Returns (lo, hi) global indices, or None when even the
-    rank-compressed composite would overflow int64 (caller falls back
-    to the per-key path).
+    Returns (lo, hi) global indices. Raises OverflowError when even the
+    rank-compressed composite would overflow int64; with the dense key
+    codes of combined_codes that takes ~2e9 rows in one bucket.
     """
     n_obs = len(ots)
     if len(fts) == 0:
@@ -315,8 +268,7 @@ def global_window_bounds(fc: np.ndarray, fts: np.ndarray, oc: np.ndarray,
         return lo, hi
     uts = np.unique(fts)
     width = len(uts) + 1
-    if kmax > (2**62) // width:
-        return None
+    _check_composite(kmax, width)
     # comp_f is sorted: fc ascending, and within a key fts ascending
     comp_f = fc * width + np.searchsorted(uts, fts)
     r_lo = np.searchsorted(uts, ots - width_us - delay_us, side="right")
@@ -349,8 +301,8 @@ def global_count_distinct(fc: np.ndarray, fts: np.ndarray, oc: np.ndarray,
 
     ``codes``: int64 value codes per fact row (fact-sorted order), -1 for
     null (nulls never count). Returns per-obs counts (0 when the window
-    has no non-null values — caller maps 0 to null), or None when the
-    composite would overflow int64 (caller falls back to the per-key path).
+    has no non-null values — caller maps 0 to null). Raises OverflowError
+    like global_window_bounds.
     """
     n_obs = len(ots)
     if len(fts) == 0:
@@ -387,8 +339,7 @@ def global_count_distinct(fc: np.ndarray, fts: np.ndarray, oc: np.ndarray,
                 - np.searchsorted(ends, comp_l, side="right"))
     uvals = np.unique(np.concatenate([s_val, e_val, l_val]))
     width = len(uvals) + 1
-    if kmax > (2**62) // width:
-        return None
+    _check_composite(kmax, width)
     starts = np.sort(fc_v * width + np.searchsorted(uvals, s_val))
     ends = np.sort(fc_v * width + np.searchsorted(uvals, e_val))
     comp_l = oc * width + np.searchsorted(uvals, l_val)

@@ -13,18 +13,22 @@ Two physical strategies, picked automatically:
    Spark SQL window frame ``rangeBetween(-(width+delay)+1, -delay)``
    over int64 microsecond timestamps, evaluated only at observation
    rows. One shuffle + one sort per key; no Python in the hot path.
-   Used when every feature is a plain frame-expressible aggregate.
+   Used when every feature is a plain frame-expressible aggregate and
+   no hot keys are declared; it does not salt.
 
-2. ``cogroup`` (vectorized Arrow kernel): both sides are cogrouped by
-   key and merged with numpy ``searchsorted`` + prefix sums
-   (:mod:`feathr_spark.operators.kernels`) — the vectorized analogue of
-   the reference's sorted-merge iterator
-   (feathr-impl/.../swj/SlidingWindowJoin.scala:31-110). Required for
-   grouped top-K output, element-wise pooling, and any custom
-   aggregate. Hot-key skew is handled by replicating fact rows for hot
-   keys across salt buckets and hashing observations into buckets
-   (the reference's SaltedSparkJoin.scala:37-130 scheme — AQE cannot
-   split a cogroup, so salting is explicit here).
+2. ``cogroup`` (vectorized Arrow kernel): both sides are cogrouped by a
+   hash bucket of the key and merged with numpy ``searchsorted`` +
+   prefix sums (:mod:`feathr_spark.operators.kernels`) — the vectorized
+   analogue of the reference's sorted-merge iterator
+   (feathr-impl/.../swj/SlidingWindowJoin.scala:31-110). One pass per
+   bucket: window bounds are computed for every observation at once and
+   every aggregate (built-in, grouped top-K, element-wise pooling,
+   custom) reads its ``[lo, hi)`` slice of the bucket's (key, ts)-sorted
+   fact arrays. Hot-key skew is handled here only, by salting: a hot
+   key's timeline is cut into window-wide chunks (``salt_mode`` ``auto``
+   / ``time_slice``) or its fact rows are replicated across salt buckets
+   (``replicate``; the reference's SaltedSparkJoin.scala:37-130 scheme).
+   AQE cannot split a cogroup, so salting is explicit.
 
 Shared optimizations (reference parity):
 - fact time-range prefilter ``[min_obs - max(width+delay), max_obs - min(delay)]``
@@ -52,6 +56,9 @@ from feathr_spark.functions.timestamps import to_epoch_micros
 from feathr_spark.operators import kernels
 
 _NUMERIC_AGGS = {"SUM", "AVG", "MIN", "MAX"}
+_CD_AGGS = {"COUNT_DISTINCT", "APPROX_COUNT_DISTINCT"}
+_NUMERIC_FNS = {"SUM": kernels.agg_sum, "COUNT": kernels.agg_count, "AVG": kernels.agg_avg,
+                "MIN": kernels.agg_min, "MAX": kernels.agg_max}
 
 
 # ---------------------------------------------------------------------------
@@ -169,17 +176,11 @@ def _time_prefilter(obs: DataFrame, fact: DataFrame, features: Sequence[SWAFeatu
 
 
 def _swa_union(obs: DataFrame, fact_proj: DataFrame, features, metric_col,
-               n_keys, salted: bool = False) -> DataFrame:
-    kcols = _key_cols(n_keys)
+               n_keys) -> DataFrame:
     obs_u = obs.withColumn("__is_obs", F.lit(1))
     fact_u = fact_proj.withColumn("__is_obs", F.lit(0)).withColumn("__fact_ts", F.col("__ts"))
     unioned = obs_u.unionByName(fact_u, allowMissingColumns=True)
-    # salting (same _salt output as the cogroup path): __salt joins the
-    # window partition key, so a hot key's fragments sort/scan in
-    # parallel tasks — the window semantics stay exact because every
-    # fragment holds each fact row an observation can see exactly once
-    # (replicate: full copy per bucket; time-slice: the obs's own chunk)
-    part_cols = kcols + ["__nk"] + (["__salt"] if salted else [])
+    part_cols = _key_cols(n_keys) + ["__nk"]
     # pin the window-stage task count (AQE would coalesce the exchange
     # into ~parallelism fat sort tasks — coarse waves, idle tail; see
     # _swa_cogroup). HashPartitioning(part_cols, b) satisfies the
@@ -231,8 +232,8 @@ def _make_kernel(obs_schema: T.StructType, out_schema: T.StructType, specs: list
     keys — not a single key — so per-call Arrow/pandas overhead is paid
     ~num_buckets times instead of num_distinct_keys times (the
     difference is 30s vs 3s on a 12k-key corpus). Inside, both sides are
-    sorted by (key-code, ts); ``kernels.key_segments`` aligns per-key
-    slices and the per-aggregate numpy kernels run on each slice.
+    sorted by (key-code, ts) and every aggregate is evaluated once over
+    the whole bucket on ``kernels.global_window_bounds``.
     """
     obs_out_cols = [f.name for f in obs_schema.fields]
     feat_names = [s["name"] for s in specs]
@@ -255,12 +256,11 @@ def _make_kernel(obs_schema: T.StructType, out_schema: T.StructType, specs: list
         # Null-key/null-ts rows (__nk != 0) never match any fact row by
         # construction (fact __nk is always 0), so answer them directly
         # with all-null features instead of letting their per-row-unique
-        # __nk values into the composite key codes. Left inside, they
-        # inflate key cardinality by the null-row count, trip the
-        # int64-composite overflow guard, and silently demote EVERY
-        # bucket to the per-key fallback loop (measured 3-5x kernel cost
-        # on a 1%-null-key corpus) — the null rows must be isolated from
-        # the shuffle, not from the fast path.
+        # __nk values into the composite key codes. Left inside, each
+        # would be a key of its own, inflating the key count by the
+        # null-row count and pushing the bucket's (key, ts) composite off
+        # the cheap span tier — the null rows must be isolated from the
+        # shuffle, not from the fast path.
         if "__nk" in obs_pdf.columns:
             nk_arr = obs_pdf["__nk"].to_numpy()
             bad = nk_arr != 0
@@ -283,161 +283,70 @@ def _make_kernel(obs_schema: T.StructType, out_schema: T.StructType, specs: list
             return pd.DataFrame({c.name: pd.Series(dtype="object") for c in out_schema.fields})
         nf = len(fact_pdf)
         obs_ts_raw = obs_pdf["__ts"].to_numpy(dtype=np.int64)
-        fact_ts_raw = fact_pdf["__ts"].to_numpy(dtype=np.int64) if nf else np.empty(0, np.int64)
         oc, fc = kernels.combined_codes(
             [obs_pdf[c] for c in seg_cols], [fact_pdf[c] for c in seg_cols])
         obs_ord = np.lexsort((obs_ts_raw, oc))
-        fact_ord = np.lexsort((fact_ts_raw, fc)) if nf else np.empty(0, np.int64)
         oc_s, obs_ts = oc[obs_ord], obs_ts_raw[obs_ord]
-        fc_s, fact_ts = fc[fact_ord], fact_ts_raw[fact_ord]
-        o_starts, o_ends, f_los, f_his = kernels.key_segments(oc_s, fc_s)
+        outs = {s["name"]: np.full(n, None, dtype=object) if _is_object(s)
+                else np.full(n, np.nan) for s in specs}
 
-        # fact columns extracted + sorted once per call
-        num_cols: dict[str, np.ndarray] = {}
-        obj_cols: dict[str, np.ndarray] = {}
+        # One pass over the whole bucket: composite-key searchsorted bounds
+        # index the (key, ts)-sorted fact arrays, and since a window never
+        # crosses a key every aggregate reads its [lo, hi) slice directly.
+        # A bucket with no fact rows keeps every feature null.
+        if nf:
+            fact_ts_raw = fact_pdf["__ts"].to_numpy(dtype=np.int64)
+            fact_ord = np.lexsort((fact_ts_raw, fc))
+            fc_s, fact_ts = fc[fact_ord], fact_ts_raw[fact_ord]
+            cols: dict = {}
+            bounds: dict = {}
 
-        def _want_obj(col):
-            if col not in obj_cols:
-                obj_cols[col] = fact_pdf[col].to_numpy(dtype=object)[fact_ord] \
-                    if nf else np.empty(0, object)
+            def col(name, dtype):
+                if (name, dtype) not in cols:
+                    cols[(name, dtype)] = fact_pdf[name].to_numpy(dtype=dtype)[fact_ord]
+                return cols[(name, dtype)]
 
-        def _want_num(col):
-            if col not in num_cols:
-                num_cols[col] = fact_pdf[col].to_numpy(dtype=np.float64)[fact_ord] \
-                    if nf else np.empty(0, np.float64)
-
-        for s in specs:
-            mc, agg = s["metric"], s["agg"]
-            if s["group_col"] is not None:
-                _want_obj(s["group_col"])
-                _want_num(mc)
-            elif agg in ("COUNT_DISTINCT", "APPROX_COUNT_DISTINCT") or agg == "LATEST" \
-                    or agg.endswith("_POOLING") or s["name"] in custom_fns:
-                _want_obj(mc)
-            elif agg == "TIMESINCE":
-                pass  # only timestamps used
-            else:
-                _want_num(mc)
-
-        outs: dict[str, np.ndarray] = {}
-        for s in specs:
-            outs[s["name"]] = np.full(n, None, dtype=object) if _is_object(s) \
-                else np.full(n, np.nan)
-
-        # Bucket-global fast path: prefix-sum-able aggregates evaluate over
-        # the WHOLE bucket with composite-key searchsorted bounds — no
-        # per-key Python loop (the loop is ~1e5 tiny numpy calls per
-        # bucket; this is ~2 searchsorteds + one prefix sum per spec).
-        # COUNT_DISTINCT has its own global form (interval-stabbing, see
-        # kernels.global_count_distinct) — the per-window np.unique loop
-        # was a measured 6s straggler on heavy-key buckets.
-        _global_aggs = {"SUM", "COUNT", "AVG", "MIN", "MAX", "LATEST", "TIMESINCE",
-                        "COUNT_DISTINCT", "APPROX_COUNT_DISTINCT"}
-        _cd_aggs = {"COUNT_DISTINCT", "APPROX_COUNT_DISTINCT"}
-
-        def _is_global(s):
-            return s["agg"] in _global_aggs and s["group_col"] is None
-
-        global_specs = [s for s in specs if _is_global(s)] if nf else []
-        gbounds = {}
-        cd_counts = {}
-        overflow = False
-        for s in global_specs:
-            if s["agg"] in _cd_aggs:
-                codes, _ = pd.factorize(pd.Series(obj_cols[s["metric"]]),
-                                        use_na_sentinel=True)
-                cnt = kernels.global_count_distinct(
-                    fc_s, fact_ts, oc_s, obs_ts, codes.astype(np.int64),
-                    s["width_us"], s["delay_us"])
-                if cnt is None:
-                    overflow = True
-                    break
-                cd_counts[s["name"]] = cnt
-            else:
-                b = kernels.global_window_bounds(
-                    fc_s, fact_ts, oc_s, obs_ts, s["width_us"], s["delay_us"])
-                if b is None:
-                    overflow = True
-                    break
-                gbounds[s["name"]] = b
-        if overflow:  # composite overflow -> per-key fallback
-            global_specs = []
-            gbounds = {}
-            cd_counts = {}
-        loop_specs = [s for s in specs if s not in global_specs]
-
-        for s in global_specs:
-            name, agg = s["name"], s["agg"]
-            if agg in _cd_aggs:
-                cnt = cd_counts[name]
-                outs[name][:] = np.where(cnt > 0, cnt.astype(np.float64), np.nan)
-                continue
-            lo, hi = gbounds[name]
-            if agg == "LATEST":
-                vals = obj_cols[s["metric"]]
-                valid = kernels.valid_mask(vals)
-                idx, ok = kernels.agg_latest(vals, valid, lo, hi)
-                picked = vals[idx].copy()
-                picked[~ok] = None
-                outs[name][:] = picked
-            elif agg == "TIMESINCE":
-                outs[name][:] = kernels.agg_timesince(fact_ts, obs_ts, lo, hi)
-            else:
-                v = num_cols[s["metric"]]
-                fn = {"SUM": kernels.agg_sum, "COUNT": kernels.agg_count,
-                      "AVG": kernels.agg_avg, "MIN": kernels.agg_min,
-                      "MAX": kernels.agg_max}[agg]
-                outs[name][:] = fn(v, lo, hi)
-
-        for gi in range(len(o_starts)) if loop_specs else ():
-            o0, o1 = o_starts[gi], o_ends[gi]
-            fl, fh = f_los[gi], f_his[gi]
-            if fh <= fl:
-                continue  # no facts for this key -> outputs stay null
-            ots = obs_ts[o0:o1]
-            fts = fact_ts[fl:fh]
-            for s in loop_specs:
-                name, agg = s["name"], s["agg"]
-                lo, hi = kernels.window_bounds(fts, ots, s["width_us"], s["delay_us"])
+            for s in specs:
+                name, agg, win = s["name"], s["agg"], (s["width_us"], s["delay_us"])
+                if s["group_col"] is None and agg in _CD_AGGS:
+                    # interval-stabbing form (kernels.global_count_distinct):
+                    # a per-window np.unique was a measured 6s straggler
+                    codes, _ = pd.factorize(pd.Series(col(s["metric"], object)),
+                                            use_na_sentinel=True)
+                    cnt = kernels.global_count_distinct(
+                        fc_s, fact_ts, oc_s, obs_ts, codes.astype(np.int64), *win)
+                    outs[name][:] = np.where(cnt > 0, cnt.astype(np.float64), np.nan)
+                    continue
+                if win not in bounds:
+                    bounds[win] = kernels.global_window_bounds(
+                        fc_s, fact_ts, oc_s, obs_ts, *win)
+                lo, hi = bounds[win]
                 if s["group_col"] is not None:
-                    codes, groups = pd.factorize(pd.Series(obj_cols[s["group_col"]][fl:fh]))
-                    v = num_cols[s["metric"]][fl:fh]
-                    outs[name][o0:o1] = kernels.agg_grouped(
-                        codes, list(groups), v, lo, hi, agg, s["limit"])
+                    codes, groups = pd.factorize(pd.Series(col(s["group_col"], object)))
+                    outs[name][:] = kernels.agg_grouped(
+                        codes, list(groups), col(s["metric"], np.float64), lo, hi,
+                        agg, s["limit"])
                 elif agg.endswith("_POOLING"):
-                    outs[name][o0:o1] = kernels.agg_pooling(
-                        obj_cols[s["metric"]][fl:fh], lo, hi, agg)
+                    outs[name][:] = kernels.agg_pooling(col(s["metric"], object), lo, hi, agg)
                 elif agg == "LATEST":
-                    vals = obj_cols[s["metric"]][fl:fh]
-                    valid = np.array([x is not None and x == x for x in vals], dtype=bool)
-                    idx, ok = kernels.agg_latest(vals, valid, lo, hi)
+                    vals = col(s["metric"], object)
+                    idx, ok = kernels.agg_latest(vals, kernels.valid_mask(vals), lo, hi)
                     picked = vals[idx].copy()
                     picked[~ok] = None
-                    outs[name][o0:o1] = picked
+                    outs[name][:] = picked
                 elif agg == "TIMESINCE":
-                    outs[name][o0:o1] = kernels.agg_timesince(fts, ots, lo, hi)
-                elif agg in ("COUNT_DISTINCT", "APPROX_COUNT_DISTINCT"):
-                    codes, _ = pd.factorize(pd.Series(obj_cols[s["metric"]][fl:fh]),
-                                            use_na_sentinel=True)
-                    outs[name][o0:o1] = kernels.agg_count_distinct(codes, lo, hi)
+                    outs[name][:] = kernels.agg_timesince(fact_ts, obs_ts, lo, hi)
                 elif name in custom_fns:
-                    outs[name][o0:o1] = custom_fns[name](
-                        obj_cols[s["metric"]][fl:fh], fts, lo, hi)
+                    outs[name][:] = custom_fns[name](col(s["metric"], object), fact_ts, lo, hi)
                 else:
-                    v = num_cols[s["metric"]][fl:fh]
-                    fn = {"SUM": kernels.agg_sum, "COUNT": kernels.agg_count,
-                          "AVG": kernels.agg_avg, "MIN": kernels.agg_min,
-                          "MAX": kernels.agg_max}[agg]
-                    outs[name][o0:o1] = fn(v, lo, hi)
+                    outs[name][:] = _NUMERIC_FNS[agg](col(s["metric"], np.float64), lo, hi)
 
         result = obs_pdf.iloc[obs_ord][obs_out_cols].reset_index(drop=True)
         for s in specs:
             name = s["name"]
             if name in int_feats:
-                vals = pd.to_numeric(pd.Series(outs[name]), errors="coerce")
-                result[name] = pd.array(
-                    [None if pd.isna(x) else int(round(x)) for x in vals], dtype="Int64"
-                )
+                result[name] = pd.to_numeric(pd.Series(outs[name]), errors="coerce") \
+                    .round().astype("Int64")
             else:
                 result[name] = outs[name]
         return result
@@ -592,6 +501,10 @@ def _swa_cogroup(obs: DataFrame, fact_proj: DataFrame, features, metric_col, n_k
     kcols = _key_cols(n_keys)
     seg_cols = kcols + ["__nk"]
     if hot_key_threshold or hot_keys_df is not None:
+        if hot_keys_df is not None:
+            # positional rename to the internal widened key columns
+            hot_keys_df = hot_keys_df.select(*[
+                F.col(c).alias(f"__k{i}") for i, c in enumerate(hot_keys_df.columns)])
         # every SWA window is bounded, so hot keys default to TIME-SLICED
         # salting: chunk width = the widest effective window, each fact
         # row copied into <= 2 chunks (see _salt). ``salt_mode="replicate"``
@@ -599,8 +512,7 @@ def _swa_cogroup(obs: DataFrame, fact_proj: DataFrame, features, metric_col, n_k
         # timeline is shorter than a couple of window widths).
         span_us = max((f.window.width_us + f.window.delay_us) for f in features)
         lo_shift_us = min(0, min(f.window.delay_us for f in features))
-        slice_w = span_us if (salt_mode in ("auto", "time_slice") and span_us > 0) \
-            else None
+        slice_w = span_us if (salt_mode != "replicate" and span_us > 0) else None
         obs, fact_proj = _salt(obs, fact_proj, n_keys, hot_key_threshold or 0,
                                salt_buckets, hot_key_method, hot_keys_df,
                                slice_width_us=slice_w, span_us=span_us,
@@ -775,6 +687,9 @@ def join_window_agg_features(
     clash = {f.name for f in features} & set(obs.columns)
     if clash:
         raise ValueError(f"feature names collide with observation columns: {sorted(clash)}")
+    if salt_mode not in ("auto", "time_slice", "replicate"):
+        raise ValueError(f"unknown salt_mode {salt_mode!r}; "
+                         "expected 'auto', 'time_slice' or 'replicate'")
     if slick:
         return _slick_wrap(
             obs, obs_keys, obs_ts,
@@ -850,31 +765,13 @@ def join_window_agg_features(
             raise ValueError(
                 f"custom aggregations {custom} require the cogroup strategy "
                 "(no Spark window-frame form)")
-        salted = bool(hot_key_threshold) or hot_keys_df is not None
-        if salted:
-            if hot_keys_df is not None:
-                hot_keys_df = hot_keys_df.select(*[
-                    F.col(c).alias(f"__k{i}")
-                    for i, c in enumerate(hot_keys_df.columns)])
-            span_us = max((f.window.width_us + f.window.delay_us)
-                          for f in features)
-            lo_shift_us = min(0, min(f.window.delay_us for f in features))
-            slice_w = (span_us if (salt_mode in ("auto", "time_slice")
-                                   and span_us > 0) else None)
-            obs_main, fact_proj = _salt(
-                obs_main, fact_proj, n_keys, hot_key_threshold or 0,
-                salt_buckets, hot_key_method, hot_keys_df,
-                slice_width_us=slice_w, span_us=span_us,
-                lo_shift_us=lo_shift_us)
-        joined = _swa_union(obs_main, fact_proj, features, metric_col,
-                            n_keys, salted=salted)
+        if hot_key_threshold or hot_keys_df is not None:
+            raise ValueError("hot-key salting runs on the cogroup strategy only; "
+                             "use strategy='cogroup' (or 'auto')")
+        joined = _swa_union(obs_main, fact_proj, features, metric_col, n_keys)
         helper = [c for c in joined.columns if c.startswith("__")]
         joined = joined.drop(*helper)
     elif strategy == "cogroup":
-        if hot_keys_df is not None:
-            # positional rename to the internal widened key columns
-            hot_keys_df = hot_keys_df.select(*[
-                F.col(c).alias(f"__k{i}") for i, c in enumerate(hot_keys_df.columns)])
         joined = _swa_cogroup(
             obs_main, fact_proj, features, metric_col, n_keys,
             obs.schema, out_fields, hot_key_threshold, salt_buckets, num_buckets,

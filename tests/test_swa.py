@@ -413,9 +413,9 @@ def test_freq_items_composite_keys_rejected(spark):
 
 
 def test_global_count_distinct_matches_loop():
-    """Interval-stabbing COUNT_DISTINCT == the per-window np.unique
-    reference on randomized multi-key buckets (incl. nulls, delays,
-    obs keys with no facts, obs times outside the fact span)."""
+    """Interval-stabbing COUNT_DISTINCT == a per-obs-row brute-force
+    mask + np.unique on randomized multi-key buckets (incl. nulls,
+    delays, obs keys with no facts, obs times outside the fact span)."""
     import numpy as np
     import pandas as pd
 
@@ -438,25 +438,17 @@ def test_global_count_distinct_matches_loop():
         D = int(rng.integers(0, 5 * 10**5)) if trial % 2 else 0
         got = kernels.global_count_distinct(fc, fts, oc, ots, codes, W, D)
         want = np.zeros(no, dtype=np.int64)
-        o_starts, o_ends, f_los, f_his = kernels.key_segments(oc, fc)
-        for gi in range(len(o_starts)):
-            o0, o1 = o_starts[gi], o_ends[gi]
-            fl, fh = f_los[gi], f_his[gi]
-            if fh <= fl:
-                continue
-            lo, hi = kernels.window_bounds(fts[fl:fh], ots[o0:o1], W, D)
-            c = codes[fl:fh]
-            for i in range(o1 - o0):
-                cc = c[lo[i]:hi[i]]
-                cc = cc[cc >= 0]
-                want[o0 + i] = len(np.unique(cc))
+        for i in range(no):
+            m = (fc == oc[i]) & (fts > ots[i] - W - D) & (fts <= ots[i] - D) \
+                & (codes >= 0)
+            want[i] = len(np.unique(codes[m]))
         assert (got == want).all(), f"trial {trial}"
 
 
 def test_custom_aggregation_registry(spark):
     """register_aggregation: a user-defined RANGE agg (max - min) runs
-    inside the cogroup kernel on per-key window slices; union strategy
-    rejects it with a clear error."""
+    inside the cogroup kernel on bucket-wide window bounds; union
+    strategy rejects it with a clear error."""
     import feathr_spark
     from feathr_spark.definitions import CUSTOM_AGGS
 
@@ -510,12 +502,11 @@ def test_cms_hot_keys_superset_of_exact(spark):
 
 def test_null_key_rows_stay_off_the_global_composite():
     """Null-key/null-ts observations carry per-row-unique __nk ids; left
-    inside the kernel's composite key codes they inflate cardinality by
-    the null-row count and trip the int64-composite overflow guard,
-    silently demoting EVERY bucket to the per-key fallback loop
-    (measured 3-5x kernel cost at sf8 with a 1%-null-key corpus). The
-    kernel must answer them directly (all-null features) and keep the
-    global searchsorted path for the valid rows."""
+    inside the kernel's composite key codes each would be a key of its
+    own, inflating the key count by the null-row count and pushing the
+    bucket's (key, ts) composite off the cheap span tier. The kernel must
+    answer them directly (all-null features) and pass only the valid
+    rows' keys to the global searchsorted pass."""
     import numpy as np
     import pandas as pd
     import pyspark.sql.types as T
@@ -549,22 +540,20 @@ def test_null_key_rows_stay_off_the_global_composite():
                   width_us=7 * DAY, delay_us=0, limit=None)]
     kern = swa._make_kernel(obs_schema, out_schema, specs, ["__k0", "__nk"])
 
-    calls = {"global": 0, "fallback": 0}
+    key_counts = []
     orig = kernels.global_window_bounds
 
-    def spy(*a, **k):
-        r = orig(*a, **k)
-        calls["global" if r is not None else "fallback"] += 1
-        return r
+    def spy(fc, fts, oc, *a, **k):
+        key_counts.append(int(max(fc.max(), oc.max())) + 1)
+        return orig(fc, fts, oc, *a, **k)
 
     kernels.global_window_bounds = spy
     try:
         res = kern(obs, fact)
     finally:
         kernels.global_window_bounds = orig
-    # the __nk cardinality (n/2 unique ids x 300 keys over a month-span
-    # micro timeline) would overflow the span composite if it leaked in
-    assert calls["global"] > 0 and calls["fallback"] == 0
+    # only the 300 valid keys reach the composite, not the n/2 null ids
+    assert key_counts and max(key_counts) <= 300
     assert len(res) == n
     by_id = res.set_index("obs_id")
     odd = by_id.loc[[i for i in range(1, n, 2)]]
@@ -604,10 +593,10 @@ def test_rank_compressed_composite_tier_matches_span_tier():
 
 
 def test_salted_union_matches_unsalted_and_cogroup(spark):
-    """Round-4: the pure-JVM union path gains hot-key salting (same
-    _salt machinery as cogroup — __salt joins the window partition).
-    Parity across unsalted union / salted union (both salt modes) /
-    salted cogroup, incl. a delayed window and COUNT_DISTINCT."""
+    """Salting runs on the cogroup strategy only: unsalted union ==
+    salted cogroup in both salt modes, incl. a delayed window and
+    COUNT_DISTINCT, and union with hot keys (a threshold or a precomputed
+    list) raises, naming cogroup."""
     fact, obs = corpus(spark, sf=0.0005)
     feats = [
         SWAFeature("s1", "SUM", "n_tok", WindowSpec(86400)),
@@ -621,17 +610,70 @@ def test_salted_union_matches_unsalted_and_cogroup(spark):
     plain = join_window_agg_features(obs, fact, strategy="union", **kwargs) \
         .orderBy("obs_id").toPandas()
     for mode in ("time_slice", "replicate"):
-        salted = join_window_agg_features(
-            obs, fact, strategy="union", hot_key_threshold=50,
+        cg = join_window_agg_features(
+            obs, fact, strategy="cogroup", hot_key_threshold=50,
             salt_buckets=4, salt_mode=mode, **kwargs) \
             .orderBy("obs_id").toPandas()
         for c in ("s1", "a7", "lt", "cd", "dl"):
             assert np.allclose(plain[c].astype(float).fillna(-1),
-                               salted[c].astype(float).fillna(-1),
+                               cg[c].astype(float).fillna(-1),
                                rtol=1e-9), (mode, c)
-    cg = join_window_agg_features(obs, fact, strategy="cogroup",
-                                  hot_key_threshold=50, salt_buckets=4,
-                                  **kwargs).orderBy("obs_id").toPandas()
-    for c in ("s1", "a7", "lt", "cd", "dl"):
-        assert np.allclose(plain[c].astype(float).fillna(-1),
-                           cg[c].astype(float).fillna(-1), rtol=1e-9), c
+    hot = fact.select("doc_id").limit(3)
+    for hot_kw in (dict(hot_key_threshold=50), dict(hot_keys_df=hot)):
+        with pytest.raises(ValueError, match="cogroup"):
+            join_window_agg_features(obs, fact, strategy="union", **hot_kw, **kwargs)
+
+
+def test_unknown_salt_mode_raises(spark):
+    """A misspelt salt_mode must not silently select replicate salting."""
+    obs = spark.createDataFrame([(1, 100)], "k long, ts long")
+    fact = spark.createDataFrame([(1, 50, 2.0)], "k long, ts long, v double")
+    feats = [SWAFeature("vs", "SUM", "v", WindowSpec(80))]
+    for mode in ("timeslice", "Replicate"):
+        with pytest.raises(ValueError, match="salt_mode"):
+            join_window_agg_features(obs, fact, ["k"], ["k"], "ts", "ts", feats,
+                                     strategy="cogroup", hot_key_threshold=0,
+                                     salt_mode=mode)
+
+
+def test_dense_codes_keep_high_cardinality_composite_keys_global():
+    """A 3-column key with ~45k values per column: the folded key codes
+    must stay dense (at most the bucket's distinct keys), so
+    global_window_bounds returns bounds on a bucket whose sparse
+    combination (~1e14 codes x 150k distinct timestamps) would overflow
+    the int64 composite — and the bounds equal a brute-force window
+    match on the raw key tuples."""
+    from feathr_spark.operators import kernels
+
+    rng = np.random.default_rng(5)
+    tuples = rng.integers(0, 100_000, size=(60_000, 3))
+    nf, no = 150_000, 20_000
+    fk = tuples[rng.integers(0, len(tuples), nf)]
+    ok = np.vstack([tuples[rng.integers(0, len(tuples), no - 500)],
+                    rng.integers(100_000, 200_000, size=(500, 3))])  # unmatched
+    fts = rng.integers(0, 10**9, nf)
+    ots = rng.integers(0, int(1.1e9), no)
+    W, D = 2 * 10**8, 10**7
+    oc, fc = kernels.combined_codes([pd.Series(ok[:, j]) for j in range(3)],
+                                    [pd.Series(fk[:, j]) for j in range(3)])
+    n_keys = len(np.unique(np.vstack([ok, fk]), axis=0))
+    assert max(oc.max(), fc.max()) < n_keys
+    fo, oo = np.lexsort((fts, fc)), np.lexsort((ots, oc))
+    lo, hi = kernels.global_window_bounds(fc[fo], fts[fo], oc[oo], ots[oo], W, D)
+
+    # brute force on the raw key tuples: equi-join + window filter
+    fdf = pd.DataFrame({"a": fk[fo, 0], "b": fk[fo, 1], "c": fk[fo, 2],
+                        "fts": fts[fo], "pos": np.arange(nf)})
+    odf = pd.DataFrame({"a": ok[oo, 0], "b": ok[oo, 1], "c": ok[oo, 2],
+                        "ots": ots[oo], "i": np.arange(no)})
+    m = odf.merge(fdf, on=["a", "b", "c"])
+    m = m[(m["fts"] > m["ots"] - W - D) & (m["fts"] <= m["ots"] - D)]
+    assert len(m) > 1000
+    want = m.groupby("i")["pos"].agg(["min", "max", "count"]) \
+        .reindex(range(no), fill_value=0)
+    got_n = hi - lo
+    assert (got_n == want["count"].to_numpy()).all()
+    hit = got_n > 0
+    # matches are contiguous in (key, ts) order, so [lo, hi) is exact
+    assert (lo[hit] == want["min"].to_numpy()[hit]).all()
+    assert (hi[hit] - 1 == want["max"].to_numpy()[hit]).all()

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 import pytest
 
 try:
@@ -27,7 +28,8 @@ try:
 except ImportError:  # pragma: no cover
     pytest.skip("hypothesis not installed", allow_module_level=True)
 
-from feathr_spark import SWAFeature, WindowSpec
+from feathr_spark import SWAFeature, WindowSpec, register_aggregation
+from feathr_spark.definitions import CUSTOM_AGGS
 from feathr_spark.operators.swa import join_window_agg_features
 
 KEYS = ["a", "b", "c", None]
@@ -79,6 +81,36 @@ def brute_force(obs, fact, width, delay):
     return out
 
 
+# cogroup-only features: group-by top-K and a registered custom aggregate
+# (FIRST = the earliest value in the window), all read off the kernel's
+# bucket-wide window bounds
+GROUPED = {"g_sum": ("SUM", 1), "g_avg": ("AVG", None),
+           "g_min": ("MIN", 2), "g_max": ("MAX", 1)}
+
+
+def brute_force_grouped(obs, fact, width, delay):
+    """Per obs row: {feature: [(group, value), ...] or None} + FIRST."""
+    out = []
+    for k, t in obs:
+        lo, hi = t - width - delay, t - delay
+        rows = [] if k is None else sorted(
+            (ts, v, c) for (fk, ts, v, c) in fact if fk == k and lo < ts <= hi)
+        want = {"first": float(rows[0][1]) if rows else None}
+        for name, (agg, limit) in GROUPED.items():
+            by = {}
+            for _, v, c in rows:
+                by.setdefault(c, []).append(v)
+            fn = {"SUM": sum, "MIN": min, "MAX": max,
+                  "AVG": lambda vs: sum(vs) / len(vs)}[agg]
+            pairs = sorted(((c, float(fn(vs))) for c, vs in by.items()),
+                           key=lambda p: (-p[1], p[0]))
+            want[name] = pairs[:limit] if limit else pairs
+            if not rows:
+                want[name] = None
+        out.append(want)
+    return out
+
+
 @pytest.mark.parametrize("strategy", ["union", "cogroup"])
 @settings(max_examples=12, deadline=None, derandomize=True,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
@@ -101,9 +133,25 @@ def test_swa_matches_brute_force(spark, strategy, fact, obs, win):
         SWAFeature("tsince", "TIMESINCE", "v", WindowSpec(width, delay)),
         SWAFeature("cd", "COUNT_DISTINCT", "cat", WindowSpec(width, delay)),
     ]
-    got = {r["obs_id"]: r for r in join_window_agg_features(
-        obs_df, fact_df, ["k"], ["k"], "ts", "ts", feats,
-        strategy=strategy).collect()}
+    if strategy == "cogroup":
+        # defined here so the worker unpickles it by value, not by module
+        def first_in_window(values, ts, lo, hi):
+            out = np.full(len(lo), None, dtype=object)
+            nonempty = hi > lo
+            out[nonempty] = values[lo[nonempty]]
+            return out
+
+        register_aggregation("FIRST", first_in_window)
+        feats += [SWAFeature(name, agg, "v", WindowSpec(width, delay),
+                             group_by="cat", limit=limit)
+                  for name, (agg, limit) in GROUPED.items()]
+        feats.append(SWAFeature("first", "FIRST", "v", WindowSpec(width, delay)))
+    try:
+        got = {r["obs_id"]: r for r in join_window_agg_features(
+            obs_df, fact_df, ["k"], ["k"], "ts", "ts", feats,
+            strategy=strategy).collect()}
+    finally:
+        CUSTOM_AGGS.pop("FIRST", None)
     for want in brute_force(obs, fact, width, delay):
         g = got[want["obs_id"]]
         for name in ("s", "n", "av", "mn", "mx", "lt", "tsince", "cd"):
@@ -115,6 +163,21 @@ def test_swa_matches_brute_force(spark, strategy, fact, obs, win):
             else:
                 assert v is not None and math.isclose(float(v), float(w),
                                                       rel_tol=1e-9), ctx
+    if strategy != "cogroup":
+        return
+    for i, want in enumerate(brute_force_grouped(obs, fact, width, delay)):
+        g = got[i]
+        ctx = (f"obs {i} (w={width} d={delay}): want {want} got {g}"
+               f"\nobs={obs}\nfact={fact}")
+        assert g["first"] == want["first"], ctx
+        for name in GROUPED:
+            v = None if g[name] is None else [(r["group"], r["value"]) for r in g[name]]
+            if want[name] is None:
+                assert v is None, ctx
+            else:
+                assert v is not None and [c for c, _ in v] == [c for c, _ in want[name]] \
+                    and all(math.isclose(a, b, rel_tol=1e-9, abs_tol=1e-12)
+                            for (_, a), (_, b) in zip(v, want[name])), ctx
 
 
 # ---------------------------------------------------------------------------
@@ -240,14 +303,13 @@ def test_pooling_matches_brute_force(spark, fact, obs, width):
 
 
 # ---------------------------------------------------------------------------
-# salted variants (round 4): every key forced hot — the entire dataset
-# runs through the salt machinery on BOTH strategies and both salt modes
+# salted variants: every key forced hot — the entire dataset runs through
+# the salt machinery (cogroup, the only salted strategy) in both salt modes
 # ---------------------------------------------------------------------------
 
 
 @pytest.mark.parametrize("strategy,salt_mode",
-                         [("union", "time_slice"), ("union", "replicate"),
-                          ("cogroup", "time_slice"), ("cogroup", "replicate")])
+                         [("cogroup", "time_slice"), ("cogroup", "replicate")])
 @settings(max_examples=8, deadline=None, derandomize=True,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(fact=fact_rows, obs=obs_rows, win=windows)
