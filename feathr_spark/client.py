@@ -36,6 +36,7 @@ from typing import Optional, Sequence, Union
 
 from pyspark.sql import DataFrame, SparkSession
 
+from feathr_spark import registry
 from feathr_spark.definitions import (
     Anchor,
     DerivedFeature,
@@ -343,58 +344,30 @@ class FeathrClient:
                 for k in keys}
 
     # -- registry ----------------------------------------------------------
-    def _registry_path(self, project_name: str) -> str:
-        import os
-
+    def _registry(self) -> registry.Registry:
         if self._registry_dir is None:
             import tempfile
 
             self._registry_dir = tempfile.mkdtemp(prefix="feathr_registry_")
-        os.makedirs(self._registry_dir, exist_ok=True)
-        return os.path.join(self._registry_dir, f"{project_name}.json")
+        return registry.Registry(self._registry_dir, self.spark)
 
     def register_features(self, project_name: str = "default") -> str:
         """Persist the built feature context as registry metadata
-        (reference client.py:229-296 registers to Purview/SQL; here a
-        JSON project file under ``registry_dir`` — same metadata, local
-        backend). Code hooks (source ``preprocessing``, anchor
-        ``extractor``) are code, not metadata: anchors carrying them
-        raise, mirroring the reference shipping UDFs separately from
-        registry entries (client.py:537 _PreprocessingPyudfManager)."""
+        (reference client.py:229-296 registers to Purview/SQL; here one
+        JSON project document under ``registry_dir`` — same metadata,
+        file backend; see :mod:`feathr_spark.registry`). Anchors carrying
+        code hooks (source ``preprocessing``, anchor ``extractor``)
+        raise: register metadata only. Returns the document's path."""
         self._require_built()
-        import json
-        import os
-        import tempfile
-
-        for a in self.anchor_list:
-            if a.source.preprocessing is not None or a.extractor is not None:
-                raise ValueError(
-                    f"anchor {a.name!r} carries a code hook "
-                    "(preprocessing/extractor); register metadata only "
-                    "and re-attach code after get_features_from_registry")
-        doc = {
-            "project": project_name,
-            "anchors": [_anchor_to_dict(a) for a in self.anchor_list],
-            "derived": [_derived_to_dict(d)
-                        for d in self.derived_feature_list],
-            "lookups": [_lookup_to_dict(lk)
-                        for lk in self.lookup_feature_list],
-        }
-        path = self._registry_path(project_name)
-        fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path))
-        with os.fdopen(fd, "w") as fh:
-            json.dump(doc, fh, indent=1, sort_keys=True)
-        os.replace(tmp, path)
-        return path
+        doc = registry.to_document(project_name, self.anchor_list,
+                                   self.derived_feature_list,
+                                   self.lookup_feature_list)
+        return self._registry().write(project_name, doc)
 
     def list_registered_features(self, project_name: str = "default") -> list:
         """Feature names registered under the project (reference
         client.py:298-320)."""
-        doc = self._read_registry(project_name)
-        names = [f["name"] for a in doc["anchors"] for f in a["features"]]
-        names += [d["name"] for d in doc["derived"]]
-        names += [lk["name"] for lk in doc["lookups"]]
-        return names
+        return [f["name"] for f in self._registry().features(project_name)]
 
     def get_features_from_registry(self, project_name: str = "default",
                                    return_keys: bool = False):
@@ -403,32 +376,17 @@ class FeathrClient:
         :meth:`build_features` with the restored definitions, and
         returns ``{name: definition}`` (plus ``{name: anchor key
         expressions}`` when ``return_keys``)."""
-        doc = self._read_registry(project_name)
-        anchors = [_anchor_from_dict(a) for a in doc["anchors"]]
-        derived = [_derived_from_dict(d) for d in doc["derived"]]
-        lookups = [_lookup_from_dict(lk) for lk in doc["lookups"]]
-        self.build_features(anchor_list=anchors,
-                            derived_feature_list=derived + lookups)
-        feats: dict = {}
-        keys: dict = {}
-        for a in anchors:
-            for f in a.features:
-                feats[f.name] = f
-                keys[f.name] = list(a.keys)
-        for d in derived + lookups:
-            feats[d.name] = d
+        doc = self._registry().read(project_name)
+        anchors = [registry.anchor_from_dict(a) for a in doc["anchors"]]
+        feats = {f["name"]: registry.definition(f)
+                 for f in registry.features(doc)}
+        self.build_features(
+            anchor_list=anchors,
+            derived_feature_list=[
+                d for d in feats.values()
+                if isinstance(d, (DerivedFeature, LookupFeature))])
+        keys = {f.name: list(a.keys) for a in anchors for f in a.features}
         return (feats, keys) if return_keys else feats
-
-    def _read_registry(self, project_name: str) -> dict:
-        import json
-        import os
-
-        path = self._registry_path(project_name)
-        if not os.path.exists(path):
-            raise KeyError(f"no registered project {project_name!r} "
-                           f"under {self._registry_dir!r}")
-        with open(path) as fh:
-            return json.load(fh)
 
     def search_features(self, keyword: str,
                         project_name: str = "default") -> list:
@@ -436,214 +394,17 @@ class FeathrClient:
         names — the reference registry's
         ``GET /projects/{p}/features?keyword=`` (sql-registry
         main.py:127-146)."""
-        kw = keyword.lower()
-        return [n for n in self.list_registered_features(project_name)
-                if kw in n.lower()]
+        return [f["name"] for f in
+                self._registry().features(project_name, keyword)]
 
     def get_project_lineage(self, project_name: str = "default") -> dict:
-        """Full project lineage graph from registry metadata — the
-        reference registry service's project graph
-        (sql-registry registry/db_registry.py:164-183 ``get_project``)
-        reduced to its payload: typed nodes and typed edges using the
-        reference's RelationshipType vocabulary (models.py:113-117 —
-        Contains / Consumes / Produces):
-
-        - ``anchor --Consumes--> source``
-        - ``anchor --Produces--> anchor feature``
-        - ``derived/lookup feature --Consumes--> input feature``
-        - ``project --Contains--> anchor | derived | lookup``
-
-        Returns ``{"project", "nodes": [{id, type, ...}],
-        "edges": [{from, to, type}]}``.
-        """
-        doc = self._read_registry(project_name)
-        nodes: dict[str, dict] = {}
-        edges: list[dict] = []
-
-        def node(nid: str, ntype: str, **attrs) -> str:
-            nodes.setdefault(nid, {"id": nid, "type": ntype, **attrs})
-            return nid
-
-        def edge(frm: str, to: str, etype: str) -> None:
-            edges.append({"from": frm, "to": to, "type": etype})
-
-        proj = node(f"project:{doc['project']}", "project")
-        for a in doc["anchors"]:
-            s = a["source"]
-            src = node(f"source:{s['path']}", "source",
-                       path=s["path"], fmt=s["fmt"])
-            anc = node(f"anchor:{a['name']}", "anchor", keys=a["keys"])
-            edge(proj, anc, "Contains")
-            edge(anc, src, "Consumes")
-            for f in a["features"]:
-                feat = node(f"feature:{f['name']}", "anchor_feature",
-                            kind=f["kind"])
-                edge(anc, feat, "Produces")
-        for d in doc["derived"]:
-            feat = node(f"feature:{d['name']}", "derived_feature",
-                        expr=d["expr"])
-            edge(proj, feat, "Contains")
-            for inp in d["inputs"]:
-                edge(feat, f"feature:{inp}", "Consumes")
-        for lk in doc["lookups"]:
-            feat = node(f"feature:{lk['name']}", "lookup_feature",
-                        aggregation=lk["aggregation"])
-            edge(proj, feat, "Contains")
-            edge(feat, f"feature:{lk['base_feature']}", "Consumes")
-            edge(feat, f"feature:{lk['expansion_feature']}", "Consumes")
-        # every edge endpoint must resolve against the nodes list:
-        # derived/lookup inputs are edged by name, and a typo'd or
-        # partially-registered input would otherwise leave a dangling
-        # edge consumers cannot resolve
-        for e in edges:
-            for endpoint in (e["from"], e["to"]):
-                if endpoint not in nodes:
-                    node(endpoint, "unresolved")
-        return {"project": doc["project"], "nodes": list(nodes.values()),
-                "edges": edges}
+        """Full project lineage graph from registry metadata
+        (:func:`feathr_spark.registry.project_lineage`)."""
+        return registry.project_lineage(self._registry().read(project_name))
 
     def get_feature_lineage(self, feature_name: str,
                             project_name: str = "default") -> dict:
-        """Upstream + downstream lineage subgraph of one feature — the
-        reference registry's ``GET /features/{feature}/lineage``
-        (sql-registry main.py:156-159, db_registry.py:150-162: BFS
-        upstream along Consumes, downstream along Produces). Upstream
-        here = forward-Consumes ∪ reverse-Produces closure (a feature's
-        producer anchor, that anchor's source, a derived feature's
-        inputs); downstream = the mirror image (features derived from
-        this one, anchors fed by this source)."""
-        g = self.get_project_lineage(project_name)
-        fid = f"feature:{feature_name}"
-        if fid not in {n["id"] for n in g["nodes"]}:
-            raise KeyError(f"feature {feature_name!r} not registered "
-                           f"in project {project_name!r}")
-        fwd: dict[str, list] = {}
-        rev: dict[str, list] = {}
-        for e in g["edges"]:
-            if e["type"] == "Contains":
-                continue
-            fwd.setdefault(e["from"], []).append(e)
-            rev.setdefault(e["to"], []).append(e)
-
-        def closure(start: str, up: bool) -> tuple[set, list]:
-            seen, out_edges, frontier = {start}, [], [start]
-            while frontier:
-                nxt = []
-                for nid in frontier:
-                    # upstream: what this node Consumes + what Produces it
-                    # downstream: what this node Produces(-to) + consumers
-                    step = []
-                    if up:
-                        step += [(e, e["to"]) for e in fwd.get(nid, [])
-                                 if e["type"] == "Consumes"]
-                        step += [(e, e["from"]) for e in rev.get(nid, [])
-                                 if e["type"] == "Produces"]
-                    else:
-                        step += [(e, e["to"]) for e in fwd.get(nid, [])
-                                 if e["type"] == "Produces"]
-                        step += [(e, e["from"]) for e in rev.get(nid, [])
-                                 if e["type"] == "Consumes"]
-                    for e, other in step:
-                        out_edges.append(e)
-                        if other not in seen:
-                            seen.add(other)
-                            nxt.append(other)
-                frontier = nxt
-            return seen, out_edges
-
-        up_nodes, up_edges = closure(fid, up=True)
-        dn_nodes, dn_edges = closure(fid, up=False)
-        keep = up_nodes | dn_nodes
-        uniq = {(e["from"], e["to"], e["type"]): e
-                for e in up_edges + dn_edges}
-        return {"feature": feature_name,
-                "nodes": [n for n in g["nodes"] if n["id"] in keep],
-                "edges": list(uniq.values())}
-
-
-# -- registry (de)serialization: metadata-only, no code hooks --------------
-
-def _swa_to_dict(f: SWAFeature) -> dict:
-    return {"kind": "swa", "name": f.name, "agg": f.agg, "metric": f.metric,
-            "width": f.window.width, "delay": f.window.delay,
-            "filter": f.filter, "group_by": f.group_by, "limit": f.limit,
-            "default": f.default, "lateral_view": f.lateral_view,
-            "lateral_view_alias": f.lateral_view_alias,
-            "lateral_view_filter": f.lateral_view_filter}
-
-
-def _feature_to_dict(f) -> dict:
-    if isinstance(f, SWAFeature):
-        return _swa_to_dict(f)
-    return {"kind": "row", "name": f.name, "expr": f.expr,
-            "default": f.default}
-
-
-def _feature_from_dict(d: dict):
-    from feathr_spark.definitions import Feature, WindowSpec
-
-    if d["kind"] == "swa":
-        return SWAFeature(
-            d["name"], d["agg"], d["metric"],
-            WindowSpec(d["width"], d["delay"]), filter=d["filter"],
-            group_by=d["group_by"], limit=d["limit"], default=d["default"],
-            lateral_view=d["lateral_view"],
-            lateral_view_alias=d["lateral_view_alias"],
-            lateral_view_filter=d["lateral_view_filter"])
-    return Feature(d["name"], d["expr"], default=d["default"])
-
-
-def _anchor_to_dict(a: Anchor) -> dict:
-    return {
-        "name": a.name,
-        "source": {"path": a.source.path, "fmt": a.source.fmt,
-                   "timestamp_col": a.source.timestamp_col,
-                   "timestamp_format": a.source.timestamp_format,
-                   "options": dict(a.source.options)},
-        "keys": list(a.keys),
-        "features": [_feature_to_dict(f) for f in a.features],
-        "lateral_view": a.lateral_view,
-        "lateral_view_alias": a.lateral_view_alias,
-        "lateral_view_filter": a.lateral_view_filter,
-        "obs_keys": list(a.obs_keys) if a.obs_keys else None,
-    }
-
-
-def _anchor_from_dict(d: dict) -> Anchor:
-    from feathr_spark.definitions import Source
-
-    s = d["source"]
-    return Anchor(
-        name=d["name"],
-        source=Source(path=s["path"], fmt=s["fmt"],
-                      timestamp_col=s["timestamp_col"],
-                      timestamp_format=s["timestamp_format"],
-                      options=dict(s["options"])),
-        keys=list(d["keys"]),
-        features=[_feature_from_dict(f) for f in d["features"]],
-        lateral_view=d["lateral_view"],
-        lateral_view_alias=d["lateral_view_alias"] or "lv",
-        lateral_view_filter=d["lateral_view_filter"],
-        obs_keys=list(d["obs_keys"]) if d["obs_keys"] else None,
-    )
-
-
-def _derived_to_dict(d: DerivedFeature) -> dict:
-    return {"name": d.name, "expr": d.expr, "inputs": list(d.inputs)}
-
-
-def _derived_from_dict(d: dict) -> DerivedFeature:
-    return DerivedFeature(d["name"], d["expr"], inputs=tuple(d["inputs"]))
-
-
-def _lookup_to_dict(lk: LookupFeature) -> dict:
-    return {"name": lk.name, "base_feature": lk.base_feature,
-            "expansion_anchor": lk.expansion_anchor,
-            "expansion_feature": lk.expansion_feature,
-            "aggregation": lk.aggregation}
-
-
-def _lookup_from_dict(d: dict) -> LookupFeature:
-    return LookupFeature(d["name"], d["base_feature"],
-                         d["expansion_anchor"], d["expansion_feature"],
-                         aggregation=d["aggregation"])
+        """Upstream + downstream lineage subgraph of one feature
+        (:func:`feathr_spark.registry.feature_lineage`)."""
+        return registry.feature_lineage(
+            self._registry().read(project_name), feature_name)

@@ -157,6 +157,12 @@ def write_text_atomic(path: str, text: str,
         lp, ltmp = _local_part(path), _local_part(tmp)
         with open(ltmp, "w") as fh:
             fh.write(text)
+        # drop a Hadoop local-FS checksum sibling: it would no longer
+        # match, and Hadoop reads would fail with ChecksumException
+        head, name = os.path.split(lp)
+        crc = os.path.join(head, f".{name}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
         os.replace(ltmp, lp)  # atomic on POSIX
         return
     fs, p = _jfs(spark, path)

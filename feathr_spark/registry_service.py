@@ -11,8 +11,7 @@ the sandbox. Endpoints mirror the reference routes:
   (`main.py:77-79`)
 - ``GET  /projects/{p}``                   — project graph with typed
   nodes + edges (`main.py:85-87` → ``registry.get_project``,
-  `db_registry.py:164-183`); served from
-  ``FeathrClient.get_project_lineage``'s payload
+  `db_registry.py:164-183`); ``registry.project_lineage``
 - ``GET  /projects/{p}/datasources``       — the project's source nodes
   (`main.py:108-114`)
 - ``GET  /projects/{p}/features[?keyword=k&page=i&limit=n]`` — feature
@@ -20,8 +19,7 @@ the sandbox. Endpoints mirror the reference routes:
 - ``GET  /features/{name}``                — one feature's definition
   (`main.py:148-154`; qualified or bare name)
 - ``GET  /features/{name}/lineage``        — upstream+downstream
-  closure (`main.py:156-159`) via
-  ``FeathrClient.get_feature_lineage``
+  closure (`main.py:156-159`); ``registry.feature_lineage``
 - ``GET  /dependent/{name}``               — downstream dependents of a
   feature (`main.py:89-93`): the features whose lineage closure
   consumes it (derived/lookup chains)
@@ -34,160 +32,33 @@ the sandbox. Endpoints mirror the reference routes:
 Errors map to the reference's handlers (`main.py:63-75`): unknown
 entity → 404 with ``{"detail": ...}``, bad payload → 400.
 
-Scale/deployment note: the service is a thin stateless reader over the
-registry directory — run N replicas behind any HTTP load balancer; the
-write path reuses the client's atomic tmp+rename commit, so readers
-never observe a torn project document.
+Storage, document format, lineage and dependents all come from
+:mod:`feathr_spark.registry`; this module only routes HTTP.
+
+Deployment: run ONE writer process. Its mutations (POST, DELETE) are
+serialized in-process, so concurrent requests never lose an update;
+there is no cross-process lock, so any extra replicas behind a load
+balancer must be read-only. Writes are tmp+rename, so readers never
+observe a torn project document.
 """
 
 from __future__ import annotations
 
 import json
-import os
-import re
-import tempfile
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-from typing import Optional
 from urllib.parse import parse_qs, urlparse
 
-
-class _Registry:
-    """Directory-backed project store (the client's registry layout:
-    one ``{project}.json`` per project)."""
-
-    def __init__(self, registry_dir: str):
-        self.dir = registry_dir
-        os.makedirs(registry_dir, exist_ok=True)
-
-    def projects(self) -> list:
-        return sorted(f[:-5] for f in os.listdir(self.dir)
-                      if f.endswith(".json"))
-
-    def read(self, project: str) -> dict:
-        path = os.path.join(self.dir, f"{project}.json")
-        if not os.path.exists(path):
-            raise KeyError(f"project {project!r} not found")
-        with open(path) as fh:
-            return json.load(fh)
-
-    def write(self, project: str, doc: dict) -> None:
-        if not re.fullmatch(r"[\w.\-]+", project):
-            raise ValueError(f"invalid project name {project!r}")
-        path = os.path.join(self.dir, f"{project}.json")
-        fd, tmp = tempfile.mkstemp(dir=self.dir)
-        with os.fdopen(fd, "w") as fh:
-            json.dump(doc, fh, indent=1, sort_keys=True)
-        os.replace(tmp, path)  # readers never see a torn document
-
-    # ---- the same views the client computes ----------------------------
-
-    def _client_for(self, project: str):
-        # reuse FeathrClient's graph/lineage logic over this directory
-        from feathr_spark.client import FeathrClient
-        c = FeathrClient.__new__(FeathrClient)
-        c._registry_dir = self.dir
-        return c
-
-    def project_graph(self, project: str) -> dict:
-        return self._client_for(project).get_project_lineage(project)
-
-    def features(self, project: str, keyword: Optional[str] = None,
-                 page: Optional[int] = None,
-                 limit: Optional[int] = None) -> list:
-        doc = self.read(project)
-        feats = [dict(f, anchor=a["name"], kind="anchor_feature")
-                 for a in doc.get("anchors", []) for f in a["features"]]
-        feats += [dict(d, kind="derived") for d in doc.get("derived", [])]
-        feats += [dict(lk, kind="lookup") for lk in doc.get("lookups", [])]
-        if keyword:
-            kw = keyword.lower()
-            feats = [f for f in feats if kw in f["name"].lower()]
-        if page is not None and limit is not None:
-            feats = feats[(page - 1) * limit: page * limit]
-        return feats
-
-    def datasources(self, project: str) -> list:
-        g = self.project_graph(project)
-        return [n for n in g["nodes"] if n["type"] == "source"]
-
-    def _find(self, feature: str) -> tuple:
-        """(project, feature dict) for a qualified ``project/name`` or a
-        bare name searched across all projects."""
-        if "/" in feature:
-            project, name = feature.split("/", 1)
-            cands = [(project, f) for f in self.features(project)
-                     if f["name"] == name]
-        else:
-            cands = [(p, f) for p in self.projects()
-                     for f in self.features(p) if f["name"] == feature]
-        if not cands:
-            raise KeyError(f"feature {feature!r} not found")
-        return cands[0]
-
-    def feature(self, name: str) -> dict:
-        project, f = self._find(name)
-        return dict(f, project=project)
-
-    def feature_lineage(self, name: str) -> dict:
-        project, f = self._find(name)
-        return self._client_for(project).get_feature_lineage(
-            f["name"], project_name=project)
-
-    def dependents(self, name: str) -> list:
-        """Features downstream of ``name`` (consume it directly or
-        transitively through derived/lookup inputs) — the reference's
-        get_dependent_entities payload reduced to feature nodes."""
-        project, f = self._find(name)
-        doc = self.read(project)
-        inputs = {d["name"]: set(d.get("inputs") or []) for d in
-                  (doc.get("derived", []) + doc.get("lookups", []))}
-        for lk in doc.get("lookups", []):
-            inputs.setdefault(lk["name"], set()).update(
-                x for x in (lk.get("base"), lk.get("expansion")) if x)
-        down, frontier = set(), {f["name"]}
-        changed = True
-        while changed:
-            changed = False
-            for dname, ins in inputs.items():
-                if dname not in down and ins & (frontier | down):
-                    down.add(dname)
-                    changed = True
-        return [dict(x, project=project) for x in self.features(project)
-                if x["name"] in down]
-
-    def delete_entity(self, name: str) -> dict:
-        """Delete a project (by bare project name) or a feature (by
-        qualified/bare feature name). A feature with dependents raises
-        PreconditionError (-> 412, reference main.py:95-107)."""
-        if "/" not in name and name in self.projects():
-            os.remove(os.path.join(self.dir, f"{name}.json"))
-            return {"deleted": name}
-        project, f = self._find(name)
-        deps = self.dependents(name)
-        if deps:
-            raise PreconditionError(
-                f"entity {name!r} cannot be deleted as it has "
-                f"downstream/dependent entities: "
-                f"{sorted(d['name'] for d in deps)}")
-        doc = self.read(project)
-        doc["anchors"] = [dict(a, features=[x for x in a["features"]
-                                            if x["name"] != f["name"]])
-                          for a in doc.get("anchors", [])]
-        doc["derived"] = [d for d in doc.get("derived", [])
-                          if d["name"] != f["name"]]
-        doc["lookups"] = [d for d in doc.get("lookups", [])
-                          if d["name"] != f["name"]]
-        self.write(project, doc)
-        return {"deleted": f["name"], "project": project}
-
-
-class PreconditionError(RuntimeError):
-    """Deletion blocked by dependents (HTTP 412, main.py:100-106)."""
+from feathr_spark.registry import (
+    PreconditionError,
+    Registry,
+    feature_lineage,
+    project_lineage,
+)
 
 
 class _Handler(BaseHTTPRequestHandler):
-    registry: _Registry  # set by serve_registry
+    registry: Registry  # set by serve_registry
 
     def log_message(self, *args) -> None:  # quiet test runs
         pass
@@ -209,10 +80,12 @@ class _Handler(BaseHTTPRequestHandler):
             if parts == ["projects"]:
                 return self._send(200, r.projects())
             if len(parts) == 2 and parts[0] == "projects":
-                return self._send(200, r.project_graph(parts[1]))
+                return self._send(200, project_lineage(r.read(parts[1])))
             if len(parts) == 3 and parts[0] == "projects" \
                     and parts[2] == "datasources":
-                return self._send(200, r.datasources(parts[1]))
+                g = project_lineage(r.read(parts[1]))
+                return self._send(200, [n for n in g["nodes"]
+                                        if n["type"] == "source"])
             if len(parts) == 3 and parts[0] == "projects" \
                     and parts[2] == "features":
                 page = int(q["page"]) if "page" in q else None
@@ -226,9 +99,11 @@ class _Handler(BaseHTTPRequestHandler):
                 # path segments — rejoin everything before a trailing
                 # "lineage"
                 if parts[-1] == "lineage" and len(parts) >= 3:
-                    return self._send(
-                        200, r.feature_lineage("/".join(parts[1:-1])))
-                return self._send(200, r.feature("/".join(parts[1:])))
+                    project, f = r.find("/".join(parts[1:-1]))
+                    return self._send(200, feature_lineage(
+                        r.read(project), f["name"]))
+                project, f = r.find("/".join(parts[1:]))
+                return self._send(200, dict(f, project=project))
             return self._send(404, {"detail": f"no route {u.path}"})
         except KeyError as e:  # main.py:63-68 key_error_handler -> 404
             return self._send(404, {"detail": str(e)})
@@ -246,6 +121,8 @@ class _Handler(BaseHTTPRequestHandler):
             return self._send(412, {"detail": str(e)})
         except KeyError as e:
             return self._send(404, {"detail": str(e)})
+        except ValueError as e:
+            return self._send(400, {"detail": str(e)})
 
     def do_POST(self) -> None:  # noqa: N802
         u = urlparse(self.path)
@@ -270,7 +147,7 @@ def serve_registry(registry_dir: str, host: str = "127.0.0.1",
     server (``server.server_address`` has the bound port, pass
     ``port=0`` for an ephemeral one; ``server.shutdown()`` stops it)."""
     handler = type("BoundHandler", (_Handler,),
-                   {"registry": _Registry(registry_dir)})
+                   {"registry": Registry(registry_dir)})
     srv = ThreadingHTTPServer((host, port), handler)
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()

@@ -61,8 +61,10 @@ def compact_parquet(
     - ``sort_by``: range-partition + sort within files on these columns
       (clusters row groups for min/max skipping — e.g. ``(source, ts)``
       so time-range scans prune files); with ``partition_by`` the range
-      leads with the partition columns. Without it, a plain coalesce-
-      style repartition preserves existing order per file.
+      leads with the partition columns, and when every partition value
+      fits one file the values are hash-placed instead (exactly one
+      sorted file per directory). Without it, a plain coalesce-style
+      repartition preserves existing order per file.
     - ``partition_by``: re-emit these as directory partitions (pass the
       existing partition columns to keep the layout). The shuffle then
       hash-partitions on the partition columns (plus a spreader when
@@ -105,27 +107,23 @@ def compact_parquet(
     t0 = time.monotonic()
     n_files = max(1, round(before["bytes"] / (target_file_mb * 2**20)))
     df: DataFrame = spark.read.parquet(path)
-    if sort_by:
-        # lead the range with the partition columns: each task then holds
-        # a contiguous run of partition values and writes into few
-        # directories (ranging on sort_by alone sends every partition
-        # value to every task — n_files x #values files)
-        keys = list(partition_by) + [c for c in sort_by if c not in partition_by]
-        out = df.repartitionByRange(n_files, *keys).sortWithinPartitions(*keys)
-    elif partition_by:
+    keys = list(partition_by) + [c for c in sort_by if c not in partition_by]
+    if partition_by:
         # hash-partition on the directory-partition columns so each task
         # writes into few directories (a plain repartition(n) lets every
         # task emit one file per partition value — up to n x #values tiny
-        # files). When n_files exceeds the value count, a spreader splits
-        # each value across ~n_files/#values tasks so large partitions
-        # still hit the size target. The distinct count is one
-        # column-pruned scan — cheap for a maintenance op.
+        # files). When n_files exceeds the value count, each value is
+        # split across ~n_files/#values tasks (by sort-key range, else a
+        # hash spreader) so large partitions still hit the size target.
+        # The distinct count is one column-pruned scan.
         from pyspark.sql import functions as F
         pcols = list(partition_by)
         n_vals = df.select(*pcols).distinct().count()
         files_per_val = max(1, round(n_files / max(n_vals, 1)))
         if files_per_val == 1:
             out = df.repartition(max(n_vals, 1), *pcols)
+        elif sort_by:  # partition columns lead: few dirs per task
+            out = df.repartitionByRange(n_vals * files_per_val, *keys)
         else:
             # pmod, not abs(hash) % n: abs(Long.MIN_VALUE) throws under
             # ANSI mode and % keeps the sign
@@ -134,8 +132,12 @@ def compact_parquet(
             out = (df.withColumn("__spread", spread)
                      .repartition(n_vals * files_per_val, *pcols, "__spread")
                      .drop("__spread"))
+    elif sort_by:
+        out = df.repartitionByRange(n_files, *keys)
     else:
         out = df.repartition(n_files)
+    if sort_by:
+        out = out.sortWithinPartitions(*keys)
     fsio.delete(tmp, recursive=True, spark=spark)
     writer = out.write.mode("overwrite")
     if compression:

@@ -10,8 +10,11 @@ and the feature metadata becomes browsable over HTTP.
     python jobs/registry_server.py --dir /path/to/registry --port 8085
 
 Prints one JSON line with the bound address, then serves until
-interrupted. No Spark session is needed — the service is a stateless
-reader over the JSON project documents.
+interrupted. No Spark session is needed: without one, the registry's
+file I/O takes fsio's POSIX fallback, so ``--dir`` must be a local path
+or a ``file://`` URI. Run ONE such process per registry directory: its
+mutations (POST, DELETE) are serialized in-process, but nothing locks
+across processes, so any extra replicas must be read-only.
 """
 from __future__ import annotations
 

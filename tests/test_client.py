@@ -301,3 +301,17 @@ def test_lineage_unresolved_inputs_get_nodes(spark, sf_dir, tmp_path):
     ids = {n["id"] for n in g["nodes"]}
     for e in g["edges"]:
         assert e["from"] in ids and e["to"] in ids
+
+
+def test_registry_rejects_project_names_outside_registry_dir(spark, sf_dir,
+                                                             tmp_path):
+    """A project name is one path segment: '../x' must raise on both the
+    write and the read path and leave nothing outside registry_dir."""
+    reg = tmp_path / "registry"
+    c = FeathrClient(spark, registry_dir=str(reg))
+    c.build_features(anchor_list=[_anchor(sf_dir)])
+    with pytest.raises(ValueError, match="invalid project name"):
+        c.register_features("../x")
+    with pytest.raises(ValueError, match="invalid project name"):
+        c.get_features_from_registry("../x")
+    assert not list(tmp_path.rglob("*x.json*"))

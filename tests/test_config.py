@@ -24,12 +24,153 @@ from feathr_spark.definitions import Feature, LookupFeature, SWAFeature
 
 REF = "/root/reference"
 
+# Hand-written stand-ins for the reference test configs the loader tests
+# read (SURVEY.md:683-687 — HOCON compatibility, checked by this module;
+# SURVEY.md:249-250 — the reference's config loaders). Each holds the
+# fields its test asserts, in the reference's grammar; none is copied
+# from the reference tree, which this checkout does not carry.
 
-def _ref(path):
-    p = os.path.join(REF, path)
-    if not os.path.exists(p):
-        pytest.skip(f"reference fixture missing: {path}")
-    return open(p).read()
+# feathr-compute/src/test/resources/swa.conf
+SWA_CONF = """
+sources: {
+  swaSource: {
+    location: { path: "slidingWindowAgg/daily" }
+    timePartitionPattern: "yyyy/MM/dd"
+    timeWindowParameters: {
+      timestampColumn: "timestamp"
+      timestampColumnFormat: "yyyy-MM-dd"
+    }
+  }
+}
+anchors: {
+  swaAnchor: {
+    source: "swaSource"
+    key: [x]
+    features: {
+      memberEmbeddingLatest: {
+        def: "embedding"
+        aggregation: LATEST
+        window: 3d
+      }
+    }
+  }
+}
+"""
+
+# feathr-compute/src/test/resources/seqJoinFeature.conf
+SEQ_JOIN_FEATURE_CONF = """
+anchors: {
+  industry-local: {
+    source: "seqJoin/industry.avro.json"
+    key.sqlExpr: [industryId]
+    features: {
+      MemberIndustryName.def.sqlExpr: "industryName"
+    }
+  }
+  waterloo-member-geolocation-local: {
+    source: "seqJoin/member.avro.json"
+    key.sqlExpr: "concat('',x)"
+    features: {
+      MemberIndustryId: {
+        def.sqlExpr: "profileIndustryId"
+        default: 0
+      }
+    }
+  }
+}
+derivations: {
+  seq_join_industry_names: {
+    key: [x]
+    join: {
+      base: { key: [x], feature: MemberIndustryId }
+      expansion: { key: [industryId], feature: MemberIndustryName }
+    }
+    aggregation: UNION
+  }
+}
+"""
+
+# feathr-impl/src/test/generated/config/feathr.conf
+FEATHR_CONF = """
+sources: {
+  ptSource: { type: "PASSTHROUGH" }
+}
+anchors: {
+  anchor1: {
+    source: "anchor1-source.csv"
+    key: "mId"
+    features: {
+      aa: "a"
+      bb: { def: "b", default: 3 }
+    }
+  }
+  anchor2: {
+    source: "anchor2-source.csv"
+    extractor: "com.linkedin.feathr.offline.anchored.anchorExtractor.SimpleConfigurableAnchorExtractor"
+    key: "mId"
+    features: [cc, dd]
+  }
+}
+derivations: {
+  multiply_a_b: "toNumeric(aa) * toNumeric(bb)"
+  categorical_b: {
+    key: [foo]
+    inputs: { foo_b: { key: foo, feature: bb } }
+    definition: "foo_b"
+  }
+}
+"""
+
+# feathr-impl/src/test/resources/testAnchorsAsIs/joinconfig.conf
+JOINCONFIG_CONF = """
+settings: {
+  joinTimeSettings: {
+    timestampColumn: { def: "creationTime", format: "epoch" }
+  }
+}
+features: [
+  { key: [x], featureList: ["f1", "f2", "f3", "f4"] }
+  { key: [y], featureList: ["f2"] }
+]
+"""
+
+# feathr-impl/src/test/resources/testAnchorsAsIs/featureGenConfig.conf
+FEATURE_GEN_CONFIG_CONF = """
+operational: {
+  name: generateWithDefaultParams
+  endTime: "2019-09-24"
+  endTimeFormat: "yyyy-MM-dd"
+  resolution: DAILY
+  output: []
+}
+features: [f1]
+"""
+
+# feathr-config/src/test/resources/dir2/features-1-ei.conf and the prod
+# config it includes from the classpath (resolved against the
+# test-resources root)
+FEATURES_1_EI_CONF = """
+include classpath("dir1/features-1-prod.conf")
+sources.MemberPreferenceData.d2Uri: "d2://EI_ESPRESSO_MT2"
+"""
+FEATURES_1_PROD_CONF = """
+sources: {
+  MemberPreferenceData: {
+    type: ESPRESSO
+    database: "CareersPreferenceDB"
+    table: "MemberPreference"
+    d2Uri: "d2://ESPRESSO_MT2"
+    keyExpr: "key[0]"
+  }
+}
+anchors: {
+  member-preferences: {
+    source: MemberPreferenceData
+    key: "x"
+    features: { jobPreferenceCount: "toNumeric(count)" }
+  }
+}
+"""
 
 
 # ---------------------------------------------------------------------------
@@ -109,7 +250,7 @@ def test_parse_duration():
 def test_load_reference_swa_conf():
     # feathr-compute/src/test/resources/swa.conf: time-partitioned SWA
     # source + LATEST window anchor
-    m = load_feature_def(_ref("feathr-compute/src/test/resources/swa.conf"))
+    m = load_feature_def(SWA_CONF)
     src = m.sources["swaSource"]
     assert src.timestamp_col == "timestamp"
     assert src.timestamp_format == "yyyy-MM-dd"
@@ -125,8 +266,7 @@ def test_load_reference_swa_conf():
 def test_load_reference_seqjoin_conf():
     # feathr-compute/src/test/resources/seqJoinFeature.conf: key.sqlExpr
     # dotted keys, def.sqlExpr features, sequential-join derivation
-    m = load_feature_def(
-        _ref("feathr-compute/src/test/resources/seqJoinFeature.conf"))
+    m = load_feature_def(SEQ_JOIN_FEATURE_CONF)
     by_name = {a.name: a for a in m.anchors}
     assert by_name["industry-local"].keys == ["industryId"]
     assert by_name["waterloo-member-geolocation-local"].keys == ["concat('',x)"]
@@ -142,9 +282,7 @@ def test_load_reference_feathr_conf_lenient():
     # feathr-impl/src/test/generated/config/feathr.conf: passthrough
     # source, defaults, MVEL derivations, a JVM-extractor anchor
     # (skipped in lenient mode)
-    m = load_feature_def(
-        _ref("feathr-impl/src/test/generated/config/feathr.conf"),
-        strict=False)
+    m = load_feature_def(FEATHR_CONF, strict=False)
     (a1,) = [a for a in m.anchors if a.name == "anchor1"]
     feats = {f.name: f for f in a1.features}
     assert isinstance(feats["aa"], Feature) and feats["aa"].expr == "a"
@@ -156,13 +294,11 @@ def test_load_reference_feathr_conf_lenient():
     assert any("anchor2" in name for name, _ in m.skipped)
     # strict mode refuses the JVM extractor instead of silently skipping
     with pytest.raises(ValueError, match="extractor"):
-        load_feature_def(
-            _ref("feathr-impl/src/test/generated/config/feathr.conf"))
+        load_feature_def(FEATHR_CONF)
 
 
 def test_load_reference_join_config():
-    jc = load_join_config(
-        _ref("feathr-impl/src/test/resources/testAnchorsAsIs/joinconfig.conf"))
+    jc = load_join_config(JOINCONFIG_CONF)
     assert jc.timestamp_col == "creationTime"
     assert jc.timestamp_format == "epoch"
     assert jc.requests[0].keys == ["x"]
@@ -200,8 +336,7 @@ def test_load_reference_swa_integ_join_config():
 
 
 def test_load_reference_gen_config():
-    gc = load_gen_config(_ref(
-        "feathr-impl/src/test/resources/testAnchorsAsIs/featureGenConfig.conf"))
+    gc = load_gen_config(FEATURE_GEN_CONFIG_CONF)
     assert gc.name == "generateWithDefaultParams"
     assert gc.resolution == "DAILY"
     assert gc.features == ["f1"]
@@ -433,16 +568,18 @@ def test_hocon_include_optional_and_required(tmp_path):
     assert loads("include: 3") == {"include": 3}
 
 
-def test_hocon_include_reference_classpath_fixture():
+def test_hocon_include_reference_classpath_fixture(tmp_path):
     """feathr-config's EI override fixture: `include classpath(...)` of the
     prod config, then path-expression overrides on top."""
     from feathr_spark.config.hocon import load_file
 
-    p = os.path.join(REF, "feathr-config/src/test/resources/dir2/features-1-ei.conf")
-    if not os.path.exists(p):
-        pytest.skip("reference fixture missing")
-    d = load_file(p, classpath_roots=(
-        os.path.join(REF, "feathr-config/src/test/resources"),))
+    resources = tmp_path / "resources"
+    for rel, text in (("dir1/features-1-prod.conf", FEATURES_1_PROD_CONF),
+                      ("dir2/features-1-ei.conf", FEATURES_1_EI_CONF)):
+        (resources / rel).parent.mkdir(parents=True, exist_ok=True)
+        (resources / rel).write_text(text)
+    p = str(resources / "dir2" / "features-1-ei.conf")
+    d = load_file(p, classpath_roots=(str(resources),))
     # keys from the included prod config ...
     assert "anchors" in d and "MemberPreferenceData" in d["sources"]
     # ... with the EI override applied over them

@@ -115,3 +115,19 @@ def test_concurrent_writers_hadoop_path(spark, tmp_path):
         t.join()
     assert not errs
     assert fsio.read_text(target, spark) in docs
+
+
+def test_posix_rewrite_of_hadoop_written_file_reads_back(spark, tmp_path,
+                                                         monkeypatch):
+    """A session-less (POSIX) rewrite of a file Hadoop wrote must not
+    leave the stale checksum sibling behind: Hadoop's local FS would
+    refuse the new content with a ChecksumException."""
+    target = "file://" + str(tmp_path / "p.json")
+    fsio.write_text_atomic(target, '{"v": 1}', spark)
+    assert (tmp_path / ".p.json.crc").exists()
+    with monkeypatch.context() as m:
+        m.setattr(fsio, "_active", lambda: None)
+        fsio.write_text_atomic(target, '{"v": 22, "longer": true}')
+    assert fsio.read_text(target, spark) == '{"v": 22, "longer": true}'
+    fsio.write_text_atomic(target, '{"v": 3}', spark)  # and back again
+    assert fsio.read_text(target, spark) == '{"v": 3}'
