@@ -75,7 +75,7 @@ def job(cpus: int, sf: float, warmup: int = 1, iters: int = 2,
         # is a fixed serial cost per iteration with nothing left to fix
         extra["spark.sql.adaptive.enabled"] = "false"
     evlog = os.environ.get("FEATHR_BENCH_EVLOG")
-    if evlog:  # stage-level diagnosis: analyze with BENCH/evlog_stages.py
+    if evlog:  # stage-level diagnosis: one Spark event log per core count
         os.makedirs(f"{evlog}/{cpus}", exist_ok=True)
         extra.update({"spark.eventLog.enabled": "true",
                       "spark.eventLog.dir": f"{evlog}/{cpus}"})
@@ -589,8 +589,8 @@ def main() -> None:
         "all CPU in kernel time — on a real cluster: use local NVMe). See",
         "feathr_spark/session.py.",
         "",
-        "Hardware context (same-day probes, BENCH/cpu_probe.py and",
-        "BENCH/membw_probe.py): this single time-shared box delivers pure-CPU",
+        "Hardware context (same-day pure-CPU and memory-bandwidth probes):",
+        "this single time-shared box delivers pure-CPU",
         "4x-process scaling of only 0.89-0.93 and streaming-memory-bandwidth",
         "4x scaling of ~0.75 — every 4N step on a real cluster adds whole",
         "machines (cores + memory channels + NICs + disks), which one box",

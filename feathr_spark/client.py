@@ -19,7 +19,9 @@ structure ports line-for-line:
 
 Reference users with existing HOCON configs load them through
 ``feathr_spark.config`` instead (``load_feature_def`` +
-``run_join_config`` — the two surfaces share the planner underneath).
+``run_join_config``). The two surfaces share one resolver
+(:func:`~feathr_spark.plans.planner.resolve_requests`: dependency
+closure, key-binding clones, renames) and one ``join_features`` plan.
 
 Scale notes: ``get_offline_features`` is one
 :func:`~feathr_spark.plans.planner.join_features` plan (per-stage
@@ -160,17 +162,19 @@ class FeathrClient:
         observation (reference client.py:497-616). ``observation`` is a
         DataFrame or a path (the reference's observation_path).
         Per-query ``key`` binds those features' anchors to different
-        observation key expressions (the reference's key tags). With
-        ``output_path`` the result is also written as parquet.
+        observation key expressions (the reference's key tags); a feature
+        requested under a second key binding comes back as
+        ``<name>__<keytag>``, as in a HOCON join config (both resolve
+        through :func:`~feathr_spark.plans.planner.resolve_requests`).
+        With ``output_path`` the result is also written as parquet.
         ``output_format="fds"`` re-encodes every requested feature column
         into Quince-FDS tensor format before returning/writing (the
         reference always materializes offline joins as FDS —
         SlidingWindowFeatureUtils.convertSWADFToFDS; here it is opt-in
         and a pure projection, see functions/fds.py)."""
         self._require_built()
-        from dataclasses import replace
-
-        from feathr_spark.plans.planner import join_features
+        from feathr_spark.config.loader import FeatureRequest
+        from feathr_spark.plans.planner import join_features, resolve_requests
 
         if isinstance(observation, str):
             from feathr_spark.sources.batch import read_batch
@@ -179,67 +183,14 @@ class FeathrClient:
 
         queries = ([feature_query] if isinstance(feature_query, FeatureQuery)
                    else list(feature_query))
-        requested: list = []
-        key_of: dict = {}
-        for q in queries:
-            for name in q.feature_list:
-                if name not in self._feature_owner:
-                    raise KeyError(f"unknown feature {name!r} — not in "
-                                   "build_features context")
-                requested.append(name)
-                if q.key is not None:
-                    key_of[name] = list(q.key)
-        if len(set(requested)) != len(requested):
-            raise RuntimeError("a feature was requested by two "
-                               "FeatureQuery lists; request it once")
-
-        # needed-feature closure: requested + declared derived inputs +
-        # lookup base features (anchors are pruned to this set, so a
-        # requested derived/lookup still finds its inputs joined)
-        needed = set(requested)
-        changed = True
-        while changed:
-            changed = False
-            for d in self.derived_feature_list:
-                if d.name in needed:
-                    for i in d.inputs:
-                        if i not in needed:
-                            needed.add(i)
-                            changed = True
-            for lk in self.lookup_feature_list:
-                if lk.name in needed and lk.base_feature not in needed:
-                    needed.add(lk.base_feature)
-                    changed = True
-
-        # clone anchors per observation-key binding (run_join_config does
-        # the same for HOCON key tags)
-        anchors: list = []
-        for a in self.anchor_list:
-            wanted = [f for f in a.features if f.name in needed]
-            none_key = [f for f in wanted if f.name not in key_of]
-            by_key: dict = {}
-            for f in wanted:
-                if f.name in key_of:
-                    by_key.setdefault(tuple(key_of[f.name]), []).append(f)
-            if none_key:
-                anchors.append(replace(a, features=none_key))
-            for kt, fs in by_key.items():
-                anchors.append(replace(a, features=fs, obs_keys=list(kt),
-                                       name=f"{a.name}__{'_'.join(kt)}"))
-        # lookup expansion anchors ride along under their ORIGINAL name
-        # (the planner resolves them by exact name at expansion time)
-        for lk in self.lookup_feature_list:
-            if lk.name in needed and not any(
-                    a.name == lk.expansion_anchor for a in anchors):
-                anchors.append(next(
-                    a for a in self.anchor_list
-                    if a.name == lk.expansion_anchor))
-        # full derived/lookup context goes to the planner; ``requested``
-        # prunes the output (a requested derived still pulls its inputs)
+        anchors, derived, lookups, requested = resolve_requests(
+            self.anchor_list, self.derived_feature_list,
+            self.lookup_feature_list,
+            [FeatureRequest(keys=None if q.key is None else list(q.key),
+                            features=list(q.feature_list)) for q in queries])
         out = join_features(
             self.spark, observation, observation_settings, anchors,
-            derived=self.derived_feature_list,
-            lookups=self.lookup_feature_list,
+            derived=derived, lookups=lookups,
             requested=requested, source_cache=source_cache,
             checkpoint_every=checkpoint_every,
         )

@@ -31,7 +31,7 @@ configs unchanged. Semantics mirrored from FeathrConfigLoader.scala:
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Optional
 
 from feathr_spark.config.hocon import loads
@@ -282,22 +282,16 @@ def _load_derivation(name: str, node, model: FeatureDefModel,
         ))
         return
     if "sqlExpr" in node:
-        inputs = tuple(_IDENT.findall(str(node["sqlExpr"])))
-        model.derived.append(DerivedFeature(name, str(node["sqlExpr"]),
-                                            inputs=inputs))
+        model.derived.append(DerivedFeature(name, str(node["sqlExpr"])))
         return
     if "definition" in node:
         d = node["definition"]
         expr = (str(d["sqlExpr"]) if isinstance(d, dict)
                 else mvel_to_sql(str(d)))
-        aliases, input_feats = {}, []
         ins = node.get("inputs") or {}
-        if isinstance(ins, dict):
-            for alias, ref in ins.items():
-                aliases[alias] = str(ref["feature"])
-                input_feats.append(str(ref["feature"]))
-        model.derived.append(DerivedFeature(
-            name, _sub_aliases(expr, aliases), inputs=tuple(input_feats)))
+        aliases = ({alias: str(ref["feature"]) for alias, ref in ins.items()}
+                   if isinstance(ins, dict) else {})
+        model.derived.append(DerivedFeature(name, _sub_aliases(expr, aliases)))
         return
     if "class" in node:
         if strict:
@@ -332,6 +326,13 @@ def load_feature_def(text: str, *, source_overrides: Optional[dict] = None,
             model.anchors.append(a)
     for name, node in (doc.get("derivations") or {}).items():
         _load_derivation(name, node, model, strict)
+    # a derivation's inputs are the identifiers in its SQL that name
+    # features of this definition (every derivation form is SQL by now)
+    names = set(model.feature_names())
+    model.derived = [
+        replace(d, inputs=tuple(dict.fromkeys(
+            i for i in _IDENT.findall(d.expr) if i in names)))
+        for d in model.derived]
     return model
 
 
@@ -407,18 +408,18 @@ def run_join_config(spark, observation, fdef: FeatureDefModel,
                     join_cfg: JoinConfigModel, *, source_cache=None,
                     now_epoch=None):
     """Execute a reference join config against ``observation`` —
-    the HOCON-driven equivalent of plans.planner.join_features.
+    the HOCON-driven equivalent of ``FeathrClient.get_offline_features``.
 
-    Each feature group joins with its own observation keys (the
-    reference's key tags, MultiStageJoinPlanner.scala:319-335): anchors
-    are cloned per group with ``obs_keys`` bound to the group's key
-    expressions. A feature requested by two groups keeps the first
-    group's column name and gets ``<name>__<keytag>`` for later groups.
+    After the absolute-time-range filter, the feature groups go through
+    the same resolver as the client
+    (:func:`~feathr_spark.plans.planner.resolve_requests`) and run as one
+    ``join_features`` plan. Each group joins with its own observation keys
+    (the reference's key tags, MultiStageJoinPlanner.scala:319-335); a
+    feature requested by two groups keeps the first group's column name
+    and gets ``<name>__<keytag>`` for later groups.
     """
-    from dataclasses import replace
-
     from feathr_spark.functions.timestamps import to_epoch_micros
-    from feathr_spark.plans.planner import join_features
+    from feathr_spark.plans.planner import join_features, resolve_requests
 
     from pyspark.sql import functions as F
 
@@ -438,75 +439,19 @@ def run_join_config(spark, observation, fdef: FeatureDefModel,
         else:
             out = out.where((ts >= lo) & (ts <= hi))
 
-    seen: set = set()
-    requested: list = []
-    for gi, req in enumerate(join_cfg.requests):
-        anchors = []
-        rename: dict = {}
-        want = set(req.features)
-        for a in fdef.anchors:
-            feats = [f for f in a.features if f.name in want]
-            if not feats:
-                continue
-            if req.override_time_delay is not None:
-                feats = [replace(f, window=WindowSpec(
-                             f.window.width, req.override_time_delay))
-                         if isinstance(f, SWAFeature) else f for f in feats]
-            renamed = []
-            for f in feats:
-                if f.name in seen:
-                    new = f"{f.name}__{'_'.join(req.keys)}"
-                    rename[f.name] = new
-                    renamed.append(replace(f, name=new))
-                else:
-                    renamed.append(f)
-            anchors.append(replace(
-                a, name=f"{a.name}__g{gi}", features=renamed,
-                obs_keys=list(req.keys)))
-        derived = [d for d in fdef.derived if d.name in want]
-        lookups = [lk for lk in fdef.lookups if lk.name in want]
-        # lookup base/expansion anchors must ride along even if their
-        # features weren't requested directly
-        for lk in lookups:
-            if not any(a.name.startswith(lk.expansion_anchor + "__") or
-                       a.name == lk.expansion_anchor for a in anchors):
-                base = next(a for a in fdef.anchors
-                            if a.name == lk.expansion_anchor)
-                anchors.append(base)
-            base_anchor = fdef.anchor_of_feature(lk.base_feature)
-            if base_anchor and not any(
-                    a.name == f"{base_anchor.name}__g{gi}" and
-                    any(f.name == lk.base_feature for f in a.features)
-                    for a in anchors):
-                anchors.append(replace(
-                    base_anchor, name=f"{base_anchor.name}__g{gi}b",
-                    features=[f for f in base_anchor.features
-                              if f.name == lk.base_feature],
-                    obs_keys=list(req.keys)))
-        if not (anchors or derived or lookups):
-            missing = want - set(fdef.feature_names())
-            raise ValueError(f"join config requests unknown features: "
-                             f"{sorted(missing) or sorted(want)}")
-        settings = ObservationSettings(
-            keys=list(req.keys),
-            timestamp_col=join_cfg.timestamp_col or "",
-            timestamp_format=join_cfg.timestamp_format,
-            simulate_time_delay=join_cfg.simulate_time_delay,
-            use_latest_feature_data=join_cfg.use_latest_feature_data,
-            now_epoch=now_epoch,
-        )
-        group_requested = [rename.get(f, f) for f in req.features]
-        out = join_features(
-            spark, out, settings, anchors,
-            derived=derived, lookups=lookups,
-            requested=list(out.columns) + group_requested,
-            source_cache=source_cache,
-        )
-        seen |= set(req.features)
-        requested += group_requested
-    keep = list(observation.columns) + [c for c in requested
-                                        if c in out.columns]
-    return out.select(*dict.fromkeys(keep))
+    anchors, derived, lookups, requested = resolve_requests(
+        fdef.anchors, fdef.derived, fdef.lookups, join_cfg.requests)
+    settings = ObservationSettings(
+        keys=list(join_cfg.requests[0].keys),
+        timestamp_col=join_cfg.timestamp_col or "",
+        timestamp_format=join_cfg.timestamp_format,
+        simulate_time_delay=join_cfg.simulate_time_delay,
+        use_latest_feature_data=join_cfg.use_latest_feature_data,
+        now_epoch=now_epoch,
+    )
+    return join_features(spark, out, settings, anchors, derived=derived,
+                         lookups=lookups, requested=requested,
+                         source_cache=source_cache)
 
 
 # ---------------------------------------------------------------------------

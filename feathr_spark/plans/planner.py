@@ -26,7 +26,7 @@ things Catalyst cannot infer across feature definitions.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,6 +40,7 @@ from feathr_spark.definitions import (
     LookupFeature,
     ObservationSettings,
     SWAFeature,
+    WindowSpec,
 )
 from feathr_spark.operators.asof import asof_join
 from feathr_spark.operators.derived import apply_derived_in_order
@@ -108,6 +109,103 @@ def _source_key(anchor: Anchor) -> tuple:
             id(anchor.extractor) if getattr(anchor, "extractor", None) else None)
 
 
+def _expansion(anchors: Sequence[Anchor], lk: LookupFeature) -> tuple:
+    """The expansion anchor and feature a lookup reads, by name."""
+    a = next((a for a in anchors if a.name == lk.expansion_anchor), None)
+    f = a and next((f for f in a.features if f.name == lk.expansion_feature), None)
+    if f is None:
+        raise ValueError(f"lookup {lk.name!r}: no anchor {lk.expansion_anchor!r} with "
+                         f"feature {lk.expansion_feature!r} among the anchors")
+    return a, f
+
+
+def resolve_requests(anchors: Sequence[Anchor], derived: Sequence[DerivedFeature],
+                     lookups: Sequence[LookupFeature], requests: Sequence) -> tuple:
+    """Bind ``config.FeatureRequest``-shaped requests (``features``,
+    ``keys`` or None for the ObservationSettings keys,
+    ``override_time_delay``) to one :func:`join_features` call:
+    ``(anchors, derived, lookups, columns)``. Both front ends call this,
+    as the reference's client and join config both reach FeatureJoinJob.
+
+    A derived or lookup feature pulls its inputs under its own key
+    binding. A feature's first binding (the default one, keys None,
+    comes first) keeps its name; an anchored feature under a later
+    binding is ``<name>__<keytag>`` (keys joined by ``_``), a derived or
+    lookup feature there raises ``ValueError``. Anchors are cloned per
+    binding and an anchor's first clone keeps its name, so a lookup finds
+    its expansion anchor, which otherwise rides along as declared.
+    Unknown names raise ``KeyError``; ``columns`` follow request order.
+    """
+    anchor_of = {f.name: a for a in anchors for f in a.features}
+    inputs = {d.name: tuple(d.inputs) for d in derived}
+    inputs.update((lk.name, (lk.base_feature,)) for lk in lookups)
+    bind: dict = {}    # feature name -> binding that owns the plain column
+    joins: dict = {}   # (name, binding) -> (column, override delay)
+    columns: dict = {}
+    order = sorted(range(len(requests)), key=lambda i: requests[i].keys is not None)
+    for i in order:
+        r = requests[i]
+        kt = None if r.keys is None else tuple(r.keys)
+        for name in r.features:
+            if name not in anchor_of and name not in inputs:
+                raise KeyError(f"unknown feature {name!r}")
+            col = name if bind.setdefault(name, kt) == kt else f"{name}__{'_'.join(kt)}"
+            if col != name and name in inputs:
+                raise ValueError(f"derived feature {name!r} requested under two key "
+                                 "bindings; its expression reads the first binding's columns")
+            if joins.setdefault((name, kt), (col, r.override_time_delay))[1] \
+                    != r.override_time_delay:
+                raise ValueError(f"feature {name!r} requested twice under keys {kt} "
+                                 "with different overrideTimeDelay")
+            columns[i, name] = col
+            todo = [name]   # its inputs, under the same binding
+            while todo:
+                for dep in inputs.get(todo.pop(), ()):
+                    if dep not in anchor_of and dep not in inputs:
+                        continue  # an observation column
+                    if bind.setdefault(dep, kt) != kt:
+                        raise ValueError(f"{name!r} reads {dep!r}, which is "
+                                         "requested under other keys")
+                    if (dep, kt) not in joins:
+                        joins[dep, kt] = (dep, r.override_time_delay)
+                        todo.append(dep)
+    needed = {name for name, _ in joins}
+    lookups = [lk for lk in lookups if lk.name in needed]
+    bindings = list(dict.fromkeys(kt for _, kt in joins))
+    # an expansion anchor already bound carries the expansion feature
+    # under its first binding, so the lookup finds both by name
+    for lk in lookups:
+        exp = next((a for a in anchors if a.name == lk.expansion_anchor), None)
+        kts = [kt for kt in bindings if exp is not None
+               and any((f.name, kt) in joins for f in exp.features)]
+        if kts and bind.setdefault(lk.expansion_feature, kts[0]) == kts[0]:
+            joins.setdefault((lk.expansion_feature, kts[0]), (lk.expansion_feature, None))
+    bound: list = []
+    for a in anchors:
+        clones = []
+        for kt in bindings:
+            feats = []
+            for f in a.features:
+                col, delay = joins.get((f.name, kt), (None, None))
+                if col is None:
+                    continue
+                if delay is not None and isinstance(f, SWAFeature):
+                    f = replace(f, window=WindowSpec(f.window.width, delay))
+                feats.append(f if col == f.name else replace(f, name=col))
+            if feats:
+                clones.append(replace(
+                    a, features=feats,
+                    name=f"{a.name}__{'_'.join(kt)}" if clones else a.name,
+                    obs_keys=a.obs_keys if kt is None else list(kt)))
+        bound += clones
+    for lk in lookups:
+        if not any(a.name == lk.expansion_anchor for a in bound):
+            bound += [a for a in anchors if a.name == lk.expansion_anchor]
+    return (bound, [d for d in derived if d.name in needed], lookups,
+            list(dict.fromkeys(columns[i, n] for i, r in enumerate(requests)
+                               for n in r.features)))
+
+
 def join_features(
     spark: SparkSession,
     observation: DataFrame,
@@ -135,6 +233,7 @@ def join_features(
     lazy ``localCheckpoint`` (executor-local, cheaper, lost on executor
     death — acceptable for short local runs only).
     """
+    expansions = {lk.name: _expansion(anchors, lk) for lk in lookups}
     groups = FeatureGroups.classify(anchors)
     out = observation
     anchor_dfs: dict[str, DataFrame] = {}
@@ -226,9 +325,6 @@ def join_features(
         fact = _apply_lateral_view(_load_raw(a0), *lv0)
         feats = [f for _, f in grp]
         if sim:
-            from dataclasses import replace
-
-            from feathr_spark.definitions import WindowSpec
             feats = [replace(f, window=WindowSpec(f.window.width, f.window.delay + sim))
                      for f in feats]
         out = join_window_agg_features(
@@ -293,11 +389,10 @@ def join_features(
             F.xxhash64(F.lit(0x100C_0002), *hash_in).alias("u2"),
         ))
     for lk in lookups:
-        exp_anchor = next(a for a in anchors if a.name == lk.expansion_anchor)
+        exp_anchor, exp_feat = expansions[lk.name]
         exp_df = anchor_dfs.get(lk.expansion_anchor)
         if exp_df is None:
             exp_df = _load(exp_anchor)
-        exp_feat = next(f for f in exp_anchor.features if f.name == lk.expansion_feature)
         # array-valued base features expand one row per element
         # (SequentialJoinAsDerivation.scala:205-224 explode step)
         base_dt = out.schema[lk.base_feature].dataType

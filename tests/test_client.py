@@ -96,6 +96,27 @@ def test_client_query_key_binding(spark, sf_dir):
     assert ca == cb  # same key values through the other column
 
 
+def test_client_default_binding_keeps_the_plain_name(spark, sf_dir):
+    """A feature under the default keys and under a key override: the
+    default binding keeps the name, whichever query lists it first, and
+    the other is ``<name>__<keytag>``, as in a HOCON join config."""
+    client = FeathrClient(spark)
+    client.build_features(anchor_list=[_anchor(sf_dir)])
+    settings = ObservationSettings(keys=["user_id"], timestamp_col="ts",
+                                   timestamp_format="timestamp")
+    obs = _obs(spark, sf_dir).withColumn("uid2", (F.col("user_id") + 1) % 20)
+    got = client.get_offline_features(
+        obs, [FeatureQuery(["v_sum_1h"], key=["uid2"]),
+              FeatureQuery(["v_sum_1h"])], settings)
+    assert got.columns == obs.columns + ["v_sum_1h__uid2", "v_sum_1h"]
+    plain = client.get_offline_features(obs, FeatureQuery(["v_sum_1h"]), settings)
+    tagged = client.get_offline_features(
+        obs, FeatureQuery(["v_sum_1h"], key=["uid2"]), settings)
+    want = plain.join(tagged.select(
+        "event_id", F.col("v_sum_1h").alias("v_sum_1h__uid2")), "event_id")
+    assert got.exceptAll(want.select(got.columns)).isEmpty()
+
+
 def test_client_guards(spark, sf_dir):
     client = FeathrClient(spark)
     with pytest.raises(RuntimeError, match="build_features"):

@@ -495,6 +495,170 @@ def test_run_join_config_seqjoin_from_config(spark):
     assert got[3] in (None, [])
 
 
+
+# ---------------------------------------------------------------------------
+# one resolver behind both front ends
+# ---------------------------------------------------------------------------
+
+
+_FRONT_FDEF = """
+sources: {
+  evSource: {
+    location: { path: "events" }
+    timeWindowParameters: { timestampColumn: "ts", timestampColumnFormat: "timestamp" }
+  }
+}
+anchors: {
+  swaAnchor: {
+    source: "evSource"
+    key: "user_id"
+    features: {
+      v_sum_1h: { def: "value", aggregation: SUM, window: 1h }
+      v_cnt_1h: { def: "value", aggregation: COUNT, window: 1h }
+    }
+  }
+  memberAnchor: {
+    source: "member"
+    key.sqlExpr: m_id
+    features: { industryId.def.sqlExpr: ind_id }
+  }
+  industryAnchor: {
+    source: "industry"
+    key.sqlExpr: i_id
+    features: {
+      industryName.def.sqlExpr: i_name
+      industrySize.def.sqlExpr: i_size
+    }
+  }
+}
+derivations: {
+  v_rate: { sqlExpr: "v_sum_1h / v_cnt_1h" }
+  v_rate_g: { sqlExpr: "v_sum_1h / greatest(v_cnt_1h, 1)" }
+  v_avg_1h: "toNumeric(v_sum_1h) / toNumeric(v_cnt_1h)"
+  member_industry: {
+    key: "x"
+    join: {
+      base: { key: x, feature: industryId }
+      expansion: { key: i_id, feature: industryName }
+    }
+    aggregation: "UNION"
+  }
+}
+"""
+
+# case -> [(observation keys, feature list)], one entry per request
+_FRONT_CASES = {
+    "derived_only": [(["user_id"], ["v_rate"])],
+    "mvel_and_sql_function_derived_only": [(["user_id"], ["v_avg_1h", "v_rate_g"])],
+    "same_feature_two_key_tags": [(["user_id"], ["v_cnt_1h"]),
+                                  (["alt_id"], ["v_cnt_1h"])],
+    "lookup_and_expansion_feature": [(["user_id"],
+                                      ["member_industry", "industryName"])],
+    "lookup_and_other_expansion_anchor_feature": [(["user_id"],
+                                                   ["member_industry", "industrySize"])],
+    "derived_two_key_tags": [(["user_id"], ["v_rate"]), (["alt_id"], ["v_rate"])],
+}
+
+
+def _front_end(front, spark, obs, requests, cache):
+    """Run ``requests`` over _FRONT_FDEF through the client or a HOCON
+    join config."""
+    from feathr_spark import FeathrClient, FeatureQuery, ObservationSettings
+
+    fdef = load_feature_def(_FRONT_FDEF)
+    if front == "hocon":
+        groups = "\n".join(
+            f"{{ key: [{', '.join(k)}], featureList: [{', '.join(f)}] }}"
+            for k, f in requests)
+        jc = load_join_config(
+            "settings: { joinTimeSettings: { timestampColumn: "
+            "{ def: ts, format: timestamp } } }\n"
+            f"features: [\n{groups}\n]")
+        return run_join_config(spark, obs, fdef, jc, source_cache=cache)
+    client = FeathrClient(spark)
+    client.build_features(anchor_list=fdef.anchors,
+                          derived_feature_list=fdef.derived + fdef.lookups)
+    return client.get_offline_features(
+        obs, [FeatureQuery(f, key=k) for k, f in requests],
+        ObservationSettings(keys=requests[0][0], timestamp_col="ts",
+                            timestamp_format="timestamp"),
+        source_cache=cache)
+
+
+def test_derivation_inputs_are_the_features_their_sql_names():
+    """Every derivation form records as inputs exactly the identifiers of
+    its SQL that name features of the definition: no SQL functions, and
+    none missing for a bare MVEL string."""
+    inputs = {d.name: d.inputs for d in load_feature_def(_FRONT_FDEF).derived}
+    assert inputs == {"v_rate": ("v_sum_1h", "v_cnt_1h"),
+                      "v_rate_g": ("v_sum_1h", "v_cnt_1h"),
+                      "v_avg_1h": ("v_sum_1h", "v_cnt_1h")}
+
+
+@pytest.mark.parametrize("case", list(_FRONT_CASES))
+@pytest.mark.parametrize("front", ["client", "hocon"])
+def test_front_ends_resolve_requests_alike(spark, sf_dir, front, case):
+    """The client and a HOCON join config answer the same request over
+    the same feature definition with the same columns and values."""
+    from feathr_spark import SWAFeature, WindowSpec, join_window_agg_features
+
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    obs = ev.select("event_id", "user_id", "ts",
+                    ((F.col("user_id") + 1) % 20).alias("alt_id"))
+    names, sizes = {0: "tech", 1: "law"}, {0: 7, 1: 3}
+    cache = {
+        "events": ev,
+        "member": spark.createDataFrame(
+            [(u, u % 3) for u in range(50)], "m_id long, ind_id long"),
+        "industry": spark.createDataFrame(
+            [(i, names[i], sizes[i]) for i in names],
+            "i_id long, i_name string, i_size long"),
+    }
+    requests = _FRONT_CASES[case]
+    if case == "derived_two_key_tags":
+        with pytest.raises(ValueError, match="two key bindings"):
+            _front_end(front, spark, obs, requests, cache)
+        return
+    got = _front_end(front, spark, obs, requests, cache)
+
+    if case.startswith("lookup"):
+        other = requests[0][1][1]
+        values = names if other == "industryName" else sizes
+        assert got.columns == obs.columns + ["member_industry", other]
+        rows = got.collect()
+        assert len(rows) == obs.count()
+        for r in rows:
+            ind = names.get(r["user_id"] % 3) if r["user_id"] < 50 else None
+            assert (r["member_industry"] or []) == ([ind] if ind else [])
+            assert r[other] == values.get(r["user_id"])
+        assert any(r["member_industry"] for r in rows)
+        return
+
+    def swa(key):
+        return join_window_agg_features(
+            obs, ev, [key], ["user_id"], "ts", "ts",
+            [SWAFeature("v_sum_1h", "SUM", "value", WindowSpec(3600)),
+             SWAFeature("v_cnt_1h", "COUNT", "value", WindowSpec(3600))],
+            obs_ts_format="timestamp", fact_ts_format="timestamp")
+
+    if case == "same_feature_two_key_tags":
+        cols = ["v_cnt_1h", "v_cnt_1h__alt_id"]
+        want = swa("user_id").join(
+            swa("alt_id").select(
+                "event_id", F.col("v_cnt_1h").alias("v_cnt_1h__alt_id")),
+            "event_id")
+    else:
+        cols = [f for _, fs in requests for f in fs]
+        want = swa("user_id").withColumns({
+            "v_rate": F.expr("v_sum_1h / v_cnt_1h"),
+            "v_rate_g": F.expr("v_sum_1h / greatest(v_cnt_1h, 1)"),
+            "v_avg_1h": F.expr("double(v_sum_1h) / double(v_cnt_1h)")})
+    assert got.columns == obs.columns + cols
+    want = want.select(got.columns)
+    assert got.count() == want.count() == obs.count()
+    assert got.exceptAll(want).isEmpty()
+    assert got.where(F.col(cols[-1]).isNotNull()).count() > 0
+
 def test_gen_config_to_generation(spark, sf_dir):
     """A reference-style generation config drives generate_features."""
     from feathr_spark.materialize import generate_features

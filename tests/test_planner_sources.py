@@ -86,6 +86,63 @@ def test_join_features_end_to_end(spark, frames):
     assert math.isclose(r3["raw_x2"], 60.0)
 
 
+
+def test_lookup_without_its_expansion_anchor_or_feature_raises(spark, frames):
+    """An anchor list without the lookup's expansion anchor, or with one
+    that lacks the expansion feature, is a ValueError naming both."""
+    from dataclasses import replace
+
+    obs, _, profile, countries = frames
+    prof = Anchor("prof", Source("mem://profile"), ["uid"],
+                  [Feature("country", "country")])
+    geo = Anchor("geo", Source("mem://countries"), ["code"],
+                 [Feature("population", "population")])
+    lk = LookupFeature("country_pop", "country", "geo", "population",
+                       aggregation="FIRST")
+    cache = {"mem://profile": profile, "mem://countries": countries}
+    settings = ObservationSettings(["uid"], "ts")
+    with pytest.raises(ValueError, match="'country_pop'.*'geo'.*'population'"):
+        join_features(spark, obs, settings, [prof], lookups=[lk],
+                      source_cache=cache)
+    geo_other = replace(geo, features=[Feature("pop2", "population")])
+    with pytest.raises(ValueError, match="'country_pop'.*'geo'.*'population'"):
+        join_features(spark, obs, settings, [prof, geo_other], lookups=[lk],
+                      source_cache=cache)
+
+
+def test_resolve_requests_binds_keys_delays_and_names():
+    """Clone names, obs_keys, override delays and ride-along expansion
+    anchors of one resolved request list."""
+    from feathr_spark.config import FeatureRequest as Req
+    from feathr_spark.plans.planner import resolve_requests
+
+    src = Source("mem://events", timestamp_col="ts")
+    ev = Anchor("ev", src, ["uid"], [
+        SWAFeature("v_sum", "SUM", "v", WindowSpec(3600)),
+        SWAFeature("v_cnt", "COUNT", "v", WindowSpec(3600))])
+    prof = Anchor("prof", Source("mem://profile"), ["uid"],
+                  [Feature("country", "country")])
+    geo = Anchor("geo", Source("mem://countries"), ["code"],
+                 [Feature("population", "population")])
+    rate = DerivedFeature("rate", "v_sum / v_cnt", inputs=("v_sum", "v_cnt"))
+    lk = LookupFeature("country_pop", "country", "geo", "population")
+    anchors, derived, lookups, columns = resolve_requests(
+        [ev, prof, geo], [rate], [lk],
+        [Req(keys=["alt"], features=["v_cnt"], override_time_delay=60.0),
+         Req(keys=None, features=["rate", "country_pop"], override_time_delay=None)])
+    assert columns == ["v_cnt__alt", "rate", "country_pop"]
+    assert [(a.name, a.obs_keys, [f.name for f in a.features]) for a in anchors] == [
+        ("ev", None, ["v_sum", "v_cnt"]),
+        ("ev__alt", ["alt"], ["v_cnt__alt"]),
+        ("prof", None, ["country"]),
+        ("geo", None, ["population"])]
+    assert anchors[1].features[0].window == WindowSpec(3600, 60.0)
+    assert anchors[0].features[1].window == WindowSpec(3600)
+    assert derived == [rate] and lookups == [lk]
+    with pytest.raises(KeyError, match="unknown feature 'nope'"):
+        resolve_requests([ev], [], [], [Req(keys=None, features=["nope"],
+                                            override_time_delay=None)])
+
 def test_feature_groups_classification(frames):
     anchors = [
         Anchor("a", Source("p", timestamp_col="ts"), ["k"],
