@@ -122,9 +122,9 @@ def _host_block(j0, j1, load0):
 def corpus_feature_vectors(spark, sf: float) -> tuple[float, int]:
     """North-rule flagship: feature vectors per (doc_id, ts) over the
     tokenized corpus — SWA battery + as-of token lookup in one job."""
-    from feathr_spark import (SWAFeature, WindowSpec, asof_fetch,
-                              join_window_agg_features, release_caches)
+    from feathr_spark import asof_fetch, join_window_agg_features, release_caches
     from feathr_spark.datagen import corpus
+    from jobs.corpus_features import FLAGSHIP_SWA, MATCH_TS
 
     fact, obs = corpus(spark, sf=sf)
     # entity-hash-partitioned corpus cache (the north star's Iceberg
@@ -135,20 +135,7 @@ def corpus_feature_vectors(spark, sf: float) -> tuple[float, int]:
     n_obs = obs.count()
     fact.count()
 
-    feats = [
-        SWAFeature("tok_sum_1d", "SUM", "n_tok", WindowSpec(86400)),
-        SWAFeature("seq_cnt_1d", "COUNT", "n_tok", WindowSpec(86400)),
-        SWAFeature("tok_avg_7d", "AVG", "n_tok", WindowSpec(7 * 86400)),
-        SWAFeature("tok_max_7d", "MAX", "n_tok", WindowSpec(7 * 86400)),
-        SWAFeature("src_cnt_7d", "COUNT_DISTINCT", "source", WindowSpec(7 * 86400)),
-        SWAFeature("web_cnt_1d", "COUNT", "n_tok", WindowSpec(86400),
-                   filter="source = 'web'"),
-        # the as-of match timestamp, computed in the SAME kernel pass as
-        # the aggregates above (one more column in the merge, zero extra
-        # shuffle); asof_fetch below then hash-joins the token payload.
-        # 7d-bounded = asof_join(tolerance=7d) semantics.
-        SWAFeature("last_ts", "LATEST", "event_ts", WindowSpec(7 * 86400)),
-    ]
+    feats = FLAGSHIP_SWA + [MATCH_TS]
     # hot-key list computed ONCE outside the timer (a stats job any
     # production pipeline amortizes across runs; same stance as
     # BENCH/run_scaling.py — reference analogue:

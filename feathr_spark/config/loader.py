@@ -91,20 +91,14 @@ def _as_list(v) -> list:
 
 def _sql_or_mvel(node, *, mvel: bool) -> str:
     """A key/def node: string (MVEL or SQL per anchor kind) or
-    ``{sqlExpr: ...}``."""
+    ``{sqlExpr: ...}``. MVEL outside the translated subset raises
+    ``MvelTranslationError``."""
     if isinstance(node, dict):
         if "sqlExpr" in node:
             return str(node["sqlExpr"])
         raise ValueError(f"expected string or {{sqlExpr}}, got {node!r}")
     s = str(node)
-    if not mvel:
-        return s
-    try:
-        return mvel_to_sql(s)
-    except MvelTranslationError:
-        # identifiers/arithmetic translate 1:1; anything the MVEL subset
-        # can't express is surfaced to the caller
-        raise
+    return mvel_to_sql(s) if mvel else s
 
 
 def _load_source(name: str, node: dict) -> Source:
@@ -356,12 +350,6 @@ class JoinConfigModel:
     simulate_time_delay: float = 0.0
     use_latest_feature_data: bool = False
     abs_time_range: Optional[tuple] = None         # (start, end, fmt)
-
-    def all_features(self) -> list:
-        out = []
-        for r in self.requests:
-            out += [f for f in r.features if f not in out]
-        return out
 
 
 def load_join_config(text: str) -> JoinConfigModel:

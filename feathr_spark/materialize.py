@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from feathr_spark import fsio
 from feathr_spark.definitions import MICROS, SWAFeature
 from feathr_spark.functions.timestamps import to_epoch_micros
+from feathr_spark.session import codegen_counters, codegen_since
 
 # aggregates with an additive inverse -> snapshot +/- delta works
 _SUBTRACTABLE = {"SUM", "COUNT", "AVG"}
@@ -294,6 +295,7 @@ def materialize(
     from pyspark.sql import Observation
 
     t_run = time.monotonic()
+    cg0 = codegen_counters(fact.sparkSession)
     todo, skipped = [], []
     for cutoff in backfill.cutoffs():
         part_dir = sink_path.rstrip("/") + f"/cutoff={cutoff}"
@@ -350,6 +352,7 @@ def materialize(
             "rows_written": total_rows,
             "wall_s": round(time.monotonic() - t_run, 3),
         },
+        "codegen": codegen_since(fact.sparkSession, cg0),
     }
     _publish_run_metrics(sink_path, "materialize", report,
                          inputs=list(inputs) + list(spec.extra_inputs))

@@ -339,8 +339,18 @@ def join_features(
         out = _stage_done(out)
 
     # (3) snapshot anchors: as-of LATEST when the source is time-stamped,
-    # plain dedup+left-join otherwise
-    snap_sorted = sorted(groups.snapshot, key=lambda t: len(t[1]))
+    # plain dedup+left-join otherwise. An anchor that is only a lookup's
+    # expansion anchor is not joined: stage (4) loads it itself, and
+    # joining it would key it on the observation and carry its columns
+    # to the final prune. Without a requested list, or with a derived
+    # feature that declares no inputs, every anchor's columns may be read.
+    wanted = set(requested or ()) | {lk.base_feature for lk in lookups} \
+        | {i for d in derived for i in d.inputs}
+    expansion_only = set() if requested is None or not all(d.inputs for d in derived) \
+        else {a.name for a, _ in expansions.values()
+              if not any(f.name in wanted for f in a.features)}
+    snap_sorted = sorted((t for t in groups.snapshot if t[0].name not in expansion_only),
+                         key=lambda t: len(t[1]))
     for a, feats in snap_sorted:
         src = _load(a)
         anchor_dfs[a.name] = src

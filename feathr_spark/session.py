@@ -18,6 +18,9 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# generated-code cache size: ~8x the ~130 distinct classes one client
+# join plus backfill generates (PLANS.md §21)
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def _local_dir() -> str:
@@ -126,6 +129,16 @@ def get_spark(
     ``cpus`` explicitly (a local-bench intent). Without that guard the
     advertised --py-files deployment would silently run local-mode on
     the driver.
+
+    ``spark.sql.codegen.cache.maxEntries`` defaults to 1000 here (Spark:
+    100). One client join plus a backfill generates ~130 distinct
+    classes, so a 100-entry LRU evicts each class before its next use
+    and every repeat of the same query recompiles it in Janino. The
+    cache is JVM-wide and built once, at the JVM's first code
+    generation: the value that counts is the one in effect when the
+    first session in the JVM is created. ``getOrCreate`` hands back an
+    existing session and never applies it (``extra_conf`` can still
+    override it for a first session).
     """
     explicit_cpus = cpus is not None
     cpus = cpus or DEFAULT_CPUS
@@ -170,6 +183,7 @@ def get_spark(
         .config("spark.driver.memory", _driver_mem())
         .config("spark.driver.extraJavaOptions", _jvm_opts())
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # runtime bloom-filter join: Spark-native replacement for the
         # reference's explicit bloom-filter semi-join reduction
         # (offline/join/OptimizerUtils.scala:117-161)
@@ -186,6 +200,24 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_counters(spark: SparkSession) -> tuple[int, int]:
+    """Classes the driver JVM has compiled from generated code so far,
+    and the nanoseconds that took (Spark's ``CodegenMetrics`` and
+    ``CodeGenerator.compileTime``; JVM-wide, so every session and thread
+    counts). Reads two counters; runs no Spark job."""
+    jvm = spark.sparkContext._jvm
+    return (jvm.org.apache.spark.metrics.source.CodegenMetrics
+            .METRIC_COMPILATION_TIME().getCount(),
+            jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+            .compileTime())
+
+
+def codegen_since(spark: SparkSession, start: tuple[int, int]) -> dict:
+    """``{"compiles", "compile_s"}`` since ``start = codegen_counters(spark)``."""
+    n, ns = codegen_counters(spark)
+    return {"compiles": n - start[0], "compile_s": round((ns - start[1]) / 1e9, 3)}
 
 
 def stop_spark() -> None:

@@ -41,6 +41,7 @@ from feathr_spark import fsio
 from feathr_spark.materialize import (_commit, _publish_run_metrics,
                                       is_committed, read_manifest)
 from feathr_spark.operators.corpus import shard_shuffle
+from feathr_spark.session import codegen_counters, codegen_since
 
 
 def _shard_dir(sink_path: str, k: int) -> str:
@@ -76,6 +77,7 @@ def write_shards(
         raise ValueError("n_shards must be positive")
     spark = df.sparkSession
     t_run = time.monotonic()
+    cg0 = codegen_counters(spark)
     # str(Column) is a stable rendering of the hash expression — enough
     # to detect a changed hash_col between runs without serializing it
     hash_expr = None if hash_col is None else str(hash_col)
@@ -182,6 +184,7 @@ def write_shards(
             "waves": len(waves),
             "wall_s": round(time.monotonic() - t_run, 3),
         },
+        "codegen": codegen_since(spark, cg0),
     }
     _publish_run_metrics(sink_path, "write_shards", report, inputs=inputs)
     return report

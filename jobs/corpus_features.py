@@ -50,20 +50,26 @@ except ModuleNotFoundError:
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def _feature_battery():
-    from feathr_spark import SWAFeature, WindowSpec
-    d = 86_400
-    return [
-        SWAFeature("tok_sum_1d", "SUM", "n_tok", WindowSpec(d)),
-        SWAFeature("seq_cnt_1d", "COUNT", "n_tok", WindowSpec(d)),
-        SWAFeature("tok_avg_7d", "AVG", "n_tok", WindowSpec(7 * d)),
-        SWAFeature("tok_max_7d", "MAX", "n_tok", WindowSpec(7 * d)),
-        SWAFeature("tok_min_7d", "MIN", "n_tok", WindowSpec(7 * d)),
-        SWAFeature("src_cnt_7d", "COUNT_DISTINCT", "source", WindowSpec(7 * d)),
-        SWAFeature("web_cnt_1d", "COUNT", "n_tok", WindowSpec(d), filter="source = 'web'"),
-        SWAFeature("tok_latest_7d", "LATEST", "n_tok", WindowSpec(7 * d)),
-        SWAFeature("since_last_s", "TIMESINCE", "n_tok", WindowSpec(7 * d)),
-    ]
+from feathr_spark import SWAFeature, WindowSpec  # noqa: E402
+
+_DAY = 86_400
+# The flagship SWA battery over the tokenized corpus: this job's join and
+# materialize modes, bench.py and BENCH/run_scaling.py all measure it.
+FLAGSHIP_SWA = [
+    SWAFeature("tok_sum_1d", "SUM", "n_tok", WindowSpec(_DAY)),
+    SWAFeature("seq_cnt_1d", "COUNT", "n_tok", WindowSpec(_DAY)),
+    SWAFeature("tok_avg_7d", "AVG", "n_tok", WindowSpec(7 * _DAY)),
+    SWAFeature("tok_max_7d", "MAX", "n_tok", WindowSpec(7 * _DAY)),
+    SWAFeature("tok_min_7d", "MIN", "n_tok", WindowSpec(7 * _DAY)),
+    SWAFeature("src_cnt_7d", "COUNT_DISTINCT", "source", WindowSpec(7 * _DAY)),
+    SWAFeature("web_cnt_1d", "COUNT", "n_tok", WindowSpec(_DAY), filter="source = 'web'"),
+    SWAFeature("tok_latest_7d", "LATEST", "n_tok", WindowSpec(7 * _DAY)),
+    SWAFeature("since_last_s", "TIMESINCE", "n_tok", WindowSpec(7 * _DAY)),
+]
+# The as-of match timestamp, computed in the same kernel pass as the
+# battery (one more column, no extra shuffle), for callers that then
+# asof_fetch the token payload; 7d-bounded = asof_join(tolerance=7d).
+MATCH_TS = SWAFeature("last_ts", "LATEST", "event_ts", WindowSpec(7 * _DAY))
 
 
 def _load(spark, args):
@@ -86,7 +92,7 @@ def cmd_join(spark, args) -> dict:
     t0 = time.monotonic()
     vec = join_window_agg_features(
         obs, fact, [args.key], [args.key], args.obs_ts, args.fact_ts,
-        _feature_battery(), obs_ts_format=args.ts_format,
+        FLAGSHIP_SWA, obs_ts_format=args.ts_format,
         fact_ts_format=args.ts_format, strategy="cogroup",
         hot_key_threshold=hot, salt_buckets=args.salt_buckets)
     # prune strategy: slim (key, ts) match resolves each observation's
@@ -112,7 +118,7 @@ def cmd_materialize(spark, args) -> dict:
 
     fact, _ = _load(spark, args)
     spec = GenSpec(keys=[args.key], key_names=[args.key], ts_col=args.fact_ts,
-                   features=_feature_battery(), ts_format=args.ts_format)
+                   features=FLAGSHIP_SWA, ts_format=args.ts_format)
     bf = BackfillTime(args.backfill_start, args.backfill_end, args.backfill_step)
     report = materialize(fact, spec, args.output, bf,
                          inputs=[args.fact or f"synthetic sf={args.synthesize}"])

@@ -12,7 +12,9 @@ from feathr_spark import (
     Anchor,
     DerivedFeature,
     FeathrClient,
+    Feature,
     FeatureQuery,
+    LookupFeature,
     MaterializationSettings,
     ObservationSettings,
     Source,
@@ -336,3 +338,63 @@ def test_registry_rejects_project_names_outside_registry_dir(spark, sf_dir,
     with pytest.raises(ValueError, match="invalid project name"):
         c.get_features_from_registry("../x")
     assert not list(tmp_path.rglob("*x.json*"))
+
+
+def _plan_nodes(plan):
+    """Every node of an executed plan, through adaptive and query-stage
+    wrappers."""
+    yield plan
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        kids = [plan.executedPlan()]
+    elif name.endswith("QueryStageExec"):
+        kids = [plan.plan()]
+    else:
+        kids = [plan.children().apply(i) for i in range(plan.children().size())]
+    for k in kids:
+        yield from _plan_nodes(k)
+
+
+def test_lookup_expansion_anchor_is_not_joined_onto_the_observation(spark):
+    """An anchor present only as a lookup's expansion anchor is read by the
+    lookup stage; the snapshot stage must not left-join it onto the
+    observation (``doc_id <=> source``) nor carry its ``weight`` column."""
+    from feathr_spark.datagen import DAY, SOURCES, observations, sequences
+
+    fact = sequences(spark, 2000, 40, seed=1, skew=1.0).drop("tokens")
+    obs = observations(spark, 500, 40, seed=1, skew=1.0)
+    weights = [(s, float(i + 1)) for i, s in enumerate(SOURCES)]
+    meta = spark.createDataFrame(weights, "source string, weight double")
+    seq = Source("mem://sequences", timestamp_col="event_ts")
+    client = FeathrClient(spark)
+    client.build_features(
+        anchor_list=[
+            Anchor("doc_swa", seq, ["doc_id"],
+                   [SWAFeature("tok_sum_1d", "SUM", "n_tok", WindowSpec(DAY))]),
+            Anchor("doc_last", seq, ["doc_id"], [Feature("last_source", "source")]),
+            Anchor("source_meta", Source("mem://source_meta"), ["source"],
+                   [Feature("weight", "weight")]),
+        ],
+        derived_feature_list=[
+            LookupFeature("src_weight", "last_source", "source_meta", "weight",
+                          aggregation="FIRST"),
+        ],
+    )
+    out = client.get_offline_features(
+        obs, FeatureQuery(["tok_sum_1d", "last_source", "src_weight"]),
+        ObservationSettings(keys=["doc_id"], timestamp_col="ts"),
+        source_cache={"mem://sequences": fact, "mem://source_meta": meta})
+    rows = out.collect()
+    by_source = dict(weights)
+    assert any(r["last_source"] is not None for r in rows)
+    assert all(r["src_weight"] == by_source.get(r["last_source"]) for r in rows)
+
+    def names(node):
+        return {node.output().apply(i).name() for i in range(node.output().size())}
+
+    for node in _plan_nodes(out._jdf.queryExecution().executedPlan()):
+        text = node.simpleString(1000)
+        if "Join" in text and "doc_id#" in text:  # no doc_id <=> source join
+            below = set().union(*(names(n) for n in _plan_nodes(node) if n is not node))
+            assert "weight" not in below, text
+        assert not {"doc_id", "weight"} <= names(node), text

@@ -207,3 +207,20 @@ def test_run_metrics_published(spark, fact, tmp_path):
     assert m["metrics"] == report["metrics"]
     # data readers must not trip over it
     assert spark.read.parquet(sink).count() > 0
+
+
+def test_run_metrics_report_codegen(spark, fact, tmp_path):
+    """materialize and write_shards report the driver's generated-code
+    compiles over the call, in the returned and the published report."""
+    from feathr_spark.materialize import read_run_metrics
+    from feathr_spark.sources.shards import write_shards
+
+    runs = {"gen": materialize(fact, SPEC, str(tmp_path / "gen"),
+                               BackfillTime(T0 + 3600, T0 + 7200, 3600)),
+            "shards": write_shards(fact, str(tmp_path / "shards"), n_shards=2,
+                                   key_col="uid")}
+    for name, report in runs.items():
+        cg = read_run_metrics(str(tmp_path / name))["codegen"]
+        assert cg == report["codegen"]
+        assert set(cg) == {"compiles", "compile_s"}
+        assert cg["compiles"] >= 0 and cg["compile_s"] >= 0

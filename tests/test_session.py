@@ -6,7 +6,10 @@ import os
 
 import pytest
 
-from feathr_spark.session import _driver_mem, _jvm_opts
+from pyspark.sql import SparkSession
+
+from feathr_spark.session import (CODEGEN_CACHE_ENTRIES, _driver_mem, _jvm_opts,
+                                  codegen_counters, get_spark)
 
 _UNIT = {"k": 2**10, "m": 2**20, "g": 2**30, "t": 2**40}
 
@@ -43,3 +46,32 @@ def test_default_driver_heap_never_exceeds_mem_total(monkeypatch, tmp_path, tota
 def test_driver_heap_env_override(monkeypatch):
     monkeypatch.setenv("FEATHR_SPARK_DRIVER_MEM", "3g")
     assert _driver_mem() == "3g"
+
+
+def test_codegen_cache_default_and_override(spark, monkeypatch):
+    """The session keeps 1000 generated classes (Spark's default is 100),
+    and ``extra_conf`` still wins over the default."""
+    key = "spark.sql.codegen.cache.maxEntries"
+    assert spark.conf.get(key) == str(CODEGEN_CACHE_ENTRIES) == "1000"
+    built = {}
+
+    def capture(builder):  # the static conf only applies to a first session
+        built.update(builder._options)
+        return spark
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", capture)
+    get_spark(cpus=1, extra_conf={key: "50"})
+    assert built[key] == "50"
+
+
+def test_repeated_queries_compile_nothing(spark):
+    """150 distinct queries generate ~300 classes, more than Spark's default
+    100-entry cache holds: with it, the second pass recompiles them all."""
+    def run_all():
+        for i in range(150):
+            spark.range(10).selectExpr(f"id * {i + 7} + {i} as x").collect()
+
+    run_all()
+    before = codegen_counters(spark)[0]
+    run_all()
+    assert codegen_counters(spark)[0] - before == 0
