@@ -318,10 +318,10 @@ def q_lookup_two_hop(spark, sf_dir):
     orders = _t(spark, sf_dir, "orders")
     customer = _t(spark, sf_dir, "customer")
     nation = _t(spark, sf_dir, "nation")
-    step1 = lookup_join(orders, "o_orderkey", "o_custkey", customer,
+    step1 = lookup_join(orders, "o_custkey", customer,
                         "c_custkey", "c_nationkey", "cust_nation_key",
                         aggregation="FIRST", broadcast_expansion=True)
-    step2 = lookup_join(step1, "o_orderkey", "cust_nation_key", nation,
+    step2 = lookup_join(step1, "cust_nation_key", nation,
                         "n_nationkey", "n_name", "nation_name",
                         aggregation="FIRST", broadcast_expansion=True)
     return step2.select("o_orderkey", "nation_name")
@@ -333,9 +333,9 @@ def q_lookup_union_agg(spark, sf_dir):
 
     customer = _t(spark, sf_dir, "customer")
     orders = _t(spark, sf_dir, "orders")
-    c1 = lookup_join(customer, "c_custkey", "c_custkey", orders, "o_custkey",
+    c1 = lookup_join(customer, "c_custkey", orders, "o_custkey",
                      "o_totalprice", "order_sum", aggregation="SUM")
-    c2 = lookup_join(c1, "c_custkey", "c_custkey", orders, "o_custkey",
+    c2 = lookup_join(c1, "c_custkey", orders, "o_custkey",
                      "o_totalprice", "n_orders", aggregation="COUNT")
     return c2.select("c_custkey", F.round("order_sum", 2).alias("order_sum"),
                      F.col("n_orders").cast("long").alias("n_orders"))
@@ -1693,7 +1693,7 @@ def q_lookup_elementwise(spark, sf_dir):
         "doc_id", F.pmod(F.col("doc_id"), F.lit(10)).alias("bucket"))
     emb = _t(spark, sf_dir, "embeddings").select(
         F.pmod(F.col("vec_id"), F.lit(10)).alias("bucket"), "embedding")
-    out = lookup_join(docs, "doc_id", "bucket", emb, "bucket", "embedding",
+    out = lookup_join(docs, "bucket", emb, "bucket", "embedding",
                       "elem_avg", aggregation="ELEMENTWISE_AVG")
     ex = out.select("doc_id", F.posexplode("elem_avg").alias("pos", "v"))
     return ex.select("doc_id", F.col("pos").cast("long").alias("pos"),

@@ -46,7 +46,8 @@ from feathr_spark.definitions import (
     ObservationSettings,
     SWAFeature,
 )
-from feathr_spark.materialize import BackfillTime, GenSpec, materialize
+from feathr_spark.config.loader import gen_spec_for_anchor
+from feathr_spark.materialize import BackfillTime, materialize
 from feathr_spark.sources.online import (
     LocalOnlineStore,
     decode_online_value,
@@ -219,7 +220,8 @@ class FeathrClient:
         features must live on ONE anchor (one fact table + key space per
         materialization job — the reference's per-anchor constraint).
         ``fact`` overrides loading the anchor's source (tests inject
-        in-memory frames)."""
+        in-memory frames). Snapshot key columns are named as a generation
+        config names them (``config.loader.gen_spec_for_anchor``)."""
         self._require_built()
         names = set(settings.feature_names)
         owners = {self._feature_owner.get(n) for n in names}
@@ -246,13 +248,7 @@ class FeathrClient:
                 from feathr_spark.sources.batch import load_source
 
                 fact = load_source(self.spark, anchor.source)
-        key_names = [f"key{i}" for i in range(len(anchor.keys))]
-        spec = GenSpec(
-            keys=list(anchor.keys), key_names=key_names,
-            ts_col=anchor.source.timestamp_col or "ts",
-            features=feats,
-            ts_format=anchor.source.timestamp_format,
-        )
+        spec = gen_spec_for_anchor(anchor, feats)
         sink = settings.sink_path
         if sink is None:
             import tempfile
@@ -264,7 +260,7 @@ class FeathrClient:
         if settings.online_table:
             last = max(settings.backfill_time.cutoffs())
             snap = self.spark.read.parquet(f"{sink}/cutoff={last}")
-            write_online(snap, settings.online_table, key_names,
+            write_online(snap, settings.online_table, spec.key_names,
                          self._online)
             report["online_table"] = settings.online_table
         return report

@@ -490,8 +490,6 @@ def gen_spec_from_feature_def(fdef: FeatureDefModel, feature_names: list):
     generation config. All requested features must share one anchor
     source+keys (the reference groups per anchor too; call once per
     group otherwise)."""
-    from feathr_spark.materialize import GenSpec
-
     anchors = {}
     for fn in feature_names:
         a = fdef.anchor_of_feature(fn)
@@ -510,8 +508,16 @@ def gen_spec_from_feature_def(fdef: FeatureDefModel, feature_names: list):
         if not isinstance(f, SWAFeature):
             raise ValueError(f"{fn!r} is not a window-aggregate feature")
         feats.append(f)
+    return gen_spec_for_anchor(a0, feats), a0
+
+
+def gen_spec_for_anchor(anchor, features):
+    """The materialize.GenSpec of ``features`` on ``anchor``: snapshot key
+    columns take the key's identifier (``key{i}`` for an expression key)."""
+    from feathr_spark.materialize import GenSpec
+
     key_names = [k if _IDENT.fullmatch(k) else f"key{i}"
-                 for i, k in enumerate(a0.keys)]
-    return GenSpec(keys=list(a0.keys), key_names=key_names,
-                   ts_col=a0.source.timestamp_col,
-                   features=feats, ts_format=a0.source.timestamp_format), a0
+                 for i, k in enumerate(anchor.keys)]
+    return GenSpec(keys=list(anchor.keys), key_names=key_names,
+                   ts_col=anchor.source.timestamp_col,
+                   features=list(features), ts_format=anchor.source.timestamp_format)

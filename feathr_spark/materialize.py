@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from feathr_spark import fsio
 from feathr_spark.definitions import MICROS, SWAFeature
 from feathr_spark.functions.timestamps import to_epoch_micros
+from feathr_spark.operators.swa import latest_by
 from feathr_spark.session import codegen_counters, codegen_since
 
 # aggregates with an additive inverse -> snapshot +/- delta works
@@ -99,7 +100,7 @@ def _window_metric(f: SWAFeature, cutoff_us: int):
     return F.when(in_win, _metric(f))
 
 
-def _agg_col(f: SWAFeature, m, cutoff_us: int):
+def _agg_col(f: SWAFeature, m, cutoff_us: int, ts_col: str):
     if f.agg == "SUM":
         return F.sum(m)
     if f.agg == "COUNT":
@@ -111,8 +112,8 @@ def _agg_col(f: SWAFeature, m, cutoff_us: int):
     if f.agg == "MAX":
         return F.max(m)
     if f.agg == "LATEST":
-        # ts-ordered max_by; null metrics ignored (reference LATEST skips nulls)
-        return F.max_by(m, F.when(m.isNotNull(), F.col("__ts")))
+        # null metrics ignored (reference LATEST skips nulls); ts ties as in SWA
+        return latest_by(m, F.col("__ts"), f.metric != ts_col)
     if f.agg == "TIMESINCE":
         return (F.lit(cutoff_us) - F.max(F.when(m.isNotNull(), F.col("__ts")))) / F.lit(MICROS)
     if f.agg in ("COUNT_DISTINCT",):
@@ -153,7 +154,7 @@ def generate_features(
 
     if plain:
         aggs = [
-            _agg_col(f, _window_metric(f, cutoff_us), cutoff_us).alias(f.name)
+            _agg_col(f, _window_metric(f, cutoff_us), cutoff_us, spec.ts_col).alias(f.name)
             for f in plain
         ]
         out = df.groupBy(*spec.key_names).agg(*aggs)
@@ -172,7 +173,7 @@ def generate_features(
         gdf = df.withColumn("__term", F.expr(f.group_by).cast("string")) \
                 .where(F.col("__term").isNotNull())
         per_term = gdf.groupBy(*keys, "__term").agg(
-            _agg_col(f, _window_metric(f, cutoff_us), cutoff_us).alias("__val"))
+            _agg_col(f, _window_metric(f, cutoff_us), cutoff_us, spec.ts_col).alias("__val"))
         m = per_term.where(F.col("__val").isNotNull()).groupBy(*keys).agg(
             F.map_from_entries(
                 F.array_sort(F.collect_list(F.struct("__term", "__val")))

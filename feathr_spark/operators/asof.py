@@ -45,6 +45,7 @@ from feathr_spark.operators.swa import (
     _key_cols,
     _salt,
     _with_keys_ts,
+    payload_hash,
 )
 
 MICROS = 1_000_000
@@ -69,14 +70,6 @@ def _est_width(dt) -> int:
         return sum(_est_width(f.dataType) for f in dt.fields)
     # arrays/maps: token arrays are "KBs each" (docstring) — assume 2 KB
     return 2048
-
-
-def _tiebreak(vcols):
-    """Deterministic order among fact rows sharing (key, ts): hash of the
-    payload. Exact byte-duplicates still collapse to one identical row."""
-    if not vcols:
-        return F.lit(0).cast("long")
-    return F.xxhash64(F.struct(*[F.col(v) for v in vcols]))
 
 
 def _parse_value_cols(value_cols):
@@ -196,7 +189,7 @@ def _asof_union(obs, fact_proj, n_keys, vcols, delay_us, tol_us, salted=False,
     # deterministic tie-break among exact-ts fact duplicates: the
     # max-payload-hash row wins (same rule as the prune strategy's
     # max_by collapse — strategies agree bit-for-bit, retries too)
-    fact_u = fact_u.withColumn("__tb", _tiebreak(vcols))
+    fact_u = fact_u.withColumn("__tb", payload_hash(vcols))
     u = obs_u.unionByName(fact_u, allowMissingColumns=True)
     # pin the window-stage task count (see swa._swa_union: AQE coalesces
     # the window exchange into coarse waves otherwise)
@@ -393,7 +386,7 @@ def asof_fetch(
                                 on=fk + ["__fts"], how="left_semi")
     fact_u = (fact_m.groupBy(*fk, "__fts")
               .agg(F.max_by(F.struct(*[F.col(v) for v in vcols]),
-                            _tiebreak(vcols)).alias("__payload")))
+                            payload_hash(vcols)).alias("__payload")))
     right = fact_u.select(
         *fk, F.col("__fts"),
         *[F.col(f"__payload.{v}").alias(n) for v, n in zip(vcols, out_names)])

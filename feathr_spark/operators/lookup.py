@@ -7,12 +7,20 @@ expansion feature on the base value → groupBy(uid).agg to restore
 cardinality; null-key rows are split out and unioned back
 (DataFrameSplitterMerger.splitOnNull). The reference's uid is
 ``monotonically_increasing_id`` (non-deterministic across retries, noted
-at :125-129); we require the caller to name an existing unique id column
-instead — content-derived and retry-safe.
+at :125-129).
+
+A scalar base needs no uid: a lookup's value depends on the base value
+alone, so the expansion table is aggregated per expansion key and that
+per-key table is left-joined onto the observation on ``base == key``
+(eager aggregation: the group-by moves below the join). The observation
+is read once and nothing shuffles on a row hash. Only an array-valued
+base, whose elements must be regrouped per row, takes the reference's
+explode → join → groupBy(uid) path; the caller names an existing unique
+id column for it — content-derived and retry-safe.
 
 ELEMENTWISE_* aggregations (SequentialJoinAsDerivation.scala:300-663 —
 the reference's Spark-UDAF family over array-valued expansion features)
-are pure JVM here: ``collect_list`` of the arrays per uid, then a
+are pure JVM here: ``collect_list`` of the arrays per group, then a
 higher-order ``aggregate``/``zip_with`` fold. Arrays must share one
 length per group (the reference's UDAFs assert the same;
 mismatched-length positions come out null via zip_with's null-padding).
@@ -37,16 +45,16 @@ _EW_MERGE = {
 }
 
 
-def _elementwise_agg(grouped_src: DataFrame, uid_cols: Sequence[str],
+def _elementwise_agg(grouped_src: DataFrame, group_cols: Sequence[str],
                      aggregation: str, out_name: str) -> DataFrame:
-    """Fold array-valued ``__val`` rows elementwise per uid group.
+    """Fold array-valued ``__val`` rows elementwise per group.
 
     One groupBy (map-side combine on collect_list) + a codegen'd
     ``aggregate`` fold seeded with the first array — no Python, no
     explode blow-up. Output element type: double.
     """
     merge = _EW_MERGE[aggregation]
-    lists = grouped_src.groupBy(*uid_cols).agg(
+    lists = grouped_src.groupBy(*group_cols).agg(
         F.collect_list("__val").alias("__vals"),
         F.count("__val").alias("__n"),
     )
@@ -59,12 +67,29 @@ def _elementwise_agg(grouped_src: DataFrame, uid_cols: Sequence[str],
     if aggregation == "ELEMENTWISE_AVG":
         folded = F.transform(folded, lambda x: x / F.col("__n"))
     out = F.when(F.size(vals) > 0, folded)
-    return lists.select(*uid_cols, out.alias(out_name))
+    return lists.select(*group_cols, out.alias(out_name))
+
+
+def _aggregate(rows: DataFrame, group_cols: Sequence[str], aggregation: str,
+               out_name: str) -> DataFrame:
+    """One row per group: ``aggregation`` over the group's ``__val``s
+    (nulls skipped)."""
+    if aggregation.startswith("ELEMENTWISE_"):
+        return _elementwise_agg(rows.where(F.col("__val").isNotNull()),
+                                group_cols, aggregation, out_name)
+    if aggregation == "UNION":
+        agg = F.collect_list("__val")
+    elif aggregation == "COUNT":
+        agg = F.count("__val")
+    elif aggregation in ("FIRST", "LATEST"):
+        agg = F.first("__val", ignorenulls=True)
+    else:
+        agg = getattr(F, aggregation.lower())("__val")
+    return rows.groupBy(*group_cols).agg(agg.alias(out_name))
 
 
 def lookup_join(
     obs: DataFrame,
-    uid_col: str,
     base_key: str,
     expansion: DataFrame,
     expansion_key: str,
@@ -73,34 +98,36 @@ def lookup_join(
     aggregation: str = "UNION",
     explode_base: bool = False,
     broadcast_expansion: bool = False,
+    uid_col: Optional[str] = None,
 ) -> DataFrame:
-    """Join ``expansion`` on ``obs[base_key]`` (optionally exploding an
-    array-valued base key), aggregate ``expansion_value`` back to one row
-    per ``uid_col``.
+    """Join ``expansion`` on ``obs[base_key]`` and aggregate
+    ``expansion_value`` to one value per observation row.
 
     ``aggregation``: UNION → collect_list, SUM/AVG/MAX/MIN/COUNT → the
     numeric aggregate, FIRST/LATEST → arbitrary single value (FIRST),
     ELEMENTWISE_SUM/AVG/MAX/MIN → elementwise fold over array-valued
     expansion values — matching
-    feathr_project/feathr/definition/aggregation.py:4-27.
+    feathr_project/feathr/definition/aggregation.py:4-27. Null expansion
+    values are skipped. A null base gives null; a base with no expansion
+    row gives 0 for COUNT, ``[]`` for UNION and null otherwise.
 
-    ``uid_col`` should be unique per observation row; duplicate uids are
-    deduped on the slim projection before the expansion join (duplicate
-    rows share all hashed content, so their aggregates are identical and
-    the join-back fans the one computed row to every duplicate).
+    A scalar base joins the per-key aggregate of ``expansion`` by value.
+    ``explode_base=True`` (an array-valued base) expands one row per
+    element and regroups by ``uid_col``, which must then name a column
+    unique per observation row; it is not read otherwise. Duplicate uids
+    are deduped on the slim projection before the expansion join
+    (duplicate rows share all hashed content, so their aggregates are
+    identical and the join-back fans the one computed row to every
+    duplicate).
     """
     aggregation = aggregation.upper()
     if aggregation not in LOOKUP_AGGS:
         raise ValueError(f"unknown lookup aggregation {aggregation}")
     if out_name in obs.columns:
         raise ValueError(f"output column {out_name} already exists")
+    if explode_base and uid_col is None:
+        raise ValueError("an array-valued base regroups per row: pass uid_col")
 
-    work = obs.select(uid_col, F.col(base_key).alias("__bk")).dropDuplicates([uid_col])
-    if explode_base:
-        work = work.select(uid_col, F.explode_outer("__bk").alias("__bk"))
-
-    # null-key segregation: nulls never match and must not shuffle-skew
-    matched = work.where(F.col("__bk").isNotNull())
     val_expr = F.expr(expansion_value)
     if aggregation.startswith("ELEMENTWISE_"):
         val_expr = F.transform(val_expr, lambda x: x.cast("double"))
@@ -108,22 +135,27 @@ def lookup_join(
         F.col(expansion_key).alias("__bk"),
         val_expr.alias("__val"),
     ).where(F.col("__bk").isNotNull())
+
+    if explode_base:
+        # null elements never match and must not shuffle-skew
+        matched = obs.select(uid_col, F.col(base_key).alias("__bk")) \
+            .dropDuplicates([uid_col]) \
+            .select(uid_col, F.explode("__bk").alias("__bk")) \
+            .where(F.col("__bk").isNotNull())
+        if broadcast_expansion:
+            exp = F.broadcast(exp)
+        per_uid = _aggregate(matched.join(exp, on="__bk", how="left"),
+                             [uid_col], aggregation, out_name)
+        return obs.join(per_uid, on=uid_col, how="left")
+
+    per_key = _aggregate(exp, ["__bk"], aggregation, out_name)
     if broadcast_expansion:
-        exp = F.broadcast(exp)
-    joined = matched.join(exp, on="__bk", how="left")
-
-    if aggregation.startswith("ELEMENTWISE_"):
-        per_uid = _elementwise_agg(joined.where(F.col("__val").isNotNull()),
-                                   [uid_col], aggregation, out_name)
-    else:
-        if aggregation == "UNION":
-            agg = F.collect_list("__val")
-        elif aggregation == "COUNT":
-            agg = F.count("__val")
-        elif aggregation in ("FIRST", "LATEST"):
-            agg = F.first("__val", ignorenulls=True)
-        else:
-            agg = getattr(F, aggregation.lower())("__val")
-        per_uid = joined.groupBy(uid_col).agg(agg.alias(out_name))
-
-    return obs.join(per_uid, on=uid_col, how="left")
+        per_key = F.broadcast(per_key)
+    out = obs.join(per_key, F.col(base_key) == F.col("__bk"), "left").drop("__bk")
+    # a base with no expansion row: what the empty group aggregates to
+    empty = {"COUNT": F.lit(0).cast("long"),
+             "UNION": F.array().cast(per_key.schema[out_name].dataType)}.get(aggregation)
+    if empty is not None:
+        out = out.withColumn(out_name, F.when(
+            F.col(base_key).isNotNull(), F.coalesce(F.col(out_name), empty)))
+    return out

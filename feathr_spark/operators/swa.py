@@ -120,6 +120,25 @@ def _out_field(f: SWAFeature, metric_dtype: T.DataType) -> T.StructField:
     return T.StructField(f.name, T.DoubleType())
 
 
+def payload_hash(cols):
+    """Deterministic order among fact rows sharing (key, ts): the xxhash64
+    of their payload, the largest wins. Exact byte-duplicates hash alike
+    and carry the same payload."""
+    if not cols:
+        return F.lit(0).cast("long")
+    return F.xxhash64(F.struct(*cols))
+
+
+def latest_by(m, ts, tiebreak: bool):
+    """LATEST as one aggregate: the non-null ``m`` with the largest
+    ``ts``. With ``tiebreak``, rows sharing that ts go to the largest
+    :func:`payload_hash` of ``m`` — the rule ``asof_join`` applies, so
+    the pick does not depend on row order. A LATEST of the fact ts itself
+    needs no tiebreak: rows sharing a ts hold the same value."""
+    order = F.struct(ts, payload_hash([m])) if tiebreak else ts
+    return F.max_by(m, F.when(m.isNotNull(), order))
+
+
 def _isolate_null_keys(obs: DataFrame, n_keys: int) -> DataFrame:
     """Single-pass null-key handling: rows with a null key or null
     timestamp get a unique ``__nk`` partition id (valid rows get 0), so
@@ -176,7 +195,7 @@ def _time_prefilter(obs: DataFrame, fact: DataFrame, features: Sequence[SWAFeatu
 
 
 def _swa_union(obs: DataFrame, fact_proj: DataFrame, features, metric_col,
-               n_keys) -> DataFrame:
+               n_keys, tiebreak) -> DataFrame:
     obs_u = obs.withColumn("__is_obs", F.lit(1))
     fact_u = fact_proj.withColumn("__is_obs", F.lit(0)).withColumn("__fact_ts", F.col("__ts"))
     unioned = obs_u.unionByName(fact_u, allowMissingColumns=True)
@@ -206,7 +225,7 @@ def _swa_union(obs: DataFrame, fact_proj: DataFrame, features, metric_col,
         elif f.agg == "MAX":
             col = F.max(m).over(w)
         elif f.agg == "LATEST":
-            col = F.last(m, ignorenulls=True).over(w)
+            col = latest_by(m, F.col("__ts"), f.name in tiebreak).over(w)
         elif f.agg == "TIMESINCE":
             col = (F.col("__ts") - F.max("__fact_ts").over(w)) / F.lit(1e6)
         elif f.agg in ("COUNT_DISTINCT", "APPROX_COUNT_DISTINCT"):
@@ -330,6 +349,12 @@ def _make_kernel(obs_schema: T.StructType, out_schema: T.StructType, specs: list
                     outs[name][:] = kernels.agg_pooling(col(s["metric"], object), lo, hi, agg)
                 elif agg == "LATEST":
                     vals = col(s["metric"], object)
+                    if s["tiebreak"] is not None:
+                        # rows sharing (key, ts) end in payload-hash order,
+                        # so the last valid one is the largest hash; a
+                        # window never splits such a run
+                        vals = vals[np.lexsort(
+                            (col(s["tiebreak"], np.int64), fact_ts, fc_s))]
                     idx, ok = kernels.agg_latest(vals, kernels.valid_mask(vals), lo, hi)
                     picked = vals[idx].copy()
                     picked[~ok] = None
@@ -489,7 +514,7 @@ def _salt(obs: DataFrame, fact: DataFrame, n_keys: int, threshold: int, buckets:
 
 
 def _swa_cogroup(obs: DataFrame, fact_proj: DataFrame, features, metric_col, n_keys,
-                 obs_schema, out_fields, hot_key_threshold, salt_buckets,
+                 tiebreak, obs_schema, out_fields, hot_key_threshold, salt_buckets,
                  num_buckets: Optional[int] = None, hot_key_method: str = "exact",
                  hot_keys_df: Optional[DataFrame] = None,
                  salt_mode: str = "auto") -> DataFrame:
@@ -519,6 +544,9 @@ def _swa_cogroup(obs: DataFrame, fact_proj: DataFrame, features, metric_col, n_k
                                lo_shift_us=lo_shift_us)
         seg_cols = kcols + ["__nk", "__salt"]
 
+    tb_metrics = sorted({metric_col[n] for n in tiebreak})
+    fact_proj = fact_proj.select("*", *[payload_hash([m]).alias(f"{m}_tb") for m in tb_metrics])
+
     b = num_buckets or _default_buckets(obs)
     bucket = F.pmod(F.xxhash64(*seg_cols), F.lit(b)).cast("int")
     # explicit repartition pins the kernel-stage task count at b: AQE's
@@ -541,6 +569,7 @@ def _swa_cogroup(obs: DataFrame, fact_proj: DataFrame, features, metric_col, n_k
             "width_us": f.window.width_us,
             "delay_us": f.window.delay_us,
             "limit": f.limit,
+            "tiebreak": f"{metric_col[f.name]}_tb" if f.name in tiebreak else None,
         }
         for f in features
     ]
@@ -754,6 +783,8 @@ def join_window_agg_features(
     out_fields = [_out_field(f, proj_dtypes.get(metric_col[f.name], T.DoubleType()))
                   for f in features]
 
+    tiebreak = {f.name for f in features if f.agg == "LATEST" and f.metric != fact_ts}
+
     if strategy == "auto":
         frame_ok = all(f.agg in FRAME_AGGS and f.group_by is None for f in features) \
             and not hot_key_threshold and hot_keys_df is None
@@ -768,12 +799,12 @@ def join_window_agg_features(
         if hot_key_threshold or hot_keys_df is not None:
             raise ValueError("hot-key salting runs on the cogroup strategy only; "
                              "use strategy='cogroup' (or 'auto')")
-        joined = _swa_union(obs_main, fact_proj, features, metric_col, n_keys)
+        joined = _swa_union(obs_main, fact_proj, features, metric_col, n_keys, tiebreak)
         helper = [c for c in joined.columns if c.startswith("__")]
         joined = joined.drop(*helper)
     elif strategy == "cogroup":
         joined = _swa_cogroup(
-            obs_main, fact_proj, features, metric_col, n_keys,
+            obs_main, fact_proj, features, metric_col, n_keys, tiebreak,
             obs.schema, out_fields, hot_key_threshold, salt_buckets, num_buckets,
             hot_key_method, hot_keys_df, salt_mode,
         )

@@ -14,8 +14,10 @@ DataFrameFeatureJoiner.scala:128-315) Spark-first:
 4. snapshot anchors: dedup right side on keys + left join; with a
    timestamp column declared they become LATEST as-of lookups
    (AnchoredFeatureJoinStep.scala:112-188, "closest from the past")
-5. sequential/lookup features: base value -> expansion join -> agg
-   (SequentialJoinAsDerivation.scala:44-167)
+5. sequential/lookup features (SequentialJoinAsDerivation.scala:44-167):
+   a scalar base left-joins the expansion's per-key aggregate by value,
+   so the observation is read once; only an array-valued base explodes,
+   joins and regroups by a content-derived row uid
 6. derived features applied in dependency order, then column pruning to
    the requested list (DataFrameFeatureJoiner.scala:276-311)
 
@@ -379,25 +381,14 @@ def join_features(
                 out = out.withColumn(f.name, F.coalesce(F.col(f.name), F.lit(f.default)))
         out = _stage_done(out)
 
-    # (4) sequential/lookup features over joined base values.
-    # lookup_join references its obs twice (projection + join-back), so
-    # the row uid must be deterministic across the two plan branches AND
-    # across task retries: a content-derived 128-bit hash (two xxhash64
-    # seeds packed in a struct) is both, with no localCheckpoint
-    # materialization. monotonically_increasing_id is retry/branch
-    # nondeterministic — the reference flags the same hazard
-    # (SequentialJoinAsDerivation.scala:125-129). Bytewise-identical rows
-    # share a uid; lookup_join dedups on uid pre-join and fans the one
-    # (identical) result back to every duplicate. Map-containing columns
-    # (any nesting) contribute via a to_json rendering — see
-    # operators.swa.content_uid_inputs — so rows differing only in a map
-    # never share a uid.
-    if lookups:
-        hash_in = content_uid_inputs(out.schema)
-        out = out.withColumn("__lk_uid", F.struct(
-            F.xxhash64(F.lit(0x100C_0001), *hash_in).alias("u1"),
-            F.xxhash64(F.lit(0x100C_0002), *hash_in).alias("u2"),
-        ))
+    # (4) sequential/lookup features over joined base values. A scalar
+    # base joins the expansion's per-key aggregate by value. An array
+    # base regroups per row by a uid that must agree across lookup_join's
+    # two reads of its obs and across task retries: a content-derived
+    # 128-bit hash (two xxhash64 seeds), not monotonically_increasing_id
+    # (the reference's hazard, SequentialJoinAsDerivation.scala:125-129).
+    # Bytewise-identical rows share a uid and get the one identical
+    # result; map columns hash via to_json (swa.content_uid_inputs).
     for lk in lookups:
         exp_anchor, exp_feat = expansions[lk.name]
         exp_df = anchor_dfs.get(lk.expansion_anchor)
@@ -405,17 +396,23 @@ def join_features(
             exp_df = _load(exp_anchor)
         # array-valued base features expand one row per element
         # (SequentialJoinAsDerivation.scala:205-224 explode step)
-        base_dt = out.schema[lk.base_feature].dataType
+        array_base = isinstance(out.schema[lk.base_feature].dataType, T.ArrayType)
+        if array_base and "__lk_uid" not in out.columns:
+            hash_in = content_uid_inputs(out.schema)
+            out = out.withColumn("__lk_uid", F.struct(
+                F.xxhash64(F.lit(0x100C_0001), *hash_in).alias("u1"),
+                F.xxhash64(F.lit(0x100C_0002), *hash_in).alias("u2"),
+            ))
         out = lookup_join(
-            out, "__lk_uid", lk.base_feature,
+            out, lk.base_feature,
             exp_df.select(F.expr(exp_anchor.keys[0]).alias("__ek"),
                           F.expr(exp_feat.expr).alias(lk.expansion_feature)),
             "__ek", lk.expansion_feature, lk.name,
             aggregation=lk.aggregation,
-            explode_base=isinstance(base_dt, T.ArrayType),
+            explode_base=array_base,
+            uid_col="__lk_uid" if array_base else None,
         )
-    if lookups:
-        out = out.drop("__lk_uid")
+    out = out.drop("__lk_uid")
 
     # (5) derived features in dependency order
     out = apply_derived_in_order(out, derived)

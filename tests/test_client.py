@@ -158,9 +158,11 @@ def test_client_materialize_and_online_roundtrip(spark, sf_dir, tmp_path):
     assert report2["written"] == [] and len(report2["skipped"]) == 2
 
     # online values == latest-cutoff snapshot values
+    # snapshot key columns take the key's identifier, as a generation config's do
     snap = spark.read.parquet(str(tmp_path / "sink") + f"/cutoff={cutoff}")
-    row = snap.orderBy("key0").first()
-    got = client.get_online_features("ev_table", row["key0"],
+    assert set(snap.columns) == {"user_id", "v_sum_1h", "n_1d"}
+    row = snap.orderBy("user_id").first()
+    got = client.get_online_features("ev_table", row["user_id"],
                                      ["v_sum_1h", "n_1d", "missing"])
     def _num(x):
         return None if x is None else round(float(x), 6)
@@ -169,10 +171,10 @@ def test_client_materialize_and_online_roundtrip(spark, sf_dir, tmp_path):
     assert got[2] is None
 
     # batch form
-    keys = [r["key0"] for r in snap.orderBy("key0").limit(3).collect()]
+    keys = [r["user_id"] for r in snap.orderBy("user_id").limit(3).collect()]
     multi = client.multi_get_online_features("ev_table", keys, ["n_1d"])
-    want = {str(r["key0"]): [r["n_1d"]] for r in
-            snap.where(F.col("key0").isin(keys)).collect()}
+    want = {str(r["user_id"]): [r["n_1d"]] for r in
+            snap.where(F.col("user_id").isin(keys)).collect()}
     assert multi == want
 
 
@@ -355,10 +357,10 @@ def _plan_nodes(plan):
         yield from _plan_nodes(k)
 
 
-def test_lookup_expansion_anchor_is_not_joined_onto_the_observation(spark):
-    """An anchor present only as a lookup's expansion anchor is read by the
-    lookup stage; the snapshot stage must not left-join it onto the
-    observation (``doc_id <=> source``) nor carry its ``weight`` column."""
+def _doc_lookup_query(spark):
+    """Run the client query of a SWA anchor, an as-of snapshot anchor and a
+    lookup through an expansion anchor; check every looked-up weight and
+    return the executed frame."""
     from feathr_spark.datagen import DAY, SOURCES, observations, sequences
 
     fact = sequences(spark, 2000, 40, seed=1, skew=1.0).drop("tokens")
@@ -388,6 +390,14 @@ def test_lookup_expansion_anchor_is_not_joined_onto_the_observation(spark):
     by_source = dict(weights)
     assert any(r["last_source"] is not None for r in rows)
     assert all(r["src_weight"] == by_source.get(r["last_source"]) for r in rows)
+    return out
+
+
+def test_lookup_expansion_anchor_is_not_joined_onto_the_observation(spark):
+    """An anchor present only as a lookup's expansion anchor is read by the
+    lookup stage; the snapshot stage must not left-join it onto the
+    observation (``doc_id <=> source``) nor carry its ``weight`` column."""
+    out = _doc_lookup_query(spark)
 
     def names(node):
         return {node.output().apply(i).name() for i in range(node.output().size())}
@@ -398,3 +408,18 @@ def test_lookup_expansion_anchor_is_not_joined_onto_the_observation(spark):
             below = set().union(*(names(n) for n in _plan_nodes(node) if n is not node))
             assert "weight" not in below, text
         assert not {"doc_id", "weight"} <= names(node), text
+
+
+def test_client_plan_evaluates_each_stage_once(spark):
+    """A scalar-base lookup joins a per-key aggregate by value, so the
+    observation is read once: one Window for the SWA pass and one for the
+    as-of pass, and no exchange or aggregate keyed on a row hash."""
+    out = _doc_lookup_query(spark)
+    nodes = list(_plan_nodes(out._jdf.queryExecution().executedPlan()))
+    kinds = [n.getClass().getSimpleName() for n in nodes]
+    assert kinds.count("WindowExec") == 2, kinds
+    for node, kind in zip(nodes, kinds):
+        text = node.simpleString(1000)
+        assert "__lk_uid" not in text, text
+        if "Exchange" in kind or "Aggregate" in kind:
+            assert "xxhash64" not in text, text

@@ -275,32 +275,61 @@ def test_per_feature_lateral_view(spark):
     assert out["x_sum"] == 3.0 and out["y_sum"] == 10.0
 
 
-def test_lookup_elementwise_avg(spark):
-    from feathr_spark.operators.lookup import lookup_join
+_LK_OBS = [(1, None), (2, "none"), (3, "a"), (4, "a"), (5, "n"), (6, "z")]
+# key a: two rows; n: a null-valued row beside a valued one; z: only a
+# null-valued row; a null expansion key never matches
+_LK_EXP = [("a", 1.0), ("a", 3.0), ("n", None), ("n", 4.0), ("z", None), (None, 5.0)]
+# key a's arrays each hold one elementwise maximum
+_LK_EXP_ARRAYS = [("a", [1.0, 9.0]), ("a", [4.0, 2.0]), ("n", None), ("n", [4.0, 4.0]),
+                  ("z", None), (None, [5.0, 5.0])]
+_LK_WANT = {  # uid -> value; a set lists the values an arbitrary pick may give
+    "SUM": {3: 4.0, 4: 4.0, 5: 4.0},
+    "AVG": {3: 2.0, 4: 2.0, 5: 4.0},
+    "MAX": {3: 3.0, 4: 3.0, 5: 4.0},
+    "MIN": {3: 1.0, 4: 1.0, 5: 4.0},
+    "COUNT": {2: 0, 3: 2, 4: 2, 5: 1, 6: 0},
+    "UNION": {2: [], 3: [1.0, 3.0], 4: [1.0, 3.0], 5: [4.0], 6: []},
+    "FIRST": {3: {1.0, 3.0}, 4: {1.0, 3.0}, 5: 4.0},
+    "LATEST": {3: {1.0, 3.0}, 4: {1.0, 3.0}, 5: 4.0},
+    "ELEMENTWISE_SUM": {3: [5.0, 11.0], 4: [5.0, 11.0], 5: [4.0, 4.0]},
+    "ELEMENTWISE_AVG": {3: [2.5, 5.5], 4: [2.5, 5.5], 5: [4.0, 4.0]},
+    "ELEMENTWISE_MAX": {3: [4.0, 9.0], 4: [4.0, 9.0], 5: [4.0, 4.0]},
+    "ELEMENTWISE_MIN": {3: [1.0, 2.0], 4: [1.0, 2.0], 5: [4.0, 4.0]},
+}
 
-    obs = spark.createDataFrame([(1, "a"), (2, "b"), (3, "zz")], "uid long, bk string")
-    exp = spark.createDataFrame(
-        [("a", [1.0, 2.0]), ("a", [3.0, 6.0]), ("b", [5.0, 5.0])],
-        "ek string, arr array<double>")
-    out = lookup_join(obs, "uid", "bk", exp, "ek", "arr", "ew",
-                      aggregation="ELEMENTWISE_AVG")
-    got = {r["uid"]: r["ew"] for r in out.collect()}
-    assert got[1] == [2.0, 4.0]
-    assert got[2] == [5.0, 5.0]
-    assert got[3] is None
 
+@pytest.mark.parametrize("base", ["scalar", "array"])
+@pytest.mark.parametrize("agg", sorted(_LK_WANT))
+def test_lookup_aggregation_semantics(spark, agg, base):
+    """Every lookup aggregation on a null base (null), a base with no
+    expansion row (0 for COUNT, [] for UNION, null otherwise), a base
+    matching two rows, and null expansion values (skipped). An array base
+    wraps each key in a one-element array and must give the same values."""
+    from feathr_spark.operators.lookup import LOOKUP_AGGS, lookup_join
 
-def test_lookup_elementwise_sum_max_min(spark):
-    from feathr_spark.operators.lookup import lookup_join
+    assert set(_LK_WANT) == LOOKUP_AGGS
+    if agg.startswith("ELEMENTWISE_"):
+        exp = spark.createDataFrame(_LK_EXP_ARRAYS, "ek string, v array<double>")
+    else:
+        exp = spark.createDataFrame(_LK_EXP, "ek string, v double")
+    obs = spark.createDataFrame(_LK_OBS, "uid long, bk string")
+    if base == "array":
+        from pyspark.sql import functions as F
 
-    obs = spark.createDataFrame([(1, "a")], "uid long, bk string")
-    exp = spark.createDataFrame(
-        [("a", [1.0, 9.0]), ("a", [4.0, 2.0])], "ek string, arr array<double>")
-    for agg, want in [("ELEMENTWISE_SUM", [5.0, 11.0]),
-                      ("ELEMENTWISE_MAX", [4.0, 9.0]),
-                      ("ELEMENTWISE_MIN", [1.0, 2.0])]:
-        out = lookup_join(obs, "uid", "bk", exp, "ek", "arr", "ew", aggregation=agg)
-        assert out.first()["ew"] == want, agg
+        obs = obs.withColumn("bk", F.when(F.col("bk").isNotNull(), F.array("bk")))
+    out = lookup_join(obs, uid_col="uid", base_key="bk", expansion=exp,
+                      expansion_key="ek", expansion_value="v", out_name="out",
+                      aggregation=agg, explode_base=base == "array")
+    got = {r["uid"]: r["out"] for r in out.collect()}
+    assert sorted(got) == [uid for uid, _ in _LK_OBS]
+    for uid, _ in _LK_OBS:
+        want = _LK_WANT[agg].get(uid)
+        if agg == "UNION" and got[uid] is not None:
+            got[uid] = sorted(got[uid])
+        if isinstance(want, set):
+            assert got[uid] in want, (uid, got[uid])
+        else:
+            assert got[uid] == want, (uid, got[uid])
 
 
 def test_kafka_options_plumbing(spark):

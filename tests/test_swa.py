@@ -181,6 +181,36 @@ def test_no_temporal_leakage(spark):
     assert len(base) == len(leaked)
 
 
+def test_latest_ties_at_one_ts_follow_the_asof_rule(spark):
+    """Fact rows sharing (key, ts) give LATEST one value whatever their
+    order: the largest xxhash64 of the value, the rule ``asof_join`` uses.
+    SWA on both strategies and ``generate_features`` agree with it."""
+    from feathr_spark.materialize import GenSpec, generate_features
+    from feathr_spark.operators.asof import asof_join
+
+    obs = spark.createDataFrame([(1, "a", 100)], "obs_id long, k string, ts long")
+    tied = [("a", 50, 1.0), ("a", 50, 2.0), ("a", 50, None)]
+    # two LATEST features over one metric share its projected column
+    feats = [SWAFeature("v_latest", "LATEST", "v", WindowSpec(100)),
+             SWAFeature("v_latest_2", "LATEST", "v", WindowSpec(200))]
+    got = {}
+    for order in (tied, tied[::-1]):
+        # one partition keeps the listed order into the shuffle
+        fact = spark.createDataFrame(order, "k string, ts long, v double").coalesce(1)
+        got[("asof", tuple(order))] = asof_join(
+            obs, fact.where(F.col("v").isNotNull()), ["k"], ["k"], "ts", "ts",
+            ["v"]).first()["v"]
+        for strategy in STRATEGIES:
+            row = join_window_agg_features(obs, fact, ["k"], ["k"], "ts", "ts", feats,
+                                           strategy=strategy).first()
+            got[(strategy, tuple(order))] = row["v_latest"]
+            got[(strategy + "_2", tuple(order))] = row["v_latest_2"]
+        spec = GenSpec(keys=["k"], key_names=["k"], ts_col="ts", features=feats)
+        got[("generate", tuple(order))] = generate_features(fact, spec, 100).first()["v_latest"]
+    assert len(set(got.values())) == 1, got
+    assert None not in got.values()
+
+
 def test_grouped_topk_and_pooling(spark, toy):
     obs, fact = toy
     feats = [
