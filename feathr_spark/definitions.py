@@ -17,10 +17,14 @@ sub-second event times compare exactly.
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass, field
 from typing import Any, Callable, Optional
 
 MICROS = 1_000_000
+# the width of an unbounded window: reaches past any int64 microsecond
+# timestamp, yet ``t - width - delay`` stays inside int64
+UNBOUNDED_US = 1 << 62
 
 # aggregation vocabulary: swj/aggregate/AggregationType.scala:3-6
 AGG_TYPES = {
@@ -87,15 +91,20 @@ class WindowSpec:
     """Sliding window ``(t_obs - width - delay, t_obs - delay]``.
 
     Left-exclusive / right-inclusive, exactly as the reference iterator
-    (swj/join/SlidingWindowJoinIterator.scala:177-220).
+    (swj/join/SlidingWindowJoinIterator.scala:177-220). ``width=math.inf``
+    is an unbounded lookback: every fact row up to ``t_obs - delay``.
     """
 
     width: float  # seconds
     delay: float = 0.0  # seconds
 
     @property
+    def unbounded(self) -> bool:
+        return math.isinf(self.width)
+
+    @property
     def width_us(self) -> int:
-        return int(round(self.width * MICROS))
+        return UNBOUNDED_US if self.unbounded else int(round(self.width * MICROS))
 
     @property
     def delay_us(self) -> int:

@@ -10,8 +10,9 @@ Reference semantics being rebuilt (all Spark-first, no ports):
   TimeWindowConfigurableAnchorExtractor.scala:63-110).
 - **Backfill** — ``BackfillTime(start, end, step)`` expands into one
   output partition per step (docs/concepts/materializing-features.md:48-88,
-  one Spark job per step; here: one partition write per step inside one
-  session, each independently committed).
+  one Spark job per step; here: one job per chunk of steps that share
+  fact rows — one aggregation over all their cutoffs and one write
+  partitioned by cutoff — each partition independently committed).
 - **Incremental aggregation** — new snapshot = previous snapshot
   ⊕ new-interval partial ⊖ expired-interval partial for SUM/COUNT-class
   aggregates (offline/generation/IncrementalAggSnapshotLoader.scala:25-114);
@@ -24,9 +25,10 @@ Reference semantics being rebuilt (all Spark-first, no ports):
   committed partitions; outputs are byte-stable because generation is
   deterministic in (input, cutoff).
 
-At cluster scale each partition write is a normal distributed
-``df.write.parquet`` — the manifest is tiny driver-side JSON, so the
-commit protocol adds no shuffle and no driver data collection.
+At cluster scale each chunk write is a normal distributed
+``df.write.partitionBy("cutoff").parquet`` — the manifest is tiny
+driver-side JSON, so the commit protocol adds no shuffle and no driver
+data collection.
 """
 
 from __future__ import annotations
@@ -42,7 +44,7 @@ from pyspark.sql import functions as F
 from feathr_spark import fsio
 from feathr_spark.definitions import MICROS, SWAFeature
 from feathr_spark.functions.timestamps import to_epoch_micros
-from feathr_spark.operators.swa import latest_by
+from feathr_spark.operators.swa import latest_by, metric_expr, metric_types
 from feathr_spark.session import codegen_counters, codegen_since
 
 # aggregates with an additive inverse -> snapshot +/- delta works
@@ -81,26 +83,18 @@ class GenSpec:
     derived: Sequence = field(default_factory=tuple)  # [DerivedFeature]
 
 
-def _metric(f: SWAFeature):
-    raw = F.expr(f.metric)
-    if f.agg == "COUNT":
-        raw = F.when(raw.isNotNull(), F.lit(1)).otherwise(F.lit(0))
-    if f.filter:
-        raw = F.when(F.expr(f.filter), raw)
-    return raw
-
-
-def _window_metric(f: SWAFeature, cutoff_us: int):
+def _window_metric(f: SWAFeature, m):
     """Metric masked to the feature's window (cutoff - width - delay,
     cutoff - delay] — the generation-time analogue of the join-time
-    window, evaluated as one scan with per-feature CASE masks."""
-    lo = cutoff_us - f.window.width_us - f.window.delay_us
-    hi = cutoff_us - f.window.delay_us
-    in_win = (F.col("__ts") > F.lit(lo)) & (F.col("__ts") <= F.lit(hi))
-    return F.when(in_win, _metric(f))
+    window, evaluated as one scan with per-feature CASE masks. The
+    cutoff is a column, so one plan serves every cutoff."""
+    cut = F.col("__cut_us")
+    in_win = (F.col("__ts") > cut - F.lit(f.window.width_us + f.window.delay_us)) \
+        & (F.col("__ts") <= cut - F.lit(f.window.delay_us))
+    return F.when(in_win, m)
 
 
-def _agg_col(f: SWAFeature, m, cutoff_us: int, ts_col: str):
+def _agg_col(f: SWAFeature, m, ts_col: str):
     if f.agg == "SUM":
         return F.sum(m)
     if f.agg == "COUNT":
@@ -115,7 +109,7 @@ def _agg_col(f: SWAFeature, m, cutoff_us: int, ts_col: str):
         # null metrics ignored (reference LATEST skips nulls); ts ties as in SWA
         return latest_by(m, F.col("__ts"), f.metric != ts_col)
     if f.agg == "TIMESINCE":
-        return (F.lit(cutoff_us) - F.max(F.when(m.isNotNull(), F.col("__ts")))) / F.lit(MICROS)
+        return (F.col("__cut_us") - F.max(F.when(m.isNotNull(), F.col("__ts")))) / F.lit(MICROS)
     if f.agg in ("COUNT_DISTINCT",):
         return F.count_distinct(m)
     if f.agg == "APPROX_COUNT_DISTINCT":
@@ -123,43 +117,64 @@ def _agg_col(f: SWAFeature, m, cutoff_us: int, ts_col: str):
     raise ValueError(f"generation does not support {f.agg}")
 
 
+def _keyed(fact: DataFrame, spec: GenSpec) -> DataFrame:
+    """``fact`` plus the named key columns and ``__ts`` (epoch micros),
+    rows with a null key dropped."""
+    df = fact
+    for name, expr in zip(spec.key_names, spec.keys):
+        df = df.withColumn(name, F.expr(expr)).where(F.col(name).isNotNull())
+    return df.withColumn("__ts", to_epoch_micros(F.expr(spec.ts_col), spec.ts_format))
+
+
+def _reach_us(spec: GenSpec) -> int:
+    return max(f.window.width_us + f.window.delay_us for f in spec.features)
+
+
 def generate_features(
     fact: DataFrame,
     spec: GenSpec,
-    cutoff: float,
+    cutoff,
 ) -> DataFrame:
     """One row per entity: every feature aggregated over its window
     ending at ``cutoff`` (epoch seconds). Single scan, single shuffle,
-    map-side partial aggregation — pure Catalyst."""
-    cutoff_us = int(round(cutoff * MICROS))
-    df = fact
-    for name, expr in zip(spec.key_names, spec.keys):
-        df = df.withColumn(name, F.expr(expr))
-    df = df.withColumn("__ts", to_epoch_micros(F.expr(spec.ts_col), spec.ts_format))
+    map-side partial aggregation — pure Catalyst.
 
-    # prefilter to the widest reachable window -> partition pruning at scan
-    reach = max(f.window.width_us + f.window.delay_us for f in spec.features)
+    ``cutoff`` may be a list: the result then has one row per (cutoff,
+    entity) and a ``cutoff`` column, all from the same one aggregation.
+    Each fact row is exploded into the cutoffs whose reach covers it and
+    ``cutoff`` is a grouping column; a single cutoff is the one-element
+    list without that column."""
+    many = isinstance(cutoff, (list, tuple))
+    cutoffs = list(cutoff) if many else [cutoff]
+    cut_type = "long" if all(isinstance(c, int) for c in cutoffs) else "double"
+    cuts_us = [int(round(c * MICROS)) for c in cutoffs]
+    reach = _reach_us(spec)
     min_delay = min(f.window.delay_us for f in spec.features)
-    df = df.where(
-        (F.col("__ts") > F.lit(cutoff_us - reach)) & (F.col("__ts") <= F.lit(cutoff_us - min_delay))
-    )
-    key_nonnull = None
-    for name in spec.key_names:
-        c = F.col(name).isNotNull()
-        key_nonnull = c if key_nonnull is None else (key_nonnull & c)
-    df = df.where(key_nonnull)
+    df = _keyed(fact, spec)
+    # prefilter to the widest reachable window -> partition pruning at scan
+    df = df.where((F.col("__ts") > F.lit(min(cuts_us) - reach))
+                  & (F.col("__ts") <= F.lit(max(cuts_us) - min_delay)))
+    covering = F.filter(
+        F.array(*[F.struct(F.lit(c).cast(cut_type).alias("cutoff"), F.lit(us).alias("us"))
+                  for c, us in zip(cutoffs, cuts_us)]),
+        lambda c: (F.col("__ts") > c["us"] - F.lit(reach))
+        & (F.col("__ts") <= c["us"] - F.lit(min_delay)))
+    df = df.withColumn("__cut", F.explode(covering)) \
+        .withColumn("cutoff", F.col("__cut.cutoff")) \
+        .withColumn("__cut_us", F.col("__cut.us")).drop("__cut")
+    keys = ["cutoff", "__cut_us", *spec.key_names]
+    metric = {f.name: metric_expr(f, t)
+              for f, t in zip(spec.features, metric_types(df, spec.features))}
 
     plain = [f for f in spec.features if f.group_by is None]
     grouped = [f for f in spec.features if f.group_by is not None]
 
     if plain:
-        aggs = [
-            _agg_col(f, _window_metric(f, cutoff_us), cutoff_us, spec.ts_col).alias(f.name)
-            for f in plain
-        ]
-        out = df.groupBy(*spec.key_names).agg(*aggs)
+        aggs = [_agg_col(f, _window_metric(f, metric[f.name]), spec.ts_col).alias(f.name)
+                for f in plain]
+        out = df.groupBy(*keys).agg(*aggs)
     else:
-        out = df.select(*spec.key_names).distinct()
+        out = df.select(*keys).distinct()
 
     # grouped generation features (f.group_by set): per entity a
     # map<term, value> — the reference's CollectTermValueMap UDAF
@@ -168,17 +183,19 @@ def generate_features(
     # then map_from_entries over the (small, per-entity) term list; no
     # UDAF, both stages whole-stage-codegen. Entries are sorted by term
     # so the map column is deterministic across partitionings.
-    keys = list(spec.key_names)
     for f in grouped:
         gdf = df.withColumn("__term", F.expr(f.group_by).cast("string")) \
                 .where(F.col("__term").isNotNull())
         per_term = gdf.groupBy(*keys, "__term").agg(
-            _agg_col(f, _window_metric(f, cutoff_us), cutoff_us, spec.ts_col).alias("__val"))
+            _agg_col(f, _window_metric(f, metric[f.name]), spec.ts_col).alias("__val"))
         m = per_term.where(F.col("__val").isNotNull()).groupBy(*keys).agg(
             F.map_from_entries(
                 F.array_sort(F.collect_list(F.struct("__term", "__val")))
             ).alias(f.name))
         out = out.join(m, keys, "left")
+    out = out.drop("__cut_us")
+    if not many:
+        out = out.drop("cutoff")
 
     for f in spec.features:
         if f.default is not None and f.group_by is None:
@@ -199,15 +216,19 @@ def generate_features(
 # ---------------------------------------------------------------------------
 
 
+def _row_hash(columns: Sequence[str]):
+    """xxhash64 of the columns (cast to string for type-stability), as a
+    decimal(38,0): a sum of them never overflows under ANSI mode and is
+    folded back to 64 bits driver-side."""
+    cols = [F.coalesce(F.col(c).cast("string"), F.lit("\x00null")) for c in sorted(columns)]
+    return F.xxhash64(*cols).cast("decimal(38,0)")
+
+
 def order_independent_checksum(df: DataFrame) -> int:
-    """Sum of per-row xxhash64 over all columns (cast to string for
-    type-stability) — commutative, so partition/order changes don't move
-    it; computed distributed, one long to the driver."""
-    cols = [F.coalesce(F.col(c).cast("string"), F.lit("\x00null")) for c in sorted(df.columns)]
-    # decimal(38,0) accumulator: never overflows under ANSI mode; folded
-    # back to 64 bits driver-side
-    row = df.select(F.xxhash64(*cols).cast("decimal(38,0)").alias("h"))
-    out = row.agg(F.sum("h").alias("s")).first()
+    """Sum of per-row hashes over all columns — commutative, so
+    partition/order changes don't move it; computed distributed, one long
+    to the driver."""
+    out = df.agg(F.sum(_row_hash(df.columns)).alias("s")).first()
     return int(out["s"]) % (1 << 64) if out["s"] is not None else 0
 
 
@@ -263,6 +284,22 @@ def _commit(part_dir: str, manifest: dict) -> None:
 # ---------------------------------------------------------------------------
 
 
+# cutoffs per write job at most: each one adds two observed aggregates
+_MAX_CHUNK = 32
+
+
+def _chunks(cutoffs: Sequence[int], reach_s: float) -> list[list[int]]:
+    """Consecutive cutoffs spanning at most ``reach_s`` (and at most
+    ``_MAX_CHUNK`` of them): a fact row then reaches at most 2 chunks."""
+    out: list[list[int]] = []
+    for c in sorted(cutoffs):
+        if out and c - out[-1][0] <= reach_s and len(out[-1]) < _MAX_CHUNK:
+            out[-1].append(c)
+        else:
+            out.append([c])
+    return out
+
+
 def materialize(
     fact: DataFrame,
     spec: GenSpec,
@@ -271,92 +308,88 @@ def materialize(
     resume: bool = True,
     with_checksum: bool = True,
     inputs: Sequence[str] = (),
-    parallelism: int = 4,
 ) -> dict:
     """Materialize one snapshot partition per backfill cutoff under
     ``sink_path/cutoff=<epoch>/``, each committed by a lineage manifest.
 
-    Returns a run report: {written: [...], skipped: [...], metrics: {...}}.
-    Re-running after a kill skips every committed partition (north_rule
-    resumability); the data files for a partition are fully rewritten
-    before its manifest appears, so a torn write is re-done, never
-    half-trusted.
+    Returns a run report: {written: [...], skipped: [...], chunks: [...],
+    metrics: {...}}. Re-running after a kill skips every committed
+    partition (north_rule resumability); the data files for a partition
+    are fully rewritten before its manifest appears, so a torn write is
+    re-done, never half-trusted.
 
-    Each cutoff is ONE Spark action: row count and checksum are captured
-    by ``DataFrame.observe`` aggregate metrics inside the write job
-    itself (the reference's serial write → re-read-count → checksum-scan
-    triple executed each partition three times). Cutoffs are submitted
-    from a thread pool (``parallelism`` concurrent jobs) so a thousand
-    backfill steps don't serialize the cluster behind the driver — the
-    reference fans backfill out as parallel jobs the same way
-    (docs/concepts/materializing-features.md:61).
+    The cutoffs to write are cut into chunks of consecutive cutoffs
+    spanning at most the widest window reach, and each chunk is ONE Spark
+    job: :func:`generate_features` evaluates all its cutoffs in one
+    aggregation and one ``partitionBy("cutoff")`` write with dynamic
+    partition overwrite lays out one directory per cutoff. Per-cutoff row
+    counts and checksums are ``DataFrame.observe`` aggregates of that
+    same job, and each cutoff still commits its own manifest.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
     from pyspark.sql import Observation
 
     t_run = time.monotonic()
     cg0 = codegen_counters(fact.sparkSession)
+
+    def part_dir(cutoff: int) -> str:
+        return sink_path.rstrip("/") + f"/cutoff={cutoff}"
+
     todo, skipped = [], []
     for cutoff in backfill.cutoffs():
-        part_dir = sink_path.rstrip("/") + f"/cutoff={cutoff}"
-        if resume and is_committed(part_dir):
-            skipped.append(cutoff)
-        else:
-            todo.append((cutoff, part_dir))
-
-    def _one(item):
-        cutoff, part_dir = item
+        (skipped if resume and is_committed(part_dir(cutoff)) else todo).append(cutoff)
+    chunks = _chunks(todo, _reach_us(spec) / MICROS)
+    lineage = list(inputs) + list(spec.extra_inputs)
+    rows_written = 0
+    for chunk in chunks:
         t0 = time.monotonic()
-        out = generate_features(fact, spec, cutoff)
-        obs = Observation(f"materialize_{cutoff}")
-        metrics = [F.count(F.lit(1)).alias("rows")]
-        if with_checksum:
-            cols = [F.coalesce(F.col(c).cast("string"), F.lit("\x00null"))
-                    for c in sorted(out.columns)]
-            metrics.append(
-                F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("checksum"))
-        out = out.observe(obs, *metrics)
-        out.write.mode("overwrite").parquet(part_dir)
+        for cutoff in chunk:  # dynamic overwrite keeps partitions it writes no row to
+            fsio.delete(part_dir(cutoff), spark=fact.sparkSession)
+        out = generate_features(fact, spec, chunk)
+        row_hash = _row_hash([c for c in out.columns if c != "cutoff"])
+        metrics = []
+        for i, cutoff in enumerate(chunk):
+            mine = F.col("cutoff") == F.lit(cutoff)
+            metrics.append(F.count(F.when(mine, 1)).alias(f"rows_{i}"))
+            if with_checksum:
+                metrics.append(F.sum(F.when(mine, row_hash)).alias(f"checksum_{i}"))
+        obs = Observation()
+        out.observe(obs, *metrics).write.mode("overwrite") \
+            .option("partitionOverwriteMode", "dynamic") \
+            .partitionBy("cutoff").parquet(sink_path)
         got = obs.get
-        n = int(got["rows"])
-        checksum = (int(got["checksum"]) % (1 << 64)
-                    if with_checksum and got.get("checksum") is not None else
-                    (0 if with_checksum else None))
-        _commit(part_dir, {
-            "partition": f"cutoff={cutoff}",
-            "cutoff_epoch_s": cutoff,
-            "inputs": list(inputs) + list(spec.extra_inputs),
-            "features": [f.name for f in spec.features],
-            "keys": list(spec.key_names),
-            "rows": n,
-            "checksum": checksum,
-            "duration_s": round(time.monotonic() - t0, 3),
-            "completed_at_unix": int(time.time()),
-            "engine": "feathr_spark",
-        })
-        return cutoff, n
-
-    if parallelism > 1 and len(todo) > 1:
-        with ThreadPoolExecutor(max_workers=parallelism) as ex:
-            results = list(ex.map(_one, todo))
-    else:
-        results = [_one(it) for it in todo]
-    written = [c for c, _ in results]
-    total_rows = sum(n for _, n in results)
+        duration = round(time.monotonic() - t0, 3)
+        for i, cutoff in enumerate(chunk):
+            n = int(got[f"rows_{i}"])
+            if n == 0:  # no row, no directory: keep the partition readable
+                out.drop("cutoff").limit(0).write.mode("overwrite").parquet(part_dir(cutoff))
+            checksum = (int(got[f"checksum_{i}"] or 0) % (1 << 64)) if with_checksum else None
+            _commit(part_dir(cutoff), {
+                "partition": f"cutoff={cutoff}",
+                "cutoff_epoch_s": cutoff,
+                "inputs": lineage,
+                "features": [f.name for f in spec.features],
+                "keys": list(spec.key_names),
+                "rows": n,
+                "checksum": checksum,
+                "duration_s": duration,
+                "completed_at_unix": int(time.time()),
+                "engine": "feathr_spark",
+            })
+            rows_written += n
     report = {
-        "written": written,
+        "written": todo,
         "skipped": skipped,
+        "chunks": chunks,
         "metrics": {
-            "partitions_written": len(written),
+            "partitions_written": len(todo),
             "partitions_skipped": len(skipped),
-            "rows_written": total_rows,
+            "rows_written": rows_written,
+            "write_jobs": len(chunks),
             "wall_s": round(time.monotonic() - t_run, 3),
         },
         "codegen": codegen_since(fact.sparkSession, cg0),
     }
-    _publish_run_metrics(sink_path, "materialize", report,
-                         inputs=list(inputs) + list(spec.extra_inputs))
+    _publish_run_metrics(sink_path, "materialize", report, inputs=lineage)
     return report
 
 
@@ -404,15 +437,7 @@ def incremental_snapshot(
     if new_us < prev_us:
         raise ValueError("new_cutoff must be >= prev_cutoff")
 
-    df = fact
-    for name, expr in zip(spec.key_names, spec.keys):
-        df = df.withColumn(name, F.expr(expr))
-    df = df.withColumn("__ts", to_epoch_micros(F.expr(spec.ts_col), spec.ts_format))
-    key_nonnull = None
-    for name in spec.key_names:
-        c = F.col(name).isNotNull()
-        key_nonnull = c if key_nonnull is None else (key_nonnull & c)
-    df = df.where(key_nonnull)
+    df = _keyed(fact, spec)
 
     # one scan computes every incoming/expired partial: the union of the
     # per-feature delta intervals is tiny vs the full windows
@@ -424,12 +449,12 @@ def incremental_snapshot(
     delta = df.where((F.col("__ts") > F.lit(lo_scan)) & (F.col("__ts") <= F.lit(new_us)))
 
     aggs = []
-    for f in inc_feats:
+    for f, dtype in zip(inc_feats, metric_types(df, inc_feats)):
         prev_lo = prev_us - f.window.width_us - f.window.delay_us
         new_lo = new_us - f.window.width_us - f.window.delay_us
         prev_hi = prev_us - f.window.delay_us
         new_hi = new_us - f.window.delay_us
-        m = _metric(f)
+        m = metric_expr(f, dtype)
         base = F.when(m.isNotNull(), m.cast("double"))
         inc_mask = (F.col("__ts") > F.lit(prev_hi)) & (F.col("__ts") <= F.lit(new_hi))
         exp_mask = (F.col("__ts") > F.lit(prev_lo)) & (F.col("__ts") <= F.lit(new_lo))

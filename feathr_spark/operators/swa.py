@@ -32,7 +32,9 @@ Two physical strategies, picked automatically:
 
 Shared optimizations (reference parity):
 - fact time-range prefilter ``[min_obs - max(width+delay), max_obs - min(delay)]``
-  (AnchorToDataSourceMapper.scala:105-145) → partition pruning at the scan
+  (AnchorToDataSourceMapper.scala:105-145) → partition pruning at the scan;
+  an unbounded window (``WindowSpec(math.inf)``, the planner's as-of
+  LATEST) drops the lower bound
 - null-key observation segregation: null keys never match and are
   unioned back with null features (SlidingWindowJoinIterator.scala:350-353,
   SlidingWindowAggregationJoiner.scala:232-234,275-278)
@@ -87,12 +89,34 @@ def _with_keys_ts(df: DataFrame, keys: Sequence[str], ts: str, ts_format: str) -
     return out.withColumn("__ts", to_epoch_micros(F.expr(ts), ts_format))
 
 
-def _metric_expr(f: SWAFeature):
+def metric_types(df: DataFrame, features: Sequence[SWAFeature]) -> list:
+    """The type of each feature's metric over ``df``, in one analysis."""
+    return [fld.dataType for fld in df.select(*[F.expr(f.metric) for f in features]).schema]
+
+
+def _nan_as_null(c, dtype: T.DataType):
+    """``c`` with a float NaN, at any struct depth, made null; ``c``
+    itself when ``dtype`` holds no float."""
+    if isinstance(dtype, (T.FloatType, T.DoubleType)):
+        return F.when(~F.isnan(c), c)
+    if isinstance(dtype, T.StructType):
+        kids = [(fld.name, c.getField(fld.name), fld.dataType) for fld in dtype.fields]
+        new = [_nan_as_null(k, t) for _, k, t in kids]
+        if any(n is not k for n, (_, k, _) in zip(new, kids)):
+            return F.when(c.isNotNull(), F.struct(*[
+                n.alias(name) for n, (name, _, _) in zip(new, kids)]))
+    return c
+
+
+def metric_expr(f: SWAFeature, dtype: T.DataType):
     """Metric column expr with the reference's COUNT rewrite and filter
     fold (CASE WHEN filter THEN metric ELSE NULL END,
     FeatureTransformer.scala:24-46; COUNT rewrite
-    SlidingWindowFeatureUtils.scala:184-188)."""
-    raw = F.expr(f.metric)
+    SlidingWindowFeatureUtils.scala:184-188). A NaN metric (or struct
+    field) is null: float nulls cross Arrow as NaN and pandas NaN comes
+    back null, so that is the one rule every SWA strategy and generation
+    can share."""
+    raw = _nan_as_null(F.expr(f.metric), dtype)
     if f.agg == "COUNT":
         raw = F.when(raw.isNotNull(), F.lit(1)).otherwise(F.lit(0))
     if f.filter:
@@ -181,12 +205,12 @@ def _time_prefilter(obs: DataFrame, fact: DataFrame, features: Sequence[SWAFeatu
         if rng is None or rng["lo"] is None:
             return fact
         lo, hi = rng["lo"], rng["hi"]
-    reach_back = max(f.window.width_us + f.window.delay_us for f in features)
     min_delay = min(f.window.delay_us for f in features)
-    return fact.where(
-        (F.col("__ts") > F.lit(int(lo) - reach_back))
-        & (F.col("__ts") <= F.lit(int(hi) - min_delay))
-    )
+    keep = F.col("__ts") <= F.lit(int(hi) - min_delay)
+    if not any(f.window.unbounded for f in features):
+        reach_back = max(f.window.width_us + f.window.delay_us for f in features)
+        keep = keep & (F.col("__ts") > F.lit(int(lo) - reach_back))
+    return fact.where(keep)
 
 
 # ---------------------------------------------------------------------------
@@ -206,13 +230,14 @@ def _swa_union(obs: DataFrame, fact_proj: DataFrame, features, metric_col,
     # Window's ClusteredDistribution, so no second shuffle appears.
     unioned = unioned.repartition(_default_buckets(obs), *part_cols)
 
-    out = unioned
+    cols = {}
     for f in features:
-        w = (
-            Window.partitionBy(*part_cols)
-            .orderBy("__ts")
-            .rangeBetween(-(f.window.width_us + f.window.delay_us) + 1, -f.window.delay_us)
-        )
+        # an unbounded frame grows one running state per partition; a
+        # huge finite one would re-aggregate its whole buffer per row
+        lo = Window.unboundedPreceding if f.window.unbounded \
+            else -(f.window.width_us + f.window.delay_us) + 1
+        w = Window.partitionBy(*part_cols).orderBy("__ts") \
+            .rangeBetween(lo, -f.window.delay_us)
         m = F.col(metric_col[f.name])
         if f.agg in ("SUM", "COUNT"):
             col = F.sum(m).over(w)
@@ -233,9 +258,10 @@ def _swa_union(obs: DataFrame, fact_proj: DataFrame, features, metric_col,
             col = F.when(nonnull > 0, F.size(F.collect_set(m).over(w)).cast("long"))
         else:  # pragma: no cover - routed to cogroup by the picker
             raise ValueError(f"union strategy cannot evaluate {f.agg}")
-        out = out.withColumn(f.name, col)
-
-    return out.where(F.col("__is_obs") == 1)
+        cols[f.name] = col
+    # one projection: every frame (and any precomputed frame argument,
+    # e.g. LATEST's order struct) lands in ONE Window node
+    return unioned.withColumns(cols).where(F.col("__is_obs") == 1)
 
 
 # ---------------------------------------------------------------------------
@@ -530,14 +556,15 @@ def _swa_cogroup(obs: DataFrame, fact_proj: DataFrame, features, metric_col, n_k
             # positional rename to the internal widened key columns
             hot_keys_df = hot_keys_df.select(*[
                 F.col(c).alias(f"__k{i}") for i, c in enumerate(hot_keys_df.columns)])
-        # every SWA window is bounded, so hot keys default to TIME-SLICED
-        # salting: chunk width = the widest effective window, each fact
-        # row copied into <= 2 chunks (see _salt). ``salt_mode="replicate"``
-        # restores full replication (e.g. when the whole observed
-        # timeline is shorter than a couple of window widths).
+        # bounded windows let hot keys default to TIME-SLICED salting:
+        # chunk width = the widest effective window, each fact row copied
+        # into <= 2 chunks (see _salt). ``salt_mode="replicate"`` (and any
+        # unbounded window) restores full replication (e.g. when the whole
+        # observed timeline is shorter than a couple of window widths).
         span_us = max((f.window.width_us + f.window.delay_us) for f in features)
         lo_shift_us = min(0, min(f.window.delay_us for f in features))
-        slice_w = span_us if (salt_mode != "replicate" and span_us > 0) else None
+        slice_w = span_us if (salt_mode != "replicate" and span_us > 0
+                              and not any(f.window.unbounded for f in features)) else None
         obs, fact_proj = _salt(obs, fact_proj, n_keys, hot_key_threshold or 0,
                                salt_buckets, hot_key_method, hot_keys_df,
                                slice_width_us=slice_w, span_us=span_us,
@@ -748,14 +775,14 @@ def join_window_agg_features(
     # fact projection: keys + ts + deduped metric columns (+ group cols)
     metric_col: dict[str, str] = {}
     proj_exprs: dict[str, object] = {}
-    for i, f in enumerate(features):
+    for i, (f, dtype) in enumerate(zip(features, metric_types(fact2, features))):
         sig = (f.metric, f.filter, f.agg == "COUNT")
         existing = next((n for n, s in proj_exprs.items() if s[0] == sig), None)
         if existing is not None and f.group_by is None:
             metric_col[f.name] = existing
         else:
             cname = f"__m{i}"
-            expr = _metric_expr(f)
+            expr = metric_expr(f, dtype)
             if f.agg in _NUMERIC_AGGS or f.agg == "COUNT" or f.group_by is not None:
                 expr = expr.cast("double")
             proj_exprs[cname] = (sig, expr)

@@ -5,21 +5,23 @@ DataFrameFeatureJoiner.scala:128-315) Spark-first:
 
 1. classify features into passthrough / window-agg / snapshot-anchored
    groups (FeatureGroups.scala:11-31)
-2. group window-agg features by (source, key-expressions) so each source
-   is SCANNED ONCE for the max window across its features
-   (SlidingWindowAggregationJoiner.scala:147-171 — the engine's
-   time-range prefilter already spans all features passed per call)
+2. one window pass per (source, key-expressions, lateral view): the
+   group's window-agg features AND its time-stamped snapshot anchors
+   (LATEST as-of lookups, AnchoredFeatureJoinStep.scala:112-188,
+   "closest from the past", each an unbounded LATEST of its feature
+   struct) share ONE scan and ONE exchange of the fact table, the time
+   prefilter spanning the max window
+   (SlidingWindowAggregationJoiner.scala:147-171)
 3. stage ordering: fewer-feature stages first, shrinking the shuffled
    observation early (MultiStageJoinPlanner.scala:137-140)
-4. snapshot anchors: dedup right side on keys + left join; with a
-   timestamp column declared they become LATEST as-of lookups
-   (AnchoredFeatureJoinStep.scala:112-188, "closest from the past")
+4. snapshot anchors without a timestamp: dedup right side on keys +
+   left join
 5. sequential/lookup features (SequentialJoinAsDerivation.scala:44-167):
    a scalar base left-joins the expansion's per-key aggregate by value,
    so the observation is read once; only an array-valued base explodes,
    joins and regroups by a content-derived row uid
-6. derived features applied in dependency order, then column pruning to
-   the requested list (DataFrameFeatureJoiner.scala:276-311)
+6. derived features applied in dependency order, then (7) column
+   pruning to the requested list (DataFrameFeatureJoiner.scala:276-311)
 
 Catalyst does predicate pushdown/column pruning through every step, so
 the planner only decides scan-sharing and join order — exactly the two
@@ -28,6 +30,7 @@ things Catalyst cannot infer across feature definitions.
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass, field, replace
 from typing import Optional, Sequence
 
@@ -44,7 +47,6 @@ from feathr_spark.definitions import (
     SWAFeature,
     WindowSpec,
 )
-from feathr_spark.operators.asof import asof_join
 from feathr_spark.operators.derived import apply_derived_in_order
 from feathr_spark.operators.lookup import lookup_join
 from feathr_spark.operators.swa import content_uid_inputs, join_window_agg_features
@@ -104,9 +106,16 @@ def _effective_lateral(anchor: Anchor, feat) -> tuple:
     return (anchor.lateral_view, anchor.lateral_view_alias, anchor.lateral_view_filter)
 
 
+def _with_default(col, feat):
+    return col if feat.default is None else F.coalesce(col, F.lit(feat.default))
+
+
 def _source_key(anchor: Anchor) -> tuple:
+    """Anchors with equal keys read the same fact rows on the same
+    timeline, so they can share one stage."""
     s = anchor.source
-    return (s.path, s.fmt, tuple(sorted((s.options or {}).items())),
+    return (s.path, s.fmt, tuple(sorted((s.options or {}).items())), s.preprocessing,
+            s.timestamp_col, s.timestamp_format,
             tuple(anchor.keys), tuple(anchor.obs_keys or ()),
             id(anchor.extractor) if getattr(anchor, "extractor", None) else None)
 
@@ -295,23 +304,44 @@ def join_features(
         for f in feats:
             out = out.withColumn(f.name, F.expr(f.expr))
 
-    # (2) window-agg stages: one engine call per (source, keys,
-    # effective-lateral-view) group — the scan is shared and the time
-    # prefilter spans the max window. Features with different lateral
-    # views on the SAME anchor land in different stages (each needs its
-    # own explode), per-feature lateralView parity.
-    swa_by_source: dict[tuple, list] = {}
+    # An anchor that is only a lookup's expansion anchor is not joined:
+    # stage (5) loads it itself, and joining it would key it on the
+    # observation and carry its columns to the final prune. Without a
+    # requested list, or with a derived feature that declares no inputs,
+    # every anchor's columns may be read.
+    wanted = set(requested or ()) | {lk.base_feature for lk in lookups} \
+        | {i for d in derived for i in d.inputs}
+    expansion_only = set() if requested is None or not all(d.inputs for d in derived) \
+        else {a.name for a, _ in expansions.values()
+              if not any(f.name in wanted for f in a.features)}
+    snapshot = [t for t in groups.snapshot if t[0].name not in expansion_only]
+
+    # (2) fact stages: one window pass per (source, keys,
+    # effective-lateral-view) group — the scan and the exchange are
+    # shared and the time prefilter spans the max window. Features with
+    # different lateral views on the SAME anchor land in different stages
+    # (each needs its own explode), per-feature lateralView parity. A
+    # time-stamped snapshot anchor joins its group's pass as one
+    # unbounded LATEST of a struct of its features: the fact row with the
+    # largest ts <= obs ts - delay, ties to the largest payload hash (the
+    # as-of rule), field nulls kept since the struct itself is never null.
+    stages: dict[tuple, list] = {}
+    asof: dict[str, list] = {}   # struct column -> the anchor's features
     for a, feats in groups.window_agg:
         for f in feats:
-            lv = _effective_lateral(a, f)
-            swa_by_source.setdefault((_source_key(a), lv), []).append((a, f))
-    stages = sorted(swa_by_source.values(), key=len)
+            stages.setdefault((_source_key(a), _effective_lateral(a, f)), []).append((a, f))
+    for a, feats in snapshot:
+        if a.source.timestamp_col and feats:
+            row = SWAFeature(f"_asof_{a.name}", "LATEST", "named_struct(" + ", ".join(
+                f"'{f.name}', {f.expr}" for f in feats) + ")", WindowSpec(math.inf))
+            stages.setdefault((_source_key(a), _effective_lateral(a, row)), []).append((a, row))
+            asof[row.name] = feats
     # Observation time range computed ONCE on the pre-stage observation
-    # and passed to every SWA stage: stage N's input embeds stages
-    # 1..N-1's work, so letting each stage's _time_prefilter run its own
-    # min/max action would re-execute the whole upstream DAG per stage —
-    # a driver-action-per-stage scale hazard. Obs timestamps never
-    # change as feature columns append, so one range serves all stages.
+    # and passed to every stage: stage N's input embeds stages 1..N-1's
+    # work, so letting each stage's _time_prefilter run its own min/max
+    # action would re-execute the whole upstream DAG per stage — a
+    # driver-action-per-stage scale hazard. Obs timestamps never change
+    # as feature columns append, so one range serves all stages.
     obs_range = None
     if stages:
         from feathr_spark.functions.timestamps import to_epoch_micros
@@ -321,10 +351,10 @@ def join_features(
         ).agg(F.min("__t").alias("lo"), F.max("__t").alias("hi")).first()
         if rng is not None and rng["lo"] is not None:
             obs_range = (int(rng["lo"]), int(rng["hi"]))
-    for grp in stages:
+    # (3) fewer-feature stages first
+    for grp in sorted(stages.values(), key=len):
         a0 = grp[0][0]
-        lv0 = _effective_lateral(a0, grp[0][1])
-        fact = _apply_lateral_view(_load_raw(a0), *lv0)
+        fact = _apply_lateral_view(_load_raw(a0), *_effective_lateral(a0, grp[0][1]))
         feats = [f for _, f in grp]
         if sim:
             feats = [replace(f, window=WindowSpec(f.window.width, f.window.delay + sim))
@@ -338,50 +368,31 @@ def join_features(
             fact_ts_format=a0.source.timestamp_format,
             obs_time_range=obs_range,
         )
+        for row in (f.name for f in feats if f.name in asof):
+            out = out.withColumns({f.name: _with_default(F.col(row).getField(f.name), f)
+                                   for f in asof[row]}).drop(row)
         out = _stage_done(out)
 
-    # (3) snapshot anchors: as-of LATEST when the source is time-stamped,
-    # plain dedup+left-join otherwise. An anchor that is only a lookup's
-    # expansion anchor is not joined: stage (4) loads it itself, and
-    # joining it would key it on the observation and carry its columns
-    # to the final prune. Without a requested list, or with a derived
-    # feature that declares no inputs, every anchor's columns may be read.
-    wanted = set(requested or ()) | {lk.base_feature for lk in lookups} \
-        | {i for d in derived for i in d.inputs}
-    expansion_only = set() if requested is None or not all(d.inputs for d in derived) \
-        else {a.name for a, _ in expansions.values()
-              if not any(f.name in wanted for f in a.features)}
-    snap_sorted = sorted((t for t in groups.snapshot if t[0].name not in expansion_only),
-                         key=lambda t: len(t[1]))
-    for a, feats in snap_sorted:
+    # (4) snapshot anchors without a timestamp: dedup on keys + left join
+    for a, feats in sorted(snapshot, key=lambda t: len(t[1])):
+        if a.source.timestamp_col:
+            continue
         src = _load(a)
         anchor_dfs[a.name] = src
-        if a.source.timestamp_col:
-            out = asof_join(
-                out, src, a.obs_keys or settings.keys, a.keys,
-                obs_ts_col, a.source.timestamp_col,
-                [f"{f.expr} as {f.name}" for f in feats],
-                obs_ts_format=obs_ts_format,
-                fact_ts_format=a.source.timestamp_format,
-                delay=sim,
-            )
-        else:
-            kcols = [f"__sk{i}" for i in range(len(a.keys))]
-            proj = src.select(
-                *[F.expr(k).alias(kc) for k, kc in zip(a.keys, kcols)],
-                *[F.expr(f.expr).alias(f.name) for f in feats],
-            ).dropDuplicates(kcols)
-            cond = None
-            for okey, kc in zip(a.obs_keys or settings.keys, kcols):
-                c = F.expr(okey).eqNullSafe(F.col(kc)) & F.expr(okey).isNotNull()
-                cond = c if cond is None else (cond & c)
-            out = out.join(proj, cond, "left").drop(*kcols)
-        for f in feats:
-            if f.default is not None:
-                out = out.withColumn(f.name, F.coalesce(F.col(f.name), F.lit(f.default)))
+        kcols = [f"__sk{i}" for i in range(len(a.keys))]
+        proj = src.select(
+            *[F.expr(k).alias(kc) for k, kc in zip(a.keys, kcols)],
+            *[F.expr(f.expr).alias(f.name) for f in feats],
+        ).dropDuplicates(kcols)
+        cond = None
+        for okey, kc in zip(a.obs_keys or settings.keys, kcols):
+            c = F.expr(okey).eqNullSafe(F.col(kc)) & F.expr(okey).isNotNull()
+            cond = c if cond is None else (cond & c)
+        out = out.join(proj, cond, "left").drop(*kcols)
+        out = out.withColumns({f.name: _with_default(F.col(f.name), f) for f in feats})
         out = _stage_done(out)
 
-    # (4) sequential/lookup features over joined base values. A scalar
+    # (5) sequential/lookup features over joined base values. A scalar
     # base joins the expansion's per-key aggregate by value. An array
     # base regroups per row by a uid that must agree across lookup_join's
     # two reads of its obs and across task retries: a content-derived
@@ -414,10 +425,10 @@ def join_features(
         )
     out = out.drop("__lk_uid")
 
-    # (5) derived features in dependency order
+    # (6) derived features in dependency order
     out = apply_derived_in_order(out, derived)
 
-    # (6) prune to requested features (+ observation columns)
+    # (7) prune to requested features (+ observation columns)
     if obs_ts_col == "__now_ts":
         out = out.drop("__now_ts")
     if requested is not None:

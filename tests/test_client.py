@@ -411,13 +411,17 @@ def test_lookup_expansion_anchor_is_not_joined_onto_the_observation(spark):
 
 
 def test_client_plan_evaluates_each_stage_once(spark):
-    """A scalar-base lookup joins a per-key aggregate by value, so the
-    observation is read once: one Window for the SWA pass and one for the
-    as-of pass, and no exchange or aggregate keyed on a row hash."""
+    """The SWA anchor and the as-of anchor share one source and key, so
+    one fact exchange feeds one Window for both; a scalar-base lookup
+    joins a per-key aggregate by value, so the observation is read once,
+    and no exchange or aggregate is keyed on a row hash."""
     out = _doc_lookup_query(spark)
     nodes = list(_plan_nodes(out._jdf.queryExecution().executedPlan()))
     kinds = [n.getClass().getSimpleName() for n in nodes]
-    assert kinds.count("WindowExec") == 2, kinds
+    assert kinds.count("WindowExec") == 1, kinds
+    fact_exchanges = [n for n, k in zip(nodes, kinds) if k == "ShuffleExchangeExec"
+                      and "hashpartitioning(__k0" in n.simpleString(1000)]
+    assert len(fact_exchanges) == 1, [n.simpleString(1000) for n in fact_exchanges]
     for node, kind in zip(nodes, kinds):
         text = node.simpleString(1000)
         assert "__lk_uid" not in text, text

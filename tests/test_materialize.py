@@ -224,3 +224,50 @@ def test_run_metrics_report_codegen(spark, fact, tmp_path):
         assert cg == report["codegen"]
         assert set(cg) == {"compiles", "compile_s"}
         assert cg["compiles"] >= 0 and cg["compile_s"] >= 0
+
+
+def test_multi_chunk_backfill_matches_per_cutoff_generation(spark, tmp_path):
+    """20 daily cutoffs over a 2-day reach run as chunks of 3 cutoffs,
+    one write job each; every manifest equals a per-cutoff
+    ``generate_features`` (cutoffs past the data write empty, readable
+    partitions), and a lost manifest regenerates only its cutoff."""
+    day = 86400
+    rows = [(f"u{i % 3}", T0 + h * 6 * 3600 + i, float(h * i % 7) if h % 5 else None)
+            for h in range(40) for i in range(3)]
+    fact = spark.createDataFrame(rows, "uid string, ts long, v double")
+    spec = GenSpec(keys=["uid"], key_names=["uid"], ts_col="ts", features=[
+        SWAFeature("v_sum_2d", "SUM", "v", WindowSpec(2 * day)),
+        SWAFeature("v_cnt_1d", "COUNT", "v", WindowSpec(day, delay=3600)),
+        SWAFeature("v_latest_1d", "LATEST", "v", WindowSpec(day)),
+        SWAFeature("v_since_2d", "TIMESINCE", "v", WindowSpec(2 * day)),
+    ])
+    bf = BackfillTime(T0 + day, T0 + 20 * day, day)
+    sink = str(tmp_path / "chunks")
+    rpt = materialize(fact, spec, sink, bf)
+    assert rpt["chunks"] == [bf.cutoffs()[i:i + 3] for i in range(0, 20, 3)]
+    assert rpt["metrics"]["write_jobs"] == 7
+    from feathr_spark.materialize import read_run_metrics
+    assert read_run_metrics(sink)["chunks"] == rpt["chunks"]
+
+    def manifest(c):
+        return read_manifest(os.path.join(sink, f"cutoff={c}"))
+
+    for c in bf.cutoffs():
+        one = generate_features(fact, spec, c)
+        m = manifest(c)
+        assert (m["rows"], m["checksum"]) == (one.count(), order_independent_checksum(one)), c
+        assert spark.read.parquet(os.path.join(sink, f"cutoff={c}")).columns == one.columns
+    assert manifest(bf.cutoffs()[-1])["rows"] == 0
+
+    before = {c: manifest(c) for c in bf.cutoffs()}
+    victim = bf.cutoffs()[7]
+    os.remove(os.path.join(sink, f"cutoff={victim}", "_manifest.json"))
+    again = materialize(fact, spec, sink, bf)
+    assert again["written"] == [victim] and again["chunks"] == [[victim]]
+    after = {c: manifest(c) for c in bf.cutoffs()}
+    for c in bf.cutoffs():
+        same = ("rows", "checksum") if c == victim else tuple(before[c])
+        assert {k: after[c][k] for k in same} == {k: before[c][k] for k in same}, c
+    loaded = load_materialized(spark, sink)
+    assert order_independent_checksum(loaded.drop("cutoff")) == \
+        sum(m["checksum"] for m in after.values()) % (1 << 64)

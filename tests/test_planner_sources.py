@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import math
 import os
+from dataclasses import replace
 
 import pytest
 
@@ -453,3 +454,68 @@ def test_planner_single_time_range_action(spark, frames, monkeypatch):
     got = {(r["obs_id"]): (r["v_sum_1d"], r["v_max_2d"]) for r in out}
     assert got[1] == (12.0, 7.0) and got[2] == (11.0, 11.0)
     assert got[3] == (None, None)
+
+
+def test_stage_grouping_keys_on_preprocessing_and_timestamp(spark):
+    """Anchors over one path that differ in preprocessing or in the
+    timestamp column read different facts, so they never share a stage."""
+    fact = spark.createDataFrame([(1, 10, 100, 1.0), (1, 20, 0, 5.0)],
+                                 "k long, ts long, ts2 long, v double")
+    obs = spark.createDataFrame([(1, 30)], "k long, t long")
+    win = WindowSpec(100)
+    anchors = [
+        Anchor("all", Source("mem://f", timestamp_col="ts"), ["k"],
+               [SWAFeature("s_all", "SUM", "v", win)]),
+        Anchor("big", Source("mem://f", timestamp_col="ts",
+                             preprocessing=lambda df: df.where("v > 2")), ["k"],
+               [SWAFeature("s_big", "SUM", "v", win)]),
+        Anchor("ts2", Source("mem://f", timestamp_col="ts2"), ["k"],
+               [SWAFeature("s_ts2", "SUM", "v", win)]),
+    ]
+    row = join_features(spark, obs, ObservationSettings(keys=["k"], timestamp_col="t"),
+                        anchors, source_cache={"mem://f": fact}).first()
+    assert (row["s_all"], row["s_big"], row["s_ts2"]) == (6.0, 5.0, 5.0)
+
+
+@pytest.mark.parametrize("swa_agg", [None, "SUM", "COUNT_DISTINCT"])
+def test_asof_anchor_rides_the_window_stage(spark, swa_agg):
+    """A time-stamped snapshot anchor is evaluated in its source's window
+    pass — alone, beside a union-routed SWA feature, or beside one that
+    ``auto`` routes to cogroup — and equals ``asof_join``: ties at one ts
+    go to the largest payload hash, nulls in the picked row stay, the
+    simulated delay shifts the match, null keys never match. A NaN field
+    reads null, the NaN rule every SWA strategy shares."""
+    from feathr_spark.operators.asof import asof_join
+    from feathr_spark.operators.swa import join_window_agg_features
+
+    fact = spark.createDataFrame(
+        [("x", 50, 1.0, "p"), ("x", 50, 2.0, None), ("x", 50, None, "o"),
+         ("x", 80, None, "q"), ("x", 95, 7.0, "late"), ("y", 30, 3.0, "r"),
+         ("y", 35, float("nan"), "s"),
+         (None, 40, 9.0, "n"), ("y", None, 4.0, "t")],
+        "k string, ts long, a double, b string")
+    obs = spark.createDataFrame(
+        [(1, "x", 100), (2, "x", 60), (3, "y", 100), (4, None, 100), (5, "z", 100),
+         (6, "x", None), (7, "x", 55)],
+        "obs_id long, k string, t long")
+    src = Source("mem://f", timestamp_col="ts")
+    swa = [SWAFeature("s", swa_agg, "b" if swa_agg == "COUNT_DISTINCT" else "a",
+                      WindowSpec(100))] if swa_agg else []
+    anchors = [Anchor("snap", src, ["k"], [Feature("fa", "a"), Feature("fb", "b", default="-")])]
+    anchors += [Anchor("win", src, ["k"], swa)] if swa else []
+    settings = ObservationSettings(keys=["k"], timestamp_col="t", simulate_time_delay=10)
+    out = join_features(spark, obs, settings, anchors, source_cache={"mem://f": fact})
+    want = asof_join(obs, fact, ["k"], ["k"], "t", "ts", ["a as fa", "b as fb"], delay=10)
+    got = {r["obs_id"]: (r["fa"], r["fb"]) for r in out.collect()}
+    assert got == {r["obs_id"]: (None if math.isnan(r["fa"] or 0) else r["fa"], r["fb"] or "-")
+                   for r in want.collect()}
+    assert got[1] == (None, "q") and got[3] == (None, "s") and got[4] == (None, "-")
+    if swa:
+        direct = join_window_agg_features(obs, fact, ["k"], ["k"], "t", "ts",
+                                          [replace(swa[0], window=WindowSpec(100, 10))])
+        assert {r["obs_id"]: r["s"] for r in out.collect()} == \
+            {r["obs_id"]: r["s"] for r in direct.collect()}
+    # the final adaptive plan, without the initial plan printed after it
+    plan = out._jdf.queryExecution().executedPlan().toString().split("Initial Plan")[0]
+    assert "FlatMapCoGroupsInPandas" in plan if swa_agg == "COUNT_DISTINCT" else \
+        plan.count("Window [") == 1

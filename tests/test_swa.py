@@ -707,3 +707,25 @@ def test_dense_codes_keep_high_cardinality_composite_keys_global():
     # matches are contiguous in (key, ts) order, so [lo, hi) is exact
     assert (lo[hit] == want["min"].to_numpy()[hit]).all()
     assert (hi[hit] - 1 == want["max"].to_numpy()[hit]).all()
+
+
+def test_nan_metric_is_null_on_every_path(spark):
+    """A NaN metric is null for SWA on both strategies and for
+    ``generate_features``: it is skipped by every aggregate and not
+    counted."""
+    from feathr_spark.materialize import GenSpec, generate_features
+
+    obs = spark.createDataFrame([(1, "a", 100)], "obs_id long, k string, ts long")
+    fact = spark.createDataFrame([("a", 40, 1.0), ("a", 50, float("nan"))],
+                                 "k string, ts long, v double")
+    feats = [SWAFeature(f"v_{agg.lower()}", agg, "v", WindowSpec(100))
+             for agg in ("LATEST", "MAX", "MIN", "SUM", "AVG", "COUNT")]
+    want = {"v_latest": 1.0, "v_max": 1.0, "v_min": 1.0, "v_sum": 1.0, "v_avg": 1.0,
+            "v_count": 1}
+    for strategy in STRATEGIES:
+        row = join_window_agg_features(obs, fact, ["k"], ["k"], "ts", "ts", feats,
+                                       strategy=strategy).first()
+        assert {f.name: row[f.name] for f in feats} == want, strategy
+    spec = GenSpec(keys=["k"], key_names=["k"], ts_col="ts", features=feats)
+    row = generate_features(fact, spec, 100).first()
+    assert {f.name: row[f.name] for f in feats} == want
