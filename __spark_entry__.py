@@ -728,17 +728,26 @@ def q_asof_fused(spark, sf_dir):
 
 def q_asof_cogroup(spark, sf_dir):
     """Salted as-of (row name kept from the deleted as-of cogroup kernel):
-    the union strategy with hot-key salting forced on — users with more
-    than 15 purchases (4 of them at sf0.001) replicate their fact history
-    into every salt bucket. Must equal the unsalted oracle."""
-    from feathr_spark import asof_join
+    an unbounded LATEST of the fact ts on the SWA cogroup kernel with
+    hot-key salting forced on — users with more than 15 purchases (4 of
+    them at sf0.001) replicate their fact history into every salt
+    bucket — then asof_fetch of the payload. Must equal the unsalted
+    oracle."""
+    import math
+
+    from feathr_spark import SWAFeature, WindowSpec, asof_fetch, join_window_agg_features
+    from feathr_spark.functions.timestamps import to_epoch_micros
 
     ev, obs = _events_obs(spark, sf_dir)
-    purchases = ev.where("event_type = 'purchase'")
-    out = asof_join(obs, purchases, ["user_id"], ["user_id"], "ts", "ts",
-                    ["value as last_purchase_value"], obs_ts_format="timestamp",
-                    fact_ts_format="timestamp", strategy="union",
-                    hot_key_threshold=15, salt_buckets=4)
+    purch = ev.where("event_type = 'purchase'") \
+        .withColumn("ts_d", to_epoch_micros("ts", "timestamp"))
+    vec = join_window_agg_features(
+        obs, purch, ["user_id"], ["user_id"], "ts", "ts",
+        [SWAFeature("m_ts", "LATEST", "ts_d", WindowSpec(math.inf))],
+        obs_ts_format="timestamp", fact_ts_format="timestamp",
+        strategy="cogroup", hot_key_threshold=15, salt_buckets=4)
+    out = asof_fetch(vec, purch, ["user_id"], ["user_id"], "m_ts", "ts_d",
+                     ["value as last_purchase_value"])
     return out.select("event_id", F.round("last_purchase_value", 4).alias("last_purchase_value"))
 
 

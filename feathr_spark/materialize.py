@@ -94,7 +94,7 @@ def _window_metric(f: SWAFeature, m):
     return F.when(in_win, m)
 
 
-def _agg_col(f: SWAFeature, m, ts_col: str):
+def _agg_col(f: SWAFeature, m, dtype, ts_col: str):
     if f.agg == "SUM":
         return F.sum(m)
     if f.agg == "COUNT":
@@ -107,7 +107,7 @@ def _agg_col(f: SWAFeature, m, ts_col: str):
         return F.max(m)
     if f.agg == "LATEST":
         # null metrics ignored (reference LATEST skips nulls); ts ties as in SWA
-        return latest_by(m, F.col("__ts"), f.metric != ts_col)
+        return latest_by(m, F.col("__ts"), dtype if f.metric != ts_col else None)
     if f.agg == "TIMESINCE":
         return (F.col("__cut_us") - F.max(F.when(m.isNotNull(), F.col("__ts")))) / F.lit(MICROS)
     if f.agg in ("COUNT_DISTINCT",):
@@ -163,14 +163,15 @@ def generate_features(
         .withColumn("cutoff", F.col("__cut.cutoff")) \
         .withColumn("__cut_us", F.col("__cut.us")).drop("__cut")
     keys = ["cutoff", "__cut_us", *spec.key_names]
-    metric = {f.name: metric_expr(f, t)
-              for f, t in zip(spec.features, metric_types(df, spec.features))}
+    mtype = dict(zip([f.name for f in spec.features], metric_types(df, spec.features)))
+    metric = {f.name: metric_expr(f, mtype[f.name]) for f in spec.features}
 
     plain = [f for f in spec.features if f.group_by is None]
     grouped = [f for f in spec.features if f.group_by is not None]
 
     if plain:
-        aggs = [_agg_col(f, _window_metric(f, metric[f.name]), spec.ts_col).alias(f.name)
+        aggs = [_agg_col(f, _window_metric(f, metric[f.name]), mtype[f.name],
+                         spec.ts_col).alias(f.name)
                 for f in plain]
         out = df.groupBy(*keys).agg(*aggs)
     else:
@@ -187,7 +188,8 @@ def generate_features(
         gdf = df.withColumn("__term", F.expr(f.group_by).cast("string")) \
                 .where(F.col("__term").isNotNull())
         per_term = gdf.groupBy(*keys, "__term").agg(
-            _agg_col(f, _window_metric(f, metric[f.name]), spec.ts_col).alias("__val"))
+            _agg_col(f, _window_metric(f, metric[f.name]), mtype[f.name],
+                     spec.ts_col).alias("__val"))
         m = per_term.where(F.col("__val").isNotNull()).groupBy(*keys).agg(
             F.map_from_entries(
                 F.array_sort(F.collect_list(F.struct("__term", "__val")))

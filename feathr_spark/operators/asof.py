@@ -2,53 +2,49 @@
 
 For every observation row, fetch the requested fact columns from the
 latest fact row with ``fact_ts <= obs_ts - delay`` for the same entity
-key (optionally within ``tolerance`` seconds) — the "closest from the
-past" semantics of the reference's point-in-time join
-(docs/concepts/point-in-time-join.md:19-77). Rows with no match keep
-nulls (left outer); null observation keys never match.
+key (with a ``tolerance``, also ``fact_ts > obs_ts - delay - tolerance``)
+— the "closest from the past" semantics of the reference's
+point-in-time join (docs/concepts/point-in-time-join.md:19-77). Rows
+with no match keep nulls (left outer); null observation keys never
+match.
 
-One match formulation plus one fetch — a join over a UNION ALL with the
-payload join pushed past it:
+An as-of match is a sliding-window ``LATEST`` over ``(t - tolerance -
+delay, t - delay]``, unbounded without a tolerance, so both strategies
+are one :func:`~feathr_spark.operators.swa.join_window_agg_features`
+pass:
 
-- ``union`` (default, pure JVM): union obs+fact rows on (key, ts),
-  compute ``last(value, ignorenulls=True)`` over
-  ``Window.partitionBy(key).orderBy(ts, is_obs)`` with an unbounded
-  preceding row frame, keep obs rows. Fact rows sort before obs rows at
-  the same timestamp, so a fact row AT the observation time is matched
-  (right-inclusive). Single shuffle + sort, whole-stage codegen.
-  Tolerance is enforced by also carrying the matched fact ts. Hot keys
-  salt in replicate mode (``hot_key_threshold``).
+- ``union`` (default): ``LATEST`` of one ``named_struct`` of the value
+  columns (:func:`latest_row`), unpacked into the output columns
+  (:func:`unpack_latest_row`). The matched row is picked atomically;
+  rows sharing a ts go to the largest ``swa.payload_hash``. The planner
+  evaluates a time-stamped snapshot anchor with the same two helpers,
+  inside its source's window stage.
+- ``prune`` (wide fact payloads): ``LATEST`` of the fact ts alone, then
+  :func:`asof_fetch` fetches the matched payload rows by hash join, so
+  the payload never enters a sort.
 
-- ``prune`` (wide fact payloads): the same union window over
-  (key, ts) ONLY resolves each observation's matched fact timestamp;
-  :func:`asof_fetch` then fetches the matched payload rows by hash join,
-  so the payload never enters a sort.
-
-- :func:`asof_fetch`: the payload fetch for a precomputed match
-  timestamp — what ``prune`` runs after its match, and what a fused
-  SWA ``LATEST`` pass over the fact ts feeds directly.
+:func:`asof_fetch` is also the fetch half of a fused as-of: a ``LATEST``
+of the fact ts inside an existing SWA pass feeds it directly. Hot keys
+take that path — salt the SWA cogroup pass, then fetch. A NaN value
+reads null on every path, the rule of ``swa.metric_expr``.
 """
 
 from __future__ import annotations
 
+import math
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from feathr_spark.functions.timestamps import to_epoch_micros
+from feathr_spark.definitions import SWAFeature, WindowSpec
 from feathr_spark.session import track_cache
-from feathr_spark.operators.swa import (
-    _default_buckets,
-    _isolate_null_keys,
-    _key_cols,
-    _salt,
-    _with_keys_ts,
-    payload_hash,
-)
+from feathr_spark.operators.swa import _nan_as_null, join_window_agg_features, payload_hash
 
-MICROS = 1_000_000
+# the match column asof_join adds and drops again
+_MATCH = "_asof_match"
 
 
 def _est_width(dt) -> int:
@@ -72,20 +68,41 @@ def _est_width(dt) -> int:
     return 2048
 
 
-def _parse_value_cols(value_cols):
-    """``expr AS name`` specs -> (output names, exprs aliased ``__v{i}``).
+def _value_specs(value_cols, suffix: str = "") -> list[tuple[str, str]]:
+    """``expr AS name`` specs -> (output name + ``suffix``, expr) pairs.
     Plain column names pass through as their own output name."""
-    out_names, vexprs = [], []
-    for i, vc in enumerate(value_cols):
+    out = []
+    for vc in value_cols:
         low = vc.lower()
         if " as " in low:
-            expr_part = vc[: low.rindex(" as ")]
-            name = vc[low.rindex(" as ") + 4:].strip()
+            i = low.rindex(" as ")
+            out.append((vc[i + 4:].strip() + suffix, vc[:i]))
         else:
-            expr_part, name = vc, vc
-        out_names.append(name)
-        vexprs.append(F.expr(expr_part).alias(f"__v{i}"))
-    return out_names, vexprs
+            out.append((vc + suffix, vc))
+    return out
+
+
+def latest_row(name: str, fields: Sequence[tuple[str, str]], window: WindowSpec) -> SWAFeature:
+    """The as-of match as one SWA feature: ``LATEST`` of a
+    ``named_struct`` of ``fields`` ((field name, expr) pairs). The struct
+    is never null, so the latest fact row in ``window`` wins whatever its
+    field nulls."""
+    return SWAFeature(name, "LATEST", "named_struct(" + ", ".join(
+        f"'{n}', {e}" for n, e in fields) + ")", window)
+
+
+def unpack_latest_row(df: DataFrame, row: str, names: Sequence[str],
+                      defaults: Optional[dict] = None) -> DataFrame:
+    """``df`` with the struct column ``row`` replaced by one column per
+    field in ``names``; a field with a non-null entry in ``defaults``
+    reads it where the field is null."""
+    defaults = defaults or {}
+
+    def field(n):
+        c = F.col(row).getField(n)
+        return c if defaults.get(n) is None else F.coalesce(c, F.lit(defaults[n]))
+
+    return df.withColumns({n: field(n) for n in names}).drop(row)
 
 
 def asof_join(
@@ -102,175 +119,46 @@ def asof_join(
     tolerance: Optional[float] = None,
     strategy: str = "union",
     suffix: str = "",
-    hot_key_threshold: Optional[int] = None,
-    salt_buckets: int = 8,
-    slick: bool = False,
 ) -> DataFrame:
     """Left as-of join: obs columns + ``value_cols`` from the matched fact row.
 
     ``value_cols`` may be SQL expressions aliased ``expr AS name``; plain
     column names pass through. ``suffix`` is appended to output names to
-    avoid clashes. ``slick=True`` trims the observation to (uid, keys,
-    ts) for the merge and joins the wide row back by uid.
+    avoid clashes. ``prune`` fetches the payload by column: its keys and
+    ``fact_ts`` must be column names.
     """
-    if slick:
-        from feathr_spark.operators.swa import _slick_wrap
-
-        return _slick_wrap(
-            obs, obs_keys, obs_ts,
-            lambda trimmed, keys, ts: asof_join(
-                trimmed, fact, keys, fact_keys, ts, fact_ts, value_cols,
-                obs_ts_format=obs_ts_format, fact_ts_format=fact_ts_format,
-                delay=delay, tolerance=tolerance, strategy=strategy,
-                suffix=suffix, hot_key_threshold=hot_key_threshold,
-                salt_buckets=salt_buckets, slick=False,
-            ),
-        )
-    n_keys = len(obs_keys)
-    delay_us = int(round(delay * MICROS))
-    tol_us = None if tolerance is None else int(round(tolerance * MICROS))
-
-    obs2 = _with_keys_ts(obs, obs_keys, obs_ts, obs_ts_format)
-    fact2 = _with_keys_ts(fact, fact_keys, fact_ts, fact_ts_format)
-    cond = F.col("__ts").isNotNull()
-    for c in _key_cols(n_keys):
-        cond = cond & F.col(c).isNotNull()
-    fact2 = fact2.where(cond)
-    obs_main = _isolate_null_keys(obs2, n_keys)
-
-    out_names, vexprs = _parse_value_cols(value_cols)
-    out_names = [name + suffix for name in out_names]
-    # long cast: the bucket xxhash64 must agree with the obs side's long __nk
-    fact_proj = fact2.select(*_key_cols(n_keys), F.col("__ts"),
-                             F.lit(0).cast("long").alias("__nk"), *vexprs)
-    vcols = [f"__v{i}" for i in range(len(value_cols))]
-
+    specs = _value_specs(value_cols, suffix)
+    window = WindowSpec(math.inf if tolerance is None else tolerance, delay)
     if strategy == "union":
-        salted = bool(hot_key_threshold)
-        if salted:
-            obs_main, fact_proj = _salt(obs_main, fact_proj, n_keys,
-                                        hot_key_threshold, salt_buckets)
-        joined = _asof_union(obs_main, fact_proj, n_keys, vcols, delay_us, tol_us,
-                             salted=salted)
+        feature = latest_row(_MATCH, specs, window)
     elif strategy == "prune":
-        if hot_key_threshold:
-            # slim phase sorts ~24B rows; a hot key's slim partition is
-            # cheap, and salting would replicate payload in the fetch
-            raise ValueError("prune strategy handles hot keys without salting; "
-                             "drop hot_key_threshold")
-        joined = _asof_prune(obs_main, fact_proj, n_keys, vcols, delay_us, tol_us)
+        # a LATEST of the fact ts needs no tiebreak: tied rows hold one value
+        feature = SWAFeature(_MATCH, "LATEST", fact_ts, window)
     else:
         raise ValueError(f"unknown strategy {strategy!r}")
-
-    for vcol, name in zip(vcols, out_names):
-        joined = joined.withColumnRenamed(vcol, name)
-    return joined.drop(*[c for c in joined.columns if c.startswith("__")])
-
-
-def _asof_union(obs, fact_proj, n_keys, vcols, delay_us, tol_us, salted=False,
-                emit_match_ts=False):
-    """Pure-JVM as-of: union + running-last window. With ``salted=True``
-    the window partitions on (key, salt) as well — hot-key fact rows were
-    replicated into every salt bucket by swa._salt, so each observation
-    still sees its key's full history while the hot key's sort fans out
-    across salt_buckets partitions. Keeps wide payload columns entirely
-    JVM-side (no Arrow round-trip).
-
-    ``emit_match_ts=True`` additionally emits ``__match_ts`` (the matched
-    fact row's timestamp, null when unmatched / out of tolerance) — the
-    handle the ``prune`` strategy hands to :func:`asof_fetch`."""
-    kcols = _key_cols(n_keys)
-    if salted:
-        kcols = kcols + ["__salt"]
-    obs_u = obs.withColumn("__is_obs", F.lit(1)) \
-        .withColumn("__ts_eff", F.col("__ts") - F.lit(delay_us))
-    fact_u = fact_proj.withColumn("__is_obs", F.lit(0)) \
-        .withColumn("__ts_eff", F.col("__ts")).withColumn("__fact_ts", F.col("__ts"))
-    # deterministic tie-break among exact-ts fact duplicates: the
-    # max-payload-hash row wins (same rule as the prune strategy's
-    # max_by collapse — strategies agree bit-for-bit, retries too)
-    fact_u = fact_u.withColumn("__tb", payload_hash(vcols))
-    u = obs_u.unionByName(fact_u, allowMissingColumns=True)
-    # pin the window-stage task count (see swa._swa_union: AQE coalesces
-    # the window exchange into coarse waves otherwise)
-    u = u.repartition(_default_buckets(obs), *kcols, "__nk")
-    # pack the fact payload into one struct so the matched ROW is picked
-    # atomically (per-column last-non-null would mix values across rows)
-    u = u.withColumn(
-        "__row",
-        F.when(F.col("__is_obs") == 0,
-               F.struct(*[F.col(c) for c in vcols], F.col("__fact_ts"))),
-    )
-    # fact rows (is_obs=0) order before obs rows at the same effective ts
-    # -> a fact row exactly at obs_ts - delay is visible (right-inclusive)
-    w = (
-        Window.partitionBy(*kcols, "__nk")
-        .orderBy(F.col("__ts_eff"), F.col("__is_obs"), F.col("__tb"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    out = u.withColumn("__row", F.last("__row", ignorenulls=True).over(w))
-    out = out.where(F.col("__is_obs") == 1)
-    matched = F.col("__row").isNotNull()
-    if tol_us is not None:
-        matched = matched & (F.col("__row.__fact_ts") > (F.col("__ts_eff") - F.lit(tol_us)))
-    for vcol in vcols:
-        out = out.withColumn(vcol, F.when(matched, F.col(f"__row.{vcol}")))
-    if emit_match_ts:
-        out = out.withColumn("__match_ts", F.when(matched, F.col("__row.__fact_ts")))
-    return out
-
-
-def _asof_prune(obs, fact_proj, n_keys, vcols, delay_us, tol_us):
-    """Two-phase as-of for WIDE fact payloads (the 100 TB shape).
-
-    The union strategy shuffles + sorts the full fact payload and
-    materializes it once more inside the window — with ~KB payload rows
-    (e.g. token arrays) that is ~3 passes of memory traffic over data
-    that mostly never reaches the output. Here the payload never enters
-    a sort:
-
-    1. **Slim match**: union as-of over (keys, ts) ONLY — resolves each
-       observation's matched fact timestamp (``__match_ts``). The sort
-       carries a few dozen bytes per fact row. The result is persisted
-       (MEMORY_AND_DISK): the fetch scans it twice, and when ``obs`` is
-       itself a computed pipeline (the planner's multi-stage output) an
-       unpersisted branch would re-execute that whole upstream DAG —
-       measured as a 2x job on the flagship. Obs-scale narrow data;
-       eviction just recomputes (resumable, unlike a localCheckpoint).
-    2. **Pruned fetch**: :func:`asof_fetch` with the shuffle plan pinned
-       (``broadcast_threshold=None``, so no pair-count job): SHUFFLE_HASH
-       left-semi of the fact payload by the distinct matched
-       ``(key, ts)`` pairs, ``max_by`` payload-hash tie collapse (the
-       winner the union sort picks), SHUFFLE_HASH join back. The payload
-       crosses exactly ONE exchange; Spark's runtime bloom filter (on in
-       session.py) can push the pair filter below even that.
-
-    On a cluster where fact is stored bucketed by key
-    (sources/bucketed.py) the fetch elides its fact-side exchange
-    entirely — the storage-partitioned layout is the end state for
-    repeated 100 TB joins.
-    """
-    from pyspark import StorageLevel
-
-    kcols = _key_cols(n_keys)
-    fact_slim = fact_proj.select(*kcols, "__ts", "__nk")
-    slim = _asof_union(obs, fact_slim, n_keys, [], delay_us, tol_us,
-                       emit_match_ts=True).drop("__row")
-    # the returned frame is lazy over this cache; registered so
-    # feathr_spark.release_caches() frees it after the caller materializes.
-    # Deliberately NOT built eagerly: slim is scanned by two leaf stages
-    # (pairs semi-join side, final join-back) that AQE submits
-    # concurrently, so racing tasks can compute a partition twice before
-    # the cache fills — but slim is the NARROW (keys, ts) table, the
-    # redundant work is bounded at 2x a cheap kernel and overlaps idle
-    # cores, and slim's value is deterministic so both computations
-    # agree. An eager count() here instead serializes a full extra job
-    # per call: measured +0.8s (23%) on the sf0.1 flagship. (Contrast
-    # minhash_lsh_dedup, where the raced table carries wide signatures
-    # and IS built eagerly.)
-    slim = track_cache(slim.persist(StorageLevel.MEMORY_AND_DISK))
-    return asof_fetch(slim, fact_proj, kcols, kcols, "__match_ts", "__ts",
-                      vcols, broadcast_threshold=None)
+    # no time prefilter: its min/max action would run a computed obs
+    # pipeline once more, and an unbounded match reaches back to the start
+    matched = join_window_agg_features(
+        obs, fact, obs_keys, fact_keys, obs_ts, fact_ts, [feature],
+        obs_ts_format=obs_ts_format, fact_ts_format=fact_ts_format,
+        strategy="union", prefilter_time_range=False)
+    if strategy == "union":
+        return unpack_latest_row(matched, _MATCH, [n for n, _ in specs])
+    # The slim match is persisted (MEMORY_AND_DISK): the fetch scans it
+    # twice, and when ``obs`` is itself a computed pipeline an
+    # unpersisted branch would re-execute that whole upstream DAG —
+    # measured as a 2x job on the flagship. It is registered so
+    # feathr_spark.release_caches() frees it after the caller
+    # materializes, and deliberately NOT built eagerly: AQE submits the
+    # fetch's two leaf stages concurrently, so racing tasks can compute a
+    # partition twice before the cache fills — bounded at 2x a cheap
+    # narrow pass that overlaps idle cores, and deterministic, so both
+    # computations agree. An eager count() instead serializes a full
+    # extra job per call: measured +0.8s (23%) on the sf0.1 flagship.
+    slim = track_cache(matched.persist(StorageLevel.MEMORY_AND_DISK))
+    return asof_fetch(slim, fact, obs_keys, fact_keys, _MATCH, fact_ts,
+                      [f"{e} AS {n}" for n, e in specs],
+                      broadcast_threshold=None).drop(_MATCH)
 
 
 def asof_fetch(
@@ -298,7 +186,7 @@ def asof_fetch(
     1. distinct ``(key, match_ts)`` pairs from the observations,
     2. left-semi prune of the fact payload by those pairs,
     3. deterministic exact-ts tie collapse (``max_by`` payload hash —
-       the same winner as the ``union`` strategy's sort),
+       the winner of the SWA ``LATEST`` of a row struct),
     4. hash join back (``SHUFFLE_HASH`` — the payload never enters a
        sort and crosses at most ONE exchange; zero with an
        entity-partitioned or bucketed fact, sources/bucketed.py).
@@ -337,23 +225,26 @@ def asof_fetch(
     join-back): when it is a computed pipeline rather than a stored
     table, persist + materialize it first or the upstream DAG runs
     twice (AQE submits both leaf stages concurrently).
-    Bounded-window LATEST gives bounded-tolerance as-of semantics:
-    ``SWAFeature(m, "LATEST", ts_col, WindowSpec(w))`` + fetch ==
-    ``asof_join(..., tolerance=w)`` up to the window's left-boundary
-    rule ((t-w, t] exclusive-left vs tolerance's inclusive-left).
+    ``SWAFeature(m, "LATEST", fact_ts, WindowSpec(w))`` + fetch ==
+    ``asof_join(..., tolerance=w)``: both match in ``(t-w, t]``. A NaN
+    value reads null, as in the SWA pass.
 
     Reference parity: same output contract as asof_join
     (feathr-impl swj/SlidingWindowJoin.scala joins features back to the
     observation by key — this is that join-back, with the match
     computed in the shared kernel pass).
     """
-    out_names, vexprs = _parse_value_cols(value_cols)
-    vcols = [f"__v{i}" for i in range(len(value_cols))]
+    specs = _value_specs(value_cols)
+    out_names = [n for n, _ in specs]
+    vcols = [f"__v{i}" for i in range(len(specs))]
     fk = [f"__fk{i}" for i in range(len(fact_keys))]
 
+    vexprs = [F.expr(e) for _, e in specs]
+    vtypes = [fld.dataType for fld in fact.select(*vexprs).schema]
     fact_proj = fact.select(
         *[F.col(k).alias(a) for k, a in zip(fact_keys, fk)],
-        F.col(fact_ts).alias("__fts"), *vexprs)
+        F.col(fact_ts).alias("__fts"),
+        *[_nan_as_null(c, t).alias(v) for c, t, v in zip(vexprs, vtypes, vcols)])
     pairs = (obs.where(F.col(match_ts_col).isNotNull())
              .select(*[F.col(o).alias(a) for o, a in zip(obs_keys, fk)],
                      F.col(match_ts_col).alias("__fts"))
@@ -386,7 +277,7 @@ def asof_fetch(
                                 on=fk + ["__fts"], how="left_semi")
     fact_u = (fact_m.groupBy(*fk, "__fts")
               .agg(F.max_by(F.struct(*[F.col(v) for v in vcols]),
-                            payload_hash(vcols)).alias("__payload")))
+                            payload_hash(vcols, vtypes)).alias("__payload")))
     right = fact_u.select(
         *fk, F.col("__fts"),
         *[F.col(f"__payload.{v}").alias(n) for v, n in zip(vcols, out_names)])

@@ -15,7 +15,7 @@ function works on the bucket-wide arrays sorted by (key code, ts):
 - SUM/COUNT/AVG via float64 prefix sums (the vectorized analogue of the
   incremental agg/deagg path, :252-271) — O(n + q) per bucket
 - MIN/MAX via a sparse table (O(n log n) build, O(1) per query)
-- LATEST via a last-valid-index scan; TIMESINCE via the sorted tail
+- LATEST via a last-valid-index scan; TIMESINCE reads that row's ts
 - COUNT_DISTINCT via interval stabbing (two searchsorteds per bucket)
 
 Determinism: fact rows are sorted by (key, ts) with a stable sort, and all
@@ -123,15 +123,6 @@ def agg_latest(v, valid, lo, hi):
     out_idx[nonempty] = lvi[hi[nonempty] - 1]
     ok = (out_idx >= lo) & (out_idx >= 0)
     return out_idx, ok
-
-
-def agg_timesince(fact_ts, obs_ts, lo, hi):
-    """Seconds between obs time and the latest fact event in the window
-    (TimesinceAggregate.scala keeps the max window timestamp)."""
-    out = np.full(len(lo), np.nan)
-    nonempty = hi > lo
-    out[nonempty] = (obs_ts[nonempty] - fact_ts[hi[nonempty] - 1]) / 1e6
-    return out
 
 
 def agg_pooling(arrs, lo, hi, op: str):

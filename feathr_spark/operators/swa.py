@@ -144,22 +144,35 @@ def _out_field(f: SWAFeature, metric_dtype: T.DataType) -> T.StructField:
     return T.StructField(f.name, T.DoubleType())
 
 
-def payload_hash(cols):
+def _hashable(c, dtype: T.DataType):
+    """``c`` as ``xxhash64`` accepts it: a map-containing value as its
+    JSON text (as :func:`content_uid_inputs` does), a struct field by
+    field, so every map-free value and field hashes as itself."""
+    if not _contains_map(dtype):
+        return c
+    if isinstance(dtype, T.StructType):
+        return F.struct(*[_hashable(c.getField(f.name), f.dataType).alias(f.name)
+                          for f in dtype.fields])
+    return F.to_json(c)
+
+
+def payload_hash(cols, types):
     """Deterministic order among fact rows sharing (key, ts): the xxhash64
-    of their payload, the largest wins. Exact byte-duplicates hash alike
-    and carry the same payload."""
-    if not cols:
-        return F.lit(0).cast("long")
-    return F.xxhash64(F.struct(*cols))
+    of their payload (``cols`` of ``types``), the largest wins. Exact
+    byte-duplicates hash alike and carry the same payload. A struct
+    hashes as its fields in order, so one struct column and its fields
+    as separate columns order rows alike."""
+    return F.xxhash64(F.struct(*[_hashable(F.col(c) if isinstance(c, str) else c, t)
+                                 for c, t in zip(cols, types)]))
 
 
-def latest_by(m, ts, tiebreak: bool):
+def latest_by(m, ts, tiebreak: Optional[T.DataType]):
     """LATEST as one aggregate: the non-null ``m`` with the largest
-    ``ts``. With ``tiebreak``, rows sharing that ts go to the largest
-    :func:`payload_hash` of ``m`` — the rule ``asof_join`` applies, so
+    ``ts``. With ``tiebreak`` (the type of ``m``), rows sharing that ts
+    go to the largest :func:`payload_hash` of ``m`` — the as-of rule, so
     the pick does not depend on row order. A LATEST of the fact ts itself
-    needs no tiebreak: rows sharing a ts hold the same value."""
-    order = F.struct(ts, payload_hash([m])) if tiebreak else ts
+    passes None: rows sharing a ts hold the same value."""
+    order = ts if tiebreak is None else F.struct(ts, payload_hash([m], [tiebreak]))
     return F.max_by(m, F.when(m.isNotNull(), order))
 
 
@@ -221,7 +234,7 @@ def _time_prefilter(obs: DataFrame, fact: DataFrame, features: Sequence[SWAFeatu
 def _swa_union(obs: DataFrame, fact_proj: DataFrame, features, metric_col,
                n_keys, tiebreak) -> DataFrame:
     obs_u = obs.withColumn("__is_obs", F.lit(1))
-    fact_u = fact_proj.withColumn("__is_obs", F.lit(0)).withColumn("__fact_ts", F.col("__ts"))
+    fact_u = fact_proj.withColumn("__is_obs", F.lit(0))
     unioned = obs_u.unionByName(fact_u, allowMissingColumns=True)
     part_cols = _key_cols(n_keys) + ["__nk"]
     # pin the window-stage task count (AQE would coalesce the exchange
@@ -250,9 +263,12 @@ def _swa_union(obs: DataFrame, fact_proj: DataFrame, features, metric_col,
         elif f.agg == "MAX":
             col = F.max(m).over(w)
         elif f.agg == "LATEST":
-            col = latest_by(m, F.col("__ts"), f.name in tiebreak).over(w)
+            col = latest_by(m, F.col("__ts"), tiebreak.get(f.name)).over(w)
         elif f.agg == "TIMESINCE":
-            col = (F.col("__ts") - F.max("__fact_ts").over(w)) / F.lit(1e6)
+            # the latest row whose (filtered) metric is set; obs rows
+            # carry no metric
+            col = (F.col("__ts") - F.max(F.when(m.isNotNull(), F.col("__ts"))).over(w)) \
+                / F.lit(1e6)
         elif f.agg in ("COUNT_DISTINCT", "APPROX_COUNT_DISTINCT"):
             nonnull = F.count(m).over(w)
             col = F.when(nonnull > 0, F.size(F.collect_set(m).over(w)).cast("long"))
@@ -373,7 +389,7 @@ def _make_kernel(obs_schema: T.StructType, out_schema: T.StructType, specs: list
                         agg, s["limit"])
                 elif agg.endswith("_POOLING"):
                     outs[name][:] = kernels.agg_pooling(col(s["metric"], object), lo, hi, agg)
-                elif agg == "LATEST":
+                elif agg in ("LATEST", "TIMESINCE"):
                     vals = col(s["metric"], object)
                     if s["tiebreak"] is not None:
                         # rows sharing (key, ts) end in payload-hash order,
@@ -382,11 +398,12 @@ def _make_kernel(obs_schema: T.StructType, out_schema: T.StructType, specs: list
                         vals = vals[np.lexsort(
                             (col(s["tiebreak"], np.int64), fact_ts, fc_s))]
                     idx, ok = kernels.agg_latest(vals, kernels.valid_mask(vals), lo, hi)
+                    if agg == "TIMESINCE":
+                        outs[name][:] = np.where(ok, (obs_ts - fact_ts[idx]) / 1e6, np.nan)
+                        continue
                     picked = vals[idx].copy()
                     picked[~ok] = None
                     outs[name][:] = picked
-                elif agg == "TIMESINCE":
-                    outs[name][:] = kernels.agg_timesince(fact_ts, obs_ts, lo, hi)
                 elif name in custom_fns:
                     outs[name][:] = custom_fns[name](col(s["metric"], object), fact_ts, lo, hi)
                 else:
@@ -571,8 +588,9 @@ def _swa_cogroup(obs: DataFrame, fact_proj: DataFrame, features, metric_col, n_k
                                lo_shift_us=lo_shift_us)
         seg_cols = kcols + ["__nk", "__salt"]
 
-    tb_metrics = sorted({metric_col[n] for n in tiebreak})
-    fact_proj = fact_proj.select("*", *[payload_hash([m]).alias(f"{m}_tb") for m in tb_metrics])
+    tb_metrics = {metric_col[n]: t for n, t in tiebreak.items()}
+    fact_proj = fact_proj.select("*", *[payload_hash([m], [t]).alias(f"{m}_tb")
+                                        for m, t in sorted(tb_metrics.items())])
 
     b = num_buckets or _default_buckets(obs)
     bucket = F.pmod(F.xxhash64(*seg_cols), F.lit(b)).cast("int")
@@ -810,7 +828,9 @@ def join_window_agg_features(
     out_fields = [_out_field(f, proj_dtypes.get(metric_col[f.name], T.DoubleType()))
                   for f in features]
 
-    tiebreak = {f.name for f in features if f.agg == "LATEST" and f.metric != fact_ts}
+    # LATEST features whose ts ties break by payload hash -> metric type
+    tiebreak = {f.name: proj_dtypes[metric_col[f.name]] for f in features
+                if f.agg == "LATEST" and f.metric != fact_ts}
 
     if strategy == "auto":
         frame_ok = all(f.agg in FRAME_AGGS and f.group_by is None for f in features) \

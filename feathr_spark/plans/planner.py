@@ -47,6 +47,7 @@ from feathr_spark.definitions import (
     SWAFeature,
     WindowSpec,
 )
+from feathr_spark.operators.asof import latest_row, unpack_latest_row
 from feathr_spark.operators.derived import apply_derived_in_order
 from feathr_spark.operators.lookup import lookup_join
 from feathr_spark.operators.swa import content_uid_inputs, join_window_agg_features
@@ -332,8 +333,8 @@ def join_features(
             stages.setdefault((_source_key(a), _effective_lateral(a, f)), []).append((a, f))
     for a, feats in snapshot:
         if a.source.timestamp_col and feats:
-            row = SWAFeature(f"_asof_{a.name}", "LATEST", "named_struct(" + ", ".join(
-                f"'{f.name}', {f.expr}" for f in feats) + ")", WindowSpec(math.inf))
+            row = latest_row(f"_asof_{a.name}", [(f.name, f.expr) for f in feats],
+                             WindowSpec(math.inf))
             stages.setdefault((_source_key(a), _effective_lateral(a, row)), []).append((a, row))
             asof[row.name] = feats
     # Observation time range computed ONCE on the pre-stage observation
@@ -369,8 +370,8 @@ def join_features(
             obs_time_range=obs_range,
         )
         for row in (f.name for f in feats if f.name in asof):
-            out = out.withColumns({f.name: _with_default(F.col(row).getField(f.name), f)
-                                   for f in asof[row]}).drop(row)
+            out = unpack_latest_row(out, row, [f.name for f in asof[row]],
+                                    {f.name: f.default for f in asof[row]})
         out = _stage_done(out)
 
     # (4) snapshot anchors without a timestamp: dedup on keys + left join

@@ -7,7 +7,7 @@ enrichment of an event stream to the offline batch path
 (FeatureJoinJob.scala). This module closes that gap Spark-natively: each
 ``foreachBatch`` micro-batch is a plain DataFrame, so the engine's
 oracle-checked batch :func:`~feathr_spark.operators.asof.asof_join`
-(union / prune strategies, salting, tolerance, delay) runs
+(union / prune strategies, tolerance, delay) runs
 unchanged per batch — identical semantics online and offline, which is
 exactly the train/serve-skew guarantee a feature store exists to give.
 
@@ -25,9 +25,10 @@ Scale notes (100 TB / long-running stream):
   without a transactional sink.
 - Each batch is obs-sized, not corpus-sized: ``strategy="prune"``
   keeps wide fact payloads (token arrays) out of every sort — a slim
-  (key, ts) union match, then the :func:`asof_fetch` hash join of the
-  matched payload rows only. ``union`` (the default) carries the payload
-  through its window sort and suits narrow feature tables.
+  SWA ``LATEST`` of the fact ts, then the :func:`asof_fetch` hash join
+  of the matched payload rows only. ``union`` (the default) carries the
+  payload through its window sort as one ``LATEST`` row struct and suits
+  narrow feature tables.
 """
 
 from __future__ import annotations
@@ -60,7 +61,8 @@ def stream_asof_enrich(
     """Start a streaming query that point-in-time-enriches ``stream_df``.
 
     Every micro-batch of observation rows is as-of joined (latest fact
-    row with ``fact_ts + delay <= obs_ts``, per key) against
+    row with ``fact_ts + delay <= obs_ts``, per key, and with a
+    ``tolerance`` also ``fact_ts + delay + tolerance > obs_ts``) against
     ``feature_df`` using the batch :func:`asof_join` — per-row output is
     therefore INDEPENDENT of how the source splits into micro-batches,
     so the streamed result equals the batch join of the full input (the

@@ -2,10 +2,13 @@
 
 from __future__ import annotations
 
+import math
+
 import duckdb
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from feathr_spark.datagen import corpus
 from feathr_spark.operators.asof import asof_join
@@ -36,9 +39,10 @@ def test_asof_golden(spark, strategy):
 
 @pytest.mark.parametrize("strategy", STRATEGIES)
 def test_asof_tolerance_and_delay(spark, strategy):
-    obs = spark.createDataFrame([(1, "a", 100.0), (2, "a", 500.0)],
+    obs = spark.createDataFrame([(1, "a", 100.0), (2, "a", 500.0), (3, "b", 100.0),
+                                 (4, "b", 99.0)],
                                 "obs_id long, k string, ts double")
-    fact = spark.createDataFrame([("a", 90.0, 1.0), ("a", 100.0, 2.0)],
+    fact = spark.createDataFrame([("a", 90.0, 1.0), ("a", 100.0, 2.0), ("b", 45.0, 3.0)],
                                  "k string, ts double, v double")
     out = asof_join(obs, fact, ["k"], ["k"], "ts", "ts", ["v"],
                     delay=5.0, tolerance=50.0, strategy=strategy)
@@ -47,6 +51,11 @@ def test_asof_tolerance_and_delay(spark, strategy):
     assert rows[1]["v"] == 1.0
     # obs2 effective ts = 495: latest row@100 is outside tolerance 50
     assert rows[2]["v"] is None
+    # the tolerance is exclusive on the left: a row exactly at
+    # obs - delay - tolerance (100 - 5 - 50 = 45) is not matched, one
+    # second inside it is
+    assert rows[3]["v"] is None
+    assert rows[4]["v"] == 3.0
 
 
 @pytest.mark.parametrize("strategy", STRATEGIES)
@@ -82,17 +91,22 @@ def test_asof_prune_union_exact_parity(spark):
     union strategy bit-for-bit — including on exact-timestamp duplicate
     fact rows, where both pick the max-payload-hash row."""
     fact, obs = corpus(spark, sf=0.002)
-    # inject exact-ts ties with differing payloads on a hot key
+    # inject exact-ts ties with differing payloads on a hot key, and a
+    # NaN payload tied with a number (NaN reads null on both strategies)
     dup = fact.limit(40).selectExpr(
         "doc_id", "event_ts", "tokens", "n_tok + 7 as n_tok", "'tie' as source")
     fact = fact.unionByName(dup.select(*fact.columns))
+    fact = fact.withColumn("x", F.when(F.col("source") == "tie", F.lit(float("nan")))
+                           .otherwise(F.col("n_tok").cast("double")))
     kw = dict(obs_ts_format="epoch", fact_ts_format="epoch")
     args = (obs, fact, ["doc_id"], ["doc_id"], "ts", "event_ts",
-            ["n_tok as a_n_tok", "source as a_src"])
+            ["n_tok as a_n_tok", "source as a_src", "x as a_x"])
     base = asof_join(*args, strategy="union", **kw)
     pruned = asof_join(*args, strategy="prune", **kw)
     assert base.exceptAll(pruned).count() == 0
     assert pruned.exceptAll(base).count() == 0
+    tie = base.where(F.col("a_src") == "tie")
+    assert tie.count() > 0 and tie.where(F.col("a_x").isNotNull()).count() == 0
 
 
 def test_asof_unknown_strategy_raises(spark):
@@ -105,7 +119,7 @@ def test_asof_unknown_strategy_raises(spark):
 
 
 def test_asof_prune_plan_is_pinned_shuffle_fetch(spark, sf_dir):
-    """prune = slim union match + asof_fetch(broadcast_threshold=None):
+    """prune = SWA LATEST(ts) match + asof_fetch(broadcast_threshold=None):
     two SHUFFLE_HASH joins (semi prune, join-back), no broadcast, and no
     job runs before the caller's action (no pair-count job, slim is
     persisted lazily)."""
@@ -130,17 +144,22 @@ def test_asof_prune_plan_is_pinned_shuffle_fetch(spark, sf_dir):
 
 
 def test_asof_salted_union_parity(spark):
-    """Salted union strategy (window partitioned on (key, salt) with
-    hot-key fact replication) must equal the plain union."""
+    """Salted as-of is the fused SWA path: an unbounded ``LATEST`` of the
+    fact ts on the cogroup kernel with hot keys salted, then
+    :func:`asof_fetch`. It must equal the plain union strategy."""
+    from feathr_spark import SWAFeature, WindowSpec, asof_fetch, join_window_agg_features
+
     fact, obs = corpus(spark, sf=0.0005)
     kw = dict(obs_ts_format="epoch", fact_ts_format="epoch")
     base = asof_join(obs, fact, ["doc_id"], ["doc_id"], "ts", "event_ts",
                      ["n_tok as a_n_tok"], strategy="union", **kw) \
         .orderBy("obs_id").toPandas()
-    salted = asof_join(obs, fact, ["doc_id"], ["doc_id"], "ts", "event_ts",
-                       ["n_tok as a_n_tok"], strategy="union",
-                       hot_key_threshold=20, salt_buckets=4, **kw) \
-        .orderBy("obs_id").toPandas()
+    vec = join_window_agg_features(
+        obs, fact, ["doc_id"], ["doc_id"], "ts", "event_ts",
+        [SWAFeature("m_ts", "LATEST", "event_ts", WindowSpec(math.inf))],
+        strategy="cogroup", hot_key_threshold=15, salt_buckets=4, **kw)
+    salted = asof_fetch(vec, fact, ["doc_id"], ["doc_id"], "m_ts", "event_ts",
+                        ["n_tok as a_n_tok"]).orderBy("obs_id").toPandas()
     a = base["a_n_tok"].astype("float").fillna(-1).to_numpy()
     b = salted["a_n_tok"].astype("float").fillna(-1).to_numpy()
     assert np.array_equal(a, b)
@@ -281,3 +300,22 @@ def test_asof_fetch_byte_cap_overrides_row_threshold(spark, sf_dir):
                 for r in roomy.collect())
     assert ka == kb and len(ka) > 0
     vec.unpersist()
+
+
+@pytest.mark.parametrize("strategy", STRATEGIES)
+def test_asof_map_value(spark, strategy):
+    """A MAP value joins on both strategies; rows tied at one ts go to
+    one winner whatever their order (maps hash as their JSON text)."""
+    obs = spark.createDataFrame([(1, "a", 100), (2, "b", 100)],
+                                "obs_id long, k string, ts long")
+    tied = [("a", 50, 1), ("a", 50, 2), ("a", 30, 3)]
+    got = set()
+    for order in (tied, tied[::-1]):
+        fact = spark.createDataFrame(order, "k string, ts long, v int").coalesce(1)
+        out = asof_join(obs, fact, ["k"], ["k"], "ts", "ts",
+                        ["map('v', v) as mp", "v"], strategy=strategy)
+        rows = {r["obs_id"]: r for r in out.collect()}
+        assert rows[2]["mp"] is None
+        assert rows[1]["mp"] == {"v": rows[1]["v"]} and rows[1]["v"] in (1, 2)
+        got.add(rows[1]["v"])
+    assert len(got) == 1

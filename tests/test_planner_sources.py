@@ -7,6 +7,7 @@ import os
 from dataclasses import replace
 
 import pytest
+from pyspark.sql import functions as F
 
 from feathr_spark.definitions import (
     Anchor,
@@ -519,3 +520,24 @@ def test_asof_anchor_rides_the_window_stage(spark, swa_agg):
     plan = out._jdf.queryExecution().executedPlan().toString().split("Initial Plan")[0]
     assert "FlatMapCoGroupsInPandas" in plan if swa_agg == "COUNT_DISTINCT" else \
         plan.count("Window [") == 1
+
+
+def test_asof_anchor_with_a_map_feature(spark):
+    """A time-stamped snapshot anchor with a MAP feature joins in a
+    union-routed window stage; rows tied at one ts go to one winner."""
+    fact = spark.createDataFrame([("x", 50, 1), ("x", 50, 2), ("x", 30, 3)],
+                                 "k string, ts long, v int")
+    obs = spark.createDataFrame([(1, "x", 100), (2, "y", 100)], "obs_id long, k string, t long")
+    src = Source("mem://f", timestamp_col="ts")
+    anchors = [Anchor("snap", src, ["k"], [Feature("fm", "map('v', v)"), Feature("fv", "v")]),
+               Anchor("win", src, ["k"], [SWAFeature("s", "SUM", "v", WindowSpec(100))])]
+    got = set()
+    for order in (fact, fact.orderBy(F.desc("v")).coalesce(1)):
+        out = join_features(spark, obs, ObservationSettings(keys=["k"], timestamp_col="t"),
+                            anchors, source_cache={"mem://f": order})
+        rows = {r["obs_id"]: r for r in out.collect()}
+        assert rows[2]["fm"] is None and rows[1]["s"] == 6.0
+        assert rows[1]["fm"] == {"v": rows[1]["fv"]} and rows[1]["fv"] in (1, 2)
+        got.add(rows[1]["fv"])
+        assert "FlatMapCoGroupsInPandas" not in out._jdf.queryExecution().executedPlan().toString()
+    assert len(got) == 1

@@ -66,9 +66,10 @@ GOLDEN = {
     # obs 2: key a @200, window (100,200]: 150->3.0 only
     2: dict(v_sum=3.0, v_cnt=1, v_avg=3.0, v_min=3.0, v_max=3.0, v_latest=3.0,
             v_timesince=50.0, v_cd=1, v_sum_x=3.0, v_sum_delay=3.0),
-    # obs 3: key b @150, window (50,150]: 149->10.0, 150->null
+    # obs 3: key b @150, window (50,150]: 149->10.0, 150->null (the null
+    # metric is no TIMESINCE event either)
     3: dict(v_sum=10.0, v_cnt=1, v_avg=10.0, v_min=10.0, v_max=10.0, v_latest=10.0,
-            v_timesince=0.0, v_cd=2, v_sum_x=10.0, v_sum_delay=10.0),
+            v_timesince=1.0, v_cd=2, v_sum_x=10.0, v_sum_delay=10.0),
     4: dict(v_sum=None, v_cnt=None, v_avg=None, v_min=None, v_max=None, v_latest=None,
             v_timesince=None, v_cd=None, v_sum_x=None, v_sum_delay=None),
     5: dict(v_sum=None, v_cnt=None, v_avg=None, v_min=None, v_max=None, v_latest=None,
@@ -722,6 +723,28 @@ def test_nan_metric_is_null_on_every_path(spark):
              for agg in ("LATEST", "MAX", "MIN", "SUM", "AVG", "COUNT")]
     want = {"v_latest": 1.0, "v_max": 1.0, "v_min": 1.0, "v_sum": 1.0, "v_avg": 1.0,
             "v_count": 1}
+    for strategy in STRATEGIES:
+        row = join_window_agg_features(obs, fact, ["k"], ["k"], "ts", "ts", feats,
+                                       strategy=strategy).first()
+        assert {f.name: row[f.name] for f in feats} == want, strategy
+    spec = GenSpec(keys=["k"], key_names=["k"], ts_col="ts", features=feats)
+    row = generate_features(fact, spec, 100).first()
+    assert {f.name: row[f.name] for f in feats} == want
+
+
+def test_timesince_reads_the_latest_set_filtered_metric(spark):
+    """TIMESINCE is the time since the latest fact row whose (filtered)
+    metric is set, on both SWA strategies and in ``generate_features``:
+    a later row with a null metric, or one the filter drops, is not an
+    event of that feature."""
+    from feathr_spark.materialize import GenSpec, generate_features
+
+    obs = spark.createDataFrame([(1, "a", 100)], "obs_id long, k string, ts long")
+    fact = spark.createDataFrame([("a", 40, 1.0, "web"), ("a", 50, None, "app")],
+                                 "k string, ts long, v double, src string")
+    feats = [SWAFeature("since_v", "TIMESINCE", "v", WindowSpec(100)),
+             SWAFeature("since_web", "TIMESINCE", "v", WindowSpec(100), filter="src = 'web'")]
+    want = {"since_v": 60.0, "since_web": 60.0}
     for strategy in STRATEGIES:
         row = join_window_agg_features(obs, fact, ["k"], ["k"], "ts", "ts", feats,
                                        strategy=strategy).first()
