@@ -9,14 +9,15 @@ cardinality; null-key rows are split out and unioned back
 ``monotonically_increasing_id`` (non-deterministic across retries, noted
 at :125-129).
 
-A scalar base needs no uid: a lookup's value depends on the base value
-alone, so the expansion table is aggregated per expansion key and that
-per-key table is left-joined onto the observation on ``base == key``
-(eager aggregation: the group-by moves below the join). The observation
-is read once and nothing shuffles on a row hash. Only an array-valued
-base, whose elements must be regrouped per row, takes the reference's
-explode → join → groupBy(uid) path; the caller names an existing unique
-id column for it — content-derived and retry-safe.
+No uid is needed: a lookup's value depends on the base value alone. A
+scalar base joins the expansion table aggregated per expansion key on
+``base == key`` (eager aggregation: the group-by moves below the join),
+so the observation is read once. An array base is aggregated per
+distinct base array (distinct arrays → explode → join the expansion →
+groupBy the array) and that per-array table is left-joined back on the
+array value. The second read of the observation projects the base
+column alone, so only the base's own lineage is evaluated twice, and
+nothing shuffles on a row hash.
 
 ELEMENTWISE_* aggregations (SequentialJoinAsDerivation.scala:300-663 —
 the reference's Spark-UDAF family over array-valued expansion features)
@@ -28,7 +29,7 @@ mismatched-length positions come out null via zip_with's null-padding).
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -98,7 +99,6 @@ def lookup_join(
     aggregation: str = "UNION",
     explode_base: bool = False,
     broadcast_expansion: bool = False,
-    uid_col: Optional[str] = None,
 ) -> DataFrame:
     """Join ``expansion`` on ``obs[base_key]`` and aggregate
     ``expansion_value`` to one value per observation row.
@@ -112,21 +112,17 @@ def lookup_join(
     row gives 0 for COUNT, ``[]`` for UNION and null otherwise.
 
     A scalar base joins the per-key aggregate of ``expansion`` by value.
-    ``explode_base=True`` (an array-valued base) expands one row per
-    element and regroups by ``uid_col``, which must then name a column
-    unique per observation row; it is not read otherwise. Duplicate uids
-    are deduped on the slim projection before the expansion join
-    (duplicate rows share all hashed content, so their aggregates are
-    identical and the join-back fans the one computed row to every
-    duplicate).
+    ``explode_base=True`` (an array-valued base) expands each distinct
+    base array one row per element, aggregates the matched expansion
+    rows per array and joins that per-array aggregate by value: rows with
+    equal arrays get the one computed result. An empty array, or one of
+    null elements only, gives null.
     """
     aggregation = aggregation.upper()
     if aggregation not in LOOKUP_AGGS:
         raise ValueError(f"unknown lookup aggregation {aggregation}")
     if out_name in obs.columns:
         raise ValueError(f"output column {out_name} already exists")
-    if explode_base and uid_col is None:
-        raise ValueError("an array-valued base regroups per row: pass uid_col")
 
     val_expr = F.expr(expansion_value)
     if aggregation.startswith("ELEMENTWISE_"):
@@ -138,15 +134,15 @@ def lookup_join(
 
     if explode_base:
         # null elements never match and must not shuffle-skew
-        matched = obs.select(uid_col, F.col(base_key).alias("__bk")) \
-            .dropDuplicates([uid_col]) \
-            .select(uid_col, F.explode("__bk").alias("__bk")) \
+        matched = obs.select(F.col(base_key).alias("__ba")).distinct() \
+            .select("__ba", F.explode("__ba").alias("__bk")) \
             .where(F.col("__bk").isNotNull())
         if broadcast_expansion:
             exp = F.broadcast(exp)
-        per_uid = _aggregate(matched.join(exp, on="__bk", how="left"),
-                             [uid_col], aggregation, out_name)
-        return obs.join(per_uid, on=uid_col, how="left")
+        per_array = _aggregate(matched.join(exp, on="__bk", how="left"),
+                               ["__ba"], aggregation, out_name)
+        return obs.join(per_array, F.col(base_key) == F.col("__ba"), "left") \
+            .drop("__ba")
 
     per_key = _aggregate(exp, ["__bk"], aggregation, out_name)
     if broadcast_expansion:

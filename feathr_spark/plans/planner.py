@@ -50,7 +50,7 @@ from feathr_spark.definitions import (
 from feathr_spark.operators.asof import latest_row, unpack_latest_row
 from feathr_spark.operators.derived import apply_derived_in_order
 from feathr_spark.operators.lookup import lookup_join
-from feathr_spark.operators.swa import content_uid_inputs, join_window_agg_features
+from feathr_spark.operators.swa import join_window_agg_features
 from feathr_spark.sources.batch import load_source
 
 PASSTHROUGH = "passthrough"
@@ -393,14 +393,12 @@ def join_features(
         out = out.withColumns({f.name: _with_default(F.col(f.name), f) for f in feats})
         out = _stage_done(out)
 
-    # (5) sequential/lookup features over joined base values. A scalar
-    # base joins the expansion's per-key aggregate by value. An array
-    # base regroups per row by a uid that must agree across lookup_join's
-    # two reads of its obs and across task retries: a content-derived
-    # 128-bit hash (two xxhash64 seeds), not monotonically_increasing_id
-    # (the reference's hazard, SequentialJoinAsDerivation.scala:125-129).
-    # Bytewise-identical rows share a uid and get the one identical
-    # result; map columns hash via to_json (swa.content_uid_inputs).
+    # (5) sequential/lookup features over joined base values. A lookup's
+    # value depends on its base value alone: a scalar base joins the
+    # expansion's per-key aggregate by value, an array base the
+    # expansion's aggregate per distinct base array (no row uid, so no
+    # row hash and no monotonically_increasing_id, the reference's
+    # retry hazard, SequentialJoinAsDerivation.scala:125-129).
     for lk in lookups:
         exp_anchor, exp_feat = expansions[lk.name]
         exp_df = anchor_dfs.get(lk.expansion_anchor)
@@ -408,23 +406,14 @@ def join_features(
             exp_df = _load(exp_anchor)
         # array-valued base features expand one row per element
         # (SequentialJoinAsDerivation.scala:205-224 explode step)
-        array_base = isinstance(out.schema[lk.base_feature].dataType, T.ArrayType)
-        if array_base and "__lk_uid" not in out.columns:
-            hash_in = content_uid_inputs(out.schema)
-            out = out.withColumn("__lk_uid", F.struct(
-                F.xxhash64(F.lit(0x100C_0001), *hash_in).alias("u1"),
-                F.xxhash64(F.lit(0x100C_0002), *hash_in).alias("u2"),
-            ))
         out = lookup_join(
             out, lk.base_feature,
             exp_df.select(F.expr(exp_anchor.keys[0]).alias("__ek"),
                           F.expr(exp_feat.expr).alias(lk.expansion_feature)),
             "__ek", lk.expansion_feature, lk.name,
             aggregation=lk.aggregation,
-            explode_base=array_base,
-            uid_col="__lk_uid" if array_base else None,
+            explode_base=isinstance(out.schema[lk.base_feature].dataType, T.ArrayType),
         )
-    out = out.drop("__lk_uid")
 
     # (6) derived features in dependency order
     out = apply_derived_in_order(out, derived)

@@ -427,3 +427,55 @@ def test_client_plan_evaluates_each_stage_once(spark):
         assert "__lk_uid" not in text, text
         if "Exchange" in kind or "Aggregate" in kind:
             assert "xxhash64" not in text, text
+
+
+def test_array_base_lookup_plans_like_a_scalar_base(spark):
+    """An array base aggregates the expansion per distinct base array and
+    joins that back by value: with the base from a snapshot anchor, the
+    client query plans as many Windows as the scalar-base query, and no
+    exchange is keyed on a row hash."""
+    from feathr_spark.datagen import DAY, SOURCES, observations, sequences
+
+    fact = sequences(spark, 2000, 40, seed=1, skew=1.0).drop("tokens")
+    obs = observations(spark, 500, 40, seed=1, skew=1.0)
+    weights = [(s, float(i + 1)) for i, s in enumerate(SOURCES)]
+    cache = {"mem://sequences": fact,
+             "mem://doc_meta": fact.select("doc_id", "source").dropDuplicates(["doc_id"]),
+             "mem://source_meta": spark.createDataFrame(weights, "source string, weight double")}
+    by_source = dict(weights)
+    windows = {}
+    for base, expr, times in (("scalar", "source", 1), ("array", "array(source, source)", 2)):
+        client = FeathrClient(spark)
+        client.build_features(
+            anchor_list=[
+                Anchor("doc_swa", Source("mem://sequences", timestamp_col="event_ts"),
+                       ["doc_id"],
+                       [SWAFeature("tok_sum_1d", "SUM", "n_tok", WindowSpec(DAY))]),
+                Anchor("doc_meta", Source("mem://doc_meta"), ["doc_id"],
+                       [Feature("doc_source", expr)]),
+                Anchor("source_meta", Source("mem://source_meta"), ["source"],
+                       [Feature("weight", "weight")]),
+            ],
+            derived_feature_list=[
+                LookupFeature("src_weight", "doc_source", "source_meta", "weight",
+                              aggregation="SUM"),
+            ],
+        )
+        out = client.get_offline_features(
+            obs, FeatureQuery(["tok_sum_1d", "doc_source", "src_weight"]),
+            ObservationSettings(keys=["doc_id"], timestamp_col="ts"), source_cache=cache)
+        rows = out.collect()
+        assert len(rows) == 500 and any(r["doc_source"] is not None for r in rows)
+        for r in rows:
+            src = r["doc_source"] if base == "scalar" else (r["doc_source"] or [None])[0]
+            want = None if src is None else times * by_source[src]
+            assert r["src_weight"] == want, (r["doc_source"], r["src_weight"])
+        nodes = list(_plan_nodes(out._jdf.queryExecution().executedPlan()))
+        kinds = [n.getClass().getSimpleName() for n in nodes]
+        windows[base] = kinds.count("WindowExec")
+        for node, kind in zip(nodes, kinds):
+            text = node.simpleString(1000)
+            assert "__lk_uid" not in text, text
+            if "Exchange" in kind:
+                assert "xxhash64" not in text, text
+    assert windows["array"] == windows["scalar"] == 1, windows

@@ -319,7 +319,7 @@ def test_lookup_aggregation_semantics(spark, agg, base):
         from pyspark.sql import functions as F
 
         obs = obs.withColumn("bk", F.when(F.col("bk").isNotNull(), F.array("bk")))
-    out = lookup_join(obs, uid_col="uid", base_key="bk", expansion=exp,
+    out = lookup_join(obs, base_key="bk", expansion=exp,
                       expansion_key="ek", expansion_value="v", out_name="out",
                       aggregation=agg, explode_base=base == "array")
     got = {r["uid"]: r["out"] for r in out.collect()}

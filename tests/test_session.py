@@ -75,3 +75,59 @@ def test_repeated_queries_compile_nothing(spark):
     before = codegen_counters(spark)[0]
     run_all()
     assert codegen_counters(spark)[0] - before == 0
+
+
+def _worker_probe(spark, n: int, module: str | None = None):
+    """Per task of an ``n``-partition ``mapInPandas``: whether the worker
+    has imported the engine, whether its zipimporters carry the directory
+    cache, and ``VALUE`` of ``module`` imported in the task."""
+    def probe(batches):
+        import importlib
+        import sys
+        import zipimport
+
+        import pandas as pd
+
+        for _ in batches:
+            pass
+        fn = zipimport.zipimporter.invalidate_caches
+        value = importlib.import_module(module).VALUE if module else -1
+        yield pd.DataFrame({"engine": ["feathr_spark.session" in sys.modules],
+                            "cached": [fn.__module__ == "feathr_spark.session"],
+                            "value": [value]})
+
+    return spark.range(n).repartition(n).mapInPandas(
+        probe, "engine boolean, cached boolean, value long").collect()
+
+
+def test_engine_workers_cache_zip_directories(spark, tmp_path):
+    """The SWA cogroup's workers import the engine and so install the zip
+    directory cache; the driver keeps CPython's stock ``invalidate_caches``;
+    a zip added with ``addPyFile`` mid-session imports in the next task."""
+    import uuid
+    import zipfile
+    import zipimport
+
+    from feathr_spark import SWAFeature, WindowSpec, join_window_agg_features
+
+    fact = spark.createDataFrame([(f"u{i % 4}", 100 * i, float(i)) for i in range(16)],
+                                 "k string, ts long, v double")
+    obs = spark.createDataFrame([(f"u{i}", 2000) for i in range(4)], "k string, ts long")
+    out = join_window_agg_features(obs, fact, ["k"], ["k"], "ts", "ts",
+                                   [SWAFeature("s", "SUM", "v", WindowSpec(10**6))],
+                                   strategy="cogroup")
+    assert sorted(r["s"] for r in out.collect()) == [24.0, 28.0, 32.0, 36.0]
+    cores = spark.sparkContext.defaultParallelism
+    rows = _worker_probe(spark, cores)
+    assert any(r["cached"] for r in rows), rows
+    assert all(r["cached"] == r["engine"] for r in rows), rows
+    assert zipimport.zipimporter.invalidate_caches.__module__ == "zipimport"
+
+    module = f"zdc_added_{uuid.uuid4().hex[:8]}"
+    path = tmp_path / f"{module}.zip"
+    with zipfile.ZipFile(path, "w") as z:
+        z.writestr(f"{module}.py", "VALUE = 7\n")
+    spark.sparkContext.addPyFile(str(path))
+    rows = _worker_probe(spark, cores, module)
+    assert all(r["value"] == 7 for r in rows), rows
+    assert any(r["cached"] for r in rows), rows
