@@ -635,17 +635,19 @@ def q_swa_salted(spark, sf_dir):
 
 
 def q_swa_salted_union(spark, sf_dir):
-    """Twin of swa_salted in the cogroup strategy's replicate salt mode
-    (hot-key fact rows copied into every salt bucket). The row name is
-    kept from the deleted salted-union strategy; the union strategy does
-    not salt. Same oracle, different physical plan."""
+    """Twin of swa_salted. The row name and oracle are kept from the
+    deleted salted-union strategy (the union strategy does not salt).
+    It no longer forces replicate salting: the salt scheme follows the
+    windows, so its bounded 1h battery salts by time slice, as
+    swa_salted does. Replicate salting stays covered by asof_cogroup,
+    which salts an unbounded LATEST."""
     from feathr_spark import SWAFeature, WindowSpec
 
     out = _swa(spark, sf_dir, [
         SWAFeature("s", "SUM", "value", WindowSpec(3600)),
         SWAFeature("c", "COUNT", "value", WindowSpec(3600)),
         SWAFeature("a", "AVG", "value", WindowSpec(3600)),
-    ], strategy="cogroup", hot_key_threshold=50, salt_buckets=4, salt_mode="replicate")
+    ], strategy="cogroup", hot_key_threshold=50, salt_buckets=4)
     return out.select(
         "event_id",
         F.round("s", 4).alias("sum_1h"),

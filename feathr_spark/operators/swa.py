@@ -25,10 +25,10 @@ Two physical strategies, picked automatically:
    every aggregate (built-in, grouped top-K, element-wise pooling,
    custom) reads its ``[lo, hi)`` slice of the bucket's (key, ts)-sorted
    fact arrays. Hot-key skew is handled here only, by salting: a hot
-   key's timeline is cut into window-wide chunks (``salt_mode`` ``auto``
-   / ``time_slice``) or its fact rows are replicated across salt buckets
-   (``replicate``; the reference's SaltedSparkJoin.scala:37-130 scheme).
-   AQE cannot split a cogroup, so salting is explicit.
+   key's timeline is cut into window-wide chunks when every window is
+   bounded, otherwise its fact rows are replicated across salt buckets
+   (the reference's SaltedSparkJoin.scala:37-130 scheme). AQE cannot
+   split a cogroup, so salting is explicit.
 
 Shared optimizations (reference parity):
 - fact time-range prefilter ``[min_obs - max(width+delay), max_obs - min(delay)]``
@@ -38,9 +38,6 @@ Shared optimizations (reference parity):
 - null-key observation segregation: null keys never match and are
   unioned back with null features (SlidingWindowJoinIterator.scala:350-353,
   SlidingWindowAggregationJoiner.scala:232-234,275-278)
-- optional left-semi reduction of fact by observed keys (the explicit
-  form of the reference's bloom-filter reduction, OptimizerUtils.scala:117-161;
-  Spark's runtime bloom-filter join covers the equi-join path natively)
 """
 
 from __future__ import annotations
@@ -434,84 +431,24 @@ def _default_buckets(df: DataFrame) -> int:
         return max(spark.sparkContext.defaultParallelism * 4, 32)
 
 
-def _hot_keys(fact: DataFrame, n_keys: int, threshold: int,
-              method: str = "exact") -> DataFrame:
-    """Keys hot enough to salt. Estimator strategies mirror the
-    reference's FrequentItemEstimator family
-    (offline/join/util/*FrequentItemEstimator.scala):
-
-    - ``exact``: groupBy-count (GroupAndCountFrequentItemEstimator:21) —
-      exact, one map-side-combined shuffle of distinct keys.
-    - ``freq_items``: df.stat.freqItems single-pass streaming estimate
-      (SparkFrequentItemEstimator:41) — no shuffle, may over-report;
-      over-reporting only costs harmless extra salting.
-    - ``cms``: count-min sketch (CountMinSketchFrequentItemEstimator:48,
-      same eps=0.01/confidence=0.95 → 200x5 counters). The sketch is a
-      fixed 8 KB aggregation state (partial-aggregated, no per-key
-      shuffle), collected once and re-broadcast as 5 in-plan array
-      literals; the estimate `min_d(counts[d][h_d(key)])` is then pure
-      JVM expressions — never undercounts, so no hot key is missed;
-      over-reporting only costs harmless extra salting. Composite keys
-      supported (sketched on xxhash64 of the key tuple).
-    Precomputed lists (PreComputedFrequentItemEstimator:20) are passed
-    straight to join_window_agg_features(hot_keys_df=...).
-    """
-    kcols = _key_cols(n_keys)
-    if method == "exact":
-        return fact.groupBy(*kcols).count().where(F.col("count") > threshold).select(*kcols)
-    if method == "cms":
-        width, depth = 200, 5  # ceil(2/eps), ceil(-ln(1-conf)/ln 2)
-        item = F.xxhash64(*kcols)
-        probe = F.array(*[F.struct(
-            F.lit(d).alias("d"),
-            F.pmod(F.xxhash64(F.lit(d), item), F.lit(width)).alias("b"))
-            for d in range(depth)])
-        # build: explode to (depth, bucket) cells; partial aggregation
-        # caps the shuffle at depth*width rows per partition
-        cells = fact.select(F.explode(probe).alias("p")) \
-            .groupBy("p.d", "p.b").count().collect()
-        table = {(r["d"], r["b"]): r["count"] for r in cells}
-        est = F.least(*[
-            F.element_at(
-                F.array(*[F.lit(int(table.get((d, w), 0))) for w in range(width)]),
-                (F.pmod(F.xxhash64(F.lit(d), item), F.lit(width)) + 1).cast("int"))
-            for d in range(depth)
-        ])
-        return fact.where(est > threshold).select(*kcols).dropDuplicates()
-    if method == "freq_items":
-        if n_keys != 1:
-            # per-column freqItems lists are independent and unaligned, so
-            # zipping them positionally would fabricate composite keys and
-            # miss real ones — composite keys must use exact/precomputed
-            raise ValueError("freq_items hot-key estimation supports single-column "
-                             "keys only; use method='exact' or hot_keys_df for "
-                             "composite keys")
-        n = fact.count()
-        if n == 0:
-            return fact.select(*kcols).limit(0)
-        support = max(threshold / n, 1e-4)
-        row = fact.stat.freqItems(kcols, support).first()
-        spark = fact.sparkSession
-        vals = list(zip(*[row[f"{c}_freqItems"] for c in kcols]))
-        schema = fact.select(*kcols).schema
-        return spark.createDataFrame([tuple(v) for v in vals] or [], schema)
-    raise ValueError(f"unknown hot-key estimator {method!r}")
-
-
 def _salt(obs: DataFrame, fact: DataFrame, n_keys: int, threshold: int, buckets: int,
-          method: str = "exact", hot_keys_df: Optional[DataFrame] = None,
+          hot_keys_df: Optional[DataFrame] = None,
           slice_width_us: Optional[int] = None, span_us: int = 0,
           lo_shift_us: int = 0):
     """Skew handling for hot keys — two schemes, both keeping each
-    observation's full visible window inside its (key, salt) fragment:
+    observation's full visible window inside its (key, salt) fragment.
+    Hot keys are ``hot_keys_df`` (the reference's
+    PreComputedFrequentItemEstimator:20) or else the keys with more than
+    ``threshold`` fact rows, by an exact groupBy-count
+    (GroupAndCountFrequentItemEstimator:21).
 
-    - **replicate** (default; SaltedSparkJoin.scala:88-130 analogue):
-      hot-key fact rows are copied into every salt bucket, hot-key
-      observations hash into one. Works for UNBOUNDED lookback, but the
-      hot key's full fact history is sorted/scanned in every fragment —
-      per-fragment cost never shrinks, so the hot fragment stays the
-      straggler at high core counts (measured: kernel tmax 3.9 s vs a
-      0.3 s median at 32 cores).
+    - **replicate** (``slice_width_us`` unset; SaltedSparkJoin.scala:88-130
+      analogue): hot-key fact rows are copied into every salt bucket,
+      hot-key observations hash by (key, ts) into one. Works for
+      UNBOUNDED lookback, but the hot key's full fact history is
+      sorted/scanned in every fragment — per-fragment cost never shrinks,
+      so the hot fragment stays the straggler at high core counts
+      (measured: kernel tmax 3.9 s vs a 0.3 s median at 32 cores).
 
     - **time-slice** (``slice_width_us`` set; requires every window
       bounded by ``span_us`` = max(width+delay)): the hot key's TIMELINE
@@ -524,8 +461,10 @@ def _salt(obs: DataFrame, fact: DataFrame, n_keys: int, threshold: int, buckets:
       The 100 TB shape for bounded windows over zipf-hot entities.
     """
     kcols = _key_cols(n_keys)
-    hot = (hot_keys_df if hot_keys_df is not None
-           else _hot_keys(fact, n_keys, threshold, method)).withColumn("__hot", F.lit(True))
+    if hot_keys_df is None:
+        hot_keys_df = fact.groupBy(*kcols).count().where(F.col("count") > threshold) \
+            .select(*kcols)
+    hot = hot_keys_df.withColumn("__hot", F.lit(True))
     fact_h = fact.join(F.broadcast(hot), on=kcols, how="left")
     # explode can't sit inside when(); build hot/cold branches and union
     if slice_width_us:
@@ -541,7 +480,9 @@ def _salt(obs: DataFrame, fact: DataFrame, n_keys: int, threshold: int, buckets:
         obs_salt = F.coalesce(F.floor(F.col("__ts") / F.lit(w)), F.lit(0))
     else:
         fact_copies = F.sequence(F.lit(0).cast("long"), F.lit(buckets - 1).cast("long"))
-        obs_salt = F.pmod(F.xxhash64(*obs.columns), F.lit(buckets)).cast("long")
+        # only the columns that place a row: a payload column may be a
+        # map, which xxhash64 rejects, or a wide array not worth hashing
+        obs_salt = F.pmod(F.xxhash64(*kcols, "__ts", "__nk"), F.lit(buckets)).cast("long")
     hot_fact = fact_h.where(F.col("__hot").isNotNull()).drop("__hot") \
         .withColumn("__salt", F.explode(fact_copies))
     cold_fact = fact_h.where(F.col("__hot").isNull()).drop("__hot") \
@@ -558,9 +499,7 @@ def _salt(obs: DataFrame, fact: DataFrame, n_keys: int, threshold: int, buckets:
 
 def _swa_cogroup(obs: DataFrame, fact_proj: DataFrame, features, metric_col, n_keys,
                  tiebreak, obs_schema, out_fields, hot_key_threshold, salt_buckets,
-                 num_buckets: Optional[int] = None, hot_key_method: str = "exact",
-                 hot_keys_df: Optional[DataFrame] = None,
-                 salt_mode: str = "auto") -> DataFrame:
+                 hot_keys_df: Optional[DataFrame] = None) -> DataFrame:
     """Cogroup by a bounded hash BUCKET of the key (not the key itself):
     the kernel merges every key in the bucket in one Arrow batch. This
     keeps the number of Python invocations O(buckets) while the shuffle
@@ -573,17 +512,15 @@ def _swa_cogroup(obs: DataFrame, fact_proj: DataFrame, features, metric_col, n_k
             # positional rename to the internal widened key columns
             hot_keys_df = hot_keys_df.select(*[
                 F.col(c).alias(f"__k{i}") for i, c in enumerate(hot_keys_df.columns)])
-        # bounded windows let hot keys default to TIME-SLICED salting:
-        # chunk width = the widest effective window, each fact row copied
-        # into <= 2 chunks (see _salt). ``salt_mode="replicate"`` (and any
-        # unbounded window) restores full replication (e.g. when the whole
-        # observed timeline is shorter than a couple of window widths).
+        # bounded windows salt hot keys by TIME SLICE: chunk width = the
+        # widest effective window, each fact row copied into <= 2 chunks
+        # (see _salt). An unbounded window (or a zero span) replicates.
         span_us = max((f.window.width_us + f.window.delay_us) for f in features)
         lo_shift_us = min(0, min(f.window.delay_us for f in features))
-        slice_w = span_us if (salt_mode != "replicate" and span_us > 0
-                              and not any(f.window.unbounded for f in features)) else None
+        bounded = span_us > 0 and not any(f.window.unbounded for f in features)
+        slice_w = span_us if bounded else None
         obs, fact_proj = _salt(obs, fact_proj, n_keys, hot_key_threshold or 0,
-                               salt_buckets, hot_key_method, hot_keys_df,
+                               salt_buckets, hot_keys_df,
                                slice_width_us=slice_w, span_us=span_us,
                                lo_shift_us=lo_shift_us)
         seg_cols = kcols + ["__nk", "__salt"]
@@ -592,7 +529,7 @@ def _swa_cogroup(obs: DataFrame, fact_proj: DataFrame, features, metric_col, n_k
     fact_proj = fact_proj.select("*", *[payload_hash([m], [t]).alias(f"{m}_tb")
                                         for m, t in sorted(tb_metrics.items())])
 
-    b = num_buckets or _default_buckets(obs)
+    b = _default_buckets(obs)
     bucket = F.pmod(F.xxhash64(*seg_cols), F.lit(b)).cast("int")
     # explicit repartition pins the kernel-stage task count at b: AQE's
     # partition coalescing otherwise merges the bucket shuffle down to
@@ -731,15 +668,11 @@ def join_window_agg_features(
     fact_ts_format: str = "epoch",
     strategy: str = "auto",
     prefilter_time_range: bool = True,
-    semi_join_fact: bool = False,
     hot_key_threshold: Optional[int] = None,
     salt_buckets: int = 8,
-    num_buckets: Optional[int] = None,
     slick: bool = False,
-    hot_key_method: str = "exact",
     hot_keys_df: Optional[DataFrame] = None,
     obs_time_range: Optional[tuple] = None,
-    salt_mode: str = "auto",
 ) -> DataFrame:
     """Point-in-time sliding-window aggregation join.
 
@@ -761,9 +694,6 @@ def join_window_agg_features(
     clash = {f.name for f in features} & set(obs.columns)
     if clash:
         raise ValueError(f"feature names collide with observation columns: {sorted(clash)}")
-    if salt_mode not in ("auto", "time_slice", "replicate"):
-        raise ValueError(f"unknown salt_mode {salt_mode!r}; "
-                         "expected 'auto', 'time_slice' or 'replicate'")
     if slick:
         return _slick_wrap(
             obs, obs_keys, obs_ts,
@@ -771,10 +701,8 @@ def join_window_agg_features(
                 trimmed, fact, keys, fact_keys, ts, fact_ts, features,
                 obs_ts_format=obs_ts_format, fact_ts_format=fact_ts_format,
                 strategy=strategy, prefilter_time_range=prefilter_time_range,
-                semi_join_fact=semi_join_fact, hot_key_threshold=hot_key_threshold,
-                salt_buckets=salt_buckets, num_buckets=num_buckets, slick=False,
-                hot_key_method=hot_key_method, hot_keys_df=hot_keys_df,
-                obs_time_range=obs_time_range, salt_mode=salt_mode,
+                hot_key_threshold=hot_key_threshold, salt_buckets=salt_buckets,
+                slick=False, hot_keys_df=hot_keys_df, obs_time_range=obs_time_range,
             ),
         )
     if len(obs_keys) != len(fact_keys):
@@ -817,11 +745,6 @@ def join_window_agg_features(
     if prefilter_time_range:
         fact_proj = _time_prefilter(obs_main.where(F.col("__nk") == 0), fact_proj, features,
                                     obs_time_range=obs_time_range)
-    if semi_join_fact:
-        fact_proj = fact_proj.join(
-            obs_main.select(*_key_cols(n_keys)).dropDuplicates(), on=_key_cols(n_keys),
-            how="left_semi",
-        )
 
     # figure output field types (LATEST passes the metric type through)
     proj_dtypes = {f.name: f.dataType for f in fact_proj.schema.fields}
@@ -852,8 +775,7 @@ def join_window_agg_features(
     elif strategy == "cogroup":
         joined = _swa_cogroup(
             obs_main, fact_proj, features, metric_col, n_keys, tiebreak,
-            obs.schema, out_fields, hot_key_threshold, salt_buckets, num_buckets,
-            hot_key_method, hot_keys_df, salt_mode,
+            obs.schema, out_fields, hot_key_threshold, salt_buckets, hot_keys_df,
         )
     else:
         raise ValueError(f"unknown strategy {strategy!r}")

@@ -264,8 +264,10 @@ def test_salted_cogroup_matches_unsalted(spark):
 
 def test_time_slice_salt_matches_replicate(spark):
     """Time-sliced salting (hot key chunked by window width, <=2 fact
-    copies) must equal full replication AND the unsalted run — including
-    per-feature delays, which widen the visibility span."""
+    copies), which a bounded battery picks, must give what full
+    replication gives: the unsalted run — including per-feature delays,
+    which widen the visibility span. Replication itself is checked by
+    the unbounded leg of test_salted_swa_matches_brute_force."""
     fact, obs = corpus(spark, sf=0.0005)
     feats = [
         SWAFeature("s1", "SUM", "n_tok", WindowSpec(86400)),
@@ -277,23 +279,17 @@ def test_time_slice_salt_matches_replicate(spark):
                   fact_ts="event_ts", features=feats, strategy="cogroup")
     plain = join_window_agg_features(obs, fact, **kwargs).orderBy("obs_id").toPandas()
     sliced = join_window_agg_features(obs, fact, hot_key_threshold=50, salt_buckets=4,
-                                      salt_mode="time_slice", **kwargs) \
-        .orderBy("obs_id").toPandas()
-    repl = join_window_agg_features(obs, fact, hot_key_threshold=50, salt_buckets=4,
-                                    salt_mode="replicate", **kwargs) \
-        .orderBy("obs_id").toPandas()
+                                      **kwargs).orderBy("obs_id").toPandas()
     for c in ("s1", "s7", "cd", "dl"):
         assert np.allclose(plain[c].astype(float).fillna(-1),
                            sliced[c].astype(float).fillna(-1), rtol=1e-9), c
-        assert np.allclose(plain[c].astype(float).fillna(-1),
-                           repl[c].astype(float).fillna(-1), rtol=1e-9), c
 
 
 def test_negative_delay_salted_matches_unsalted(spark):
     """A negative delay lets an observation see FUTURE fact rows; the
     time-sliced salt must copy hot-key fact rows DOWN into earlier
-    chunks (lo_shift) or matches silently vanish. Parity across
-    unsalted / time-slice / replicate."""
+    chunks (lo_shift) or matches silently vanish. Parity of unsalted and
+    time-slice salted."""
     fact, obs = corpus(spark, sf=0.0005)
     feats = [
         SWAFeature("fw", "SUM", "n_tok", WindowSpec(2 * 86400, delay=-86400)),
@@ -303,17 +299,75 @@ def test_negative_delay_salted_matches_unsalted(spark):
                   fact_ts="event_ts", features=feats, strategy="cogroup")
     plain = join_window_agg_features(obs, fact, **kwargs).orderBy("obs_id").toPandas()
     sliced = join_window_agg_features(obs, fact, hot_key_threshold=50, salt_buckets=4,
-                                      salt_mode="time_slice", **kwargs) \
-        .orderBy("obs_id").toPandas()
-    repl = join_window_agg_features(obs, fact, hot_key_threshold=50, salt_buckets=4,
-                                    salt_mode="replicate", **kwargs) \
-        .orderBy("obs_id").toPandas()
+                                      **kwargs).orderBy("obs_id").toPandas()
     assert plain["fw"].notna().any()  # future-window matches actually exist
     for c in ("fw", "bk"):
         assert np.allclose(plain[c].astype(float).fillna(-1),
                            sliced[c].astype(float).fillna(-1), rtol=1e-9), c
-        assert np.allclose(plain[c].astype(float).fillna(-1),
-                           repl[c].astype(float).fillna(-1), rtol=1e-9), c
+
+
+def test_salt_scheme_follows_the_windows(spark, monkeypatch):
+    """The salt scheme is derived from the battery, seen through how
+    many copies a hot fact row gets: a bounded battery slices the hot
+    key's timeline (<= ceil(span/W)+1 copies, W = span), a battery with
+    an unbounded window replicates into every salt bucket. Both equal
+    the unsalted run."""
+    from feathr_spark.operators import swa
+
+    obs = spark.createDataFrame([(1, t) for t in (120, 250, 380, 500)] + [(2, 500)],
+                                "k long, ts long")
+    fact = spark.createDataFrame([(1, t, 1.0) for t in range(0, 500, 20)] + [(2, 5, 9.0)],
+                                 "k long, ts long, v double")
+    bounded = [SWAFeature("s100", "SUM", "v", WindowSpec(100)),
+               SWAFeature("s50", "SUM", "v", WindowSpec(40, delay=10))]
+    seen = []
+
+    def spy(*a, **kw):
+        obs_s, fact_s = orig(*a, **kw)
+        seen.append(fact_s)
+        return obs_s, fact_s
+
+    orig = swa._salt
+    monkeypatch.setattr(swa, "_salt", spy)
+
+    def copies_per_hot_fact_row(feats):
+        kw = dict(strategy="cogroup", prefilter_time_range=False)  # keep every fact row
+        plain = join_window_agg_features(obs, fact, ["k"], ["k"], "ts", "ts", feats, **kw)
+        salted = join_window_agg_features(obs, fact, ["k"], ["k"], "ts", "ts", feats,
+                                          hot_key_threshold=1, salt_buckets=4, **kw)
+        assert sorted(map(tuple, salted.collect())) == sorted(map(tuple, plain.collect()))
+        counts = seen.pop().where("__k0 = 1").groupBy("__ts").count().collect()
+        assert len(counts) == 25  # every fact row of the hot key
+        return {r["count"] for r in counts}
+
+    # span 100 s = W: at most ceil(100/100) + 1 copies
+    assert max(copies_per_hot_fact_row(bounded)) <= 2
+    unbounded = bounded + [SWAFeature("lt", "LATEST", "v", WindowSpec(math.inf))]
+    assert copies_per_hot_fact_row(unbounded) == {4}
+
+
+def test_replicate_salt_accepts_map_observation_column(spark):
+    """Replicate salting (an unbounded window) places a hot observation
+    by a hash of its key, ts and null-key id only: a map-typed
+    observation column, which xxhash64 rejects, must neither fail the
+    plan nor change the result."""
+    obs = spark.createDataFrame(
+        [(1, 100, {"a": 1}), (1, 300, {"b": 2}), (2, 300, None), (None, 300, {"c": 3})],
+        "k long, ts long, m map<string,int>")
+    fact = spark.createDataFrame(
+        [(1, 50, 1.0), (1, 150, 2.0), (1, 250, 4.0), (2, 10, 8.0)],
+        "k long, ts long, v double")
+    feats = [SWAFeature("vs", "SUM", "v", WindowSpec(math.inf))]
+
+    def run(**salt):
+        out = join_window_agg_features(obs, fact, ["k"], ["k"], "ts", "ts", feats,
+                                       strategy="cogroup", **salt)
+        return sorted(((r["k"], r["ts"], r["vs"]) for r in out.collect()),
+                      key=lambda t: (t[0] is None, t[0] or 0, t[1]))
+
+    plain = run()
+    assert plain == [(1, 100, 1.0), (1, 300, 7.0), (2, 300, 8.0), (None, 300, None)]
+    assert run(hot_key_threshold=1, salt_buckets=4) == plain
 
 
 def test_slick_map_columns_hash_into_uid(spark):
@@ -381,8 +435,8 @@ def test_swa_slick_parity(spark):
 
 
 def test_hot_key_estimators_agree(spark):
-    """freq_items and precomputed hot-key lists both produce correct
-    (parity with unsalted) results."""
+    """A precomputed hot-key list produces correct (parity with
+    unsalted) results."""
     from feathr_spark import SWAFeature, WindowSpec, join_window_agg_features
     from feathr_spark.datagen import corpus
 
@@ -392,19 +446,14 @@ def test_hot_key_estimators_agree(spark):
     base = join_window_agg_features(
         obs, fact, ["doc_id"], ["doc_id"], "ts", "event_ts", feats, **kw
     ).orderBy("obs_id").toPandas()
-    fi = join_window_agg_features(
-        obs, fact, ["doc_id"], ["doc_id"], "ts", "event_ts", feats,
-        hot_key_threshold=50, hot_key_method="freq_items", salt_buckets=4, **kw
-    ).orderBy("obs_id").toPandas()
     pre = join_window_agg_features(
         obs, fact, ["doc_id"], ["doc_id"], "ts", "event_ts", feats,
         hot_keys_df=spark.createDataFrame([("doc_0",), ("doc_1",)], "doc_id string"),
         salt_buckets=4, **kw
     ).orderBy("obs_id").toPandas()
-    for other, tag in ((fi, "freq_items"), (pre, "precomputed")):
-        a = base["s1"].astype("float").fillna(-1).to_numpy()
-        b = other["s1"].astype("float").fillna(-1).to_numpy()
-        assert np.allclose(a, b), tag
+    a = base["s1"].astype("float").fillna(-1).to_numpy()
+    b = pre["s1"].astype("float").fillna(-1).to_numpy()
+    assert np.allclose(a, b)
 
 
 def test_slick_no_checkpoint_and_duplicates(spark):
@@ -432,15 +481,6 @@ def test_slick_no_checkpoint_and_duplicates(spark):
     assert "ExistingRDD" not in plan, "localCheckpoint crept back into slick"
     rows = sorted([(r["k"], r["ts"], r["vsum"]) for r in out.collect()])
     assert rows == [(1, 10, 5.0), (1, 10, 5.0), (2, 25, 7.0)]
-
-
-def test_freq_items_composite_keys_rejected(spark):
-    from feathr_spark.operators.swa import _hot_keys, _with_keys_ts
-
-    fact = spark.createDataFrame([(1, "a", 5)], "k1 long, k2 string, ts long")
-    f2 = _with_keys_ts(fact, ["k1", "k2"], "ts", "epoch")
-    with pytest.raises(ValueError, match="single-column"):
-        _hot_keys(f2, 2, 10, method="freq_items")
 
 
 def test_global_count_distinct_matches_loop():
@@ -509,26 +549,6 @@ def test_custom_aggregation_registry(spark):
             feathr_spark.register_aggregation("SUM", value_range)
     finally:
         CUSTOM_AGGS.pop("RANGE", None)
-
-
-def test_cms_hot_keys_superset_of_exact(spark):
-    """Count-min sketch estimator never MISSES a hot key (one-sided
-    error); composite keys supported via tuple hashing."""
-    from feathr_spark.operators.swa import _hot_keys, _with_keys_ts
-
-    rows = [(1, "a", i) for i in range(300)] + \
-           [(2, "b", i) for i in range(40)] + \
-           [(i + 10, "c", i) for i in range(50)]
-    fact = spark.createDataFrame(rows, "k1 long, k2 string, ts long")
-    f2 = _with_keys_ts(fact, ["k1", "k2"], "ts", "epoch")
-    exact = {(r["__k0"], r["__k1"])
-             for r in _hot_keys(f2, 2, 100, method="exact").collect()}
-    cms = {(r["__k0"], r["__k1"])
-           for r in _hot_keys(f2, 2, 100, method="cms").collect()}
-    assert exact == {(1, "a")}
-    assert exact <= cms  # may over-report, never under-reports
-    # over-reporting is bounded: eps=0.01 of 390 rows ~ 4 extra counts max
-    assert (2, "b") not in cms
 
 
 def test_null_key_rows_stay_off_the_global_composite():
@@ -625,9 +645,9 @@ def test_rank_compressed_composite_tier_matches_span_tier():
 
 def test_salted_union_matches_unsalted_and_cogroup(spark):
     """Salting runs on the cogroup strategy only: unsalted union ==
-    salted cogroup in both salt modes, incl. a delayed window and
-    COUNT_DISTINCT, and union with hot keys (a threshold or a precomputed
-    list) raises, naming cogroup."""
+    salted cogroup, incl. a delayed window and COUNT_DISTINCT, and union
+    with hot keys (a threshold or a precomputed list) raises, naming
+    cogroup."""
     fact, obs = corpus(spark, sf=0.0005)
     feats = [
         SWAFeature("s1", "SUM", "n_tok", WindowSpec(86400)),
@@ -640,31 +660,16 @@ def test_salted_union_matches_unsalted_and_cogroup(spark):
                   fact_ts="event_ts", features=feats)
     plain = join_window_agg_features(obs, fact, strategy="union", **kwargs) \
         .orderBy("obs_id").toPandas()
-    for mode in ("time_slice", "replicate"):
-        cg = join_window_agg_features(
-            obs, fact, strategy="cogroup", hot_key_threshold=50,
-            salt_buckets=4, salt_mode=mode, **kwargs) \
-            .orderBy("obs_id").toPandas()
-        for c in ("s1", "a7", "lt", "cd", "dl"):
-            assert np.allclose(plain[c].astype(float).fillna(-1),
-                               cg[c].astype(float).fillna(-1),
-                               rtol=1e-9), (mode, c)
+    cg = join_window_agg_features(
+        obs, fact, strategy="cogroup", hot_key_threshold=50, salt_buckets=4,
+        **kwargs).orderBy("obs_id").toPandas()
+    for c in ("s1", "a7", "lt", "cd", "dl"):
+        assert np.allclose(plain[c].astype(float).fillna(-1),
+                           cg[c].astype(float).fillna(-1), rtol=1e-9), c
     hot = fact.select("doc_id").limit(3)
     for hot_kw in (dict(hot_key_threshold=50), dict(hot_keys_df=hot)):
         with pytest.raises(ValueError, match="cogroup"):
             join_window_agg_features(obs, fact, strategy="union", **hot_kw, **kwargs)
-
-
-def test_unknown_salt_mode_raises(spark):
-    """A misspelt salt_mode must not silently select replicate salting."""
-    obs = spark.createDataFrame([(1, 100)], "k long, ts long")
-    fact = spark.createDataFrame([(1, 50, 2.0)], "k long, ts long, v double")
-    feats = [SWAFeature("vs", "SUM", "v", WindowSpec(80))]
-    for mode in ("timeslice", "Replicate"):
-        with pytest.raises(ValueError, match="salt_mode"):
-            join_window_agg_features(obs, fact, ["k"], ["k"], "ts", "ts", feats,
-                                     strategy="cogroup", hot_key_threshold=0,
-                                     salt_mode=mode)
 
 
 def test_dense_codes_keep_high_cardinality_composite_keys_global():

@@ -304,18 +304,19 @@ def test_pooling_matches_brute_force(spark, fact, obs, width):
 
 # ---------------------------------------------------------------------------
 # salted variants: every key forced hot — the entire dataset runs through
-# the salt machinery (cogroup, the only salted strategy) in both salt modes
+# the salt machinery (cogroup, the only salted strategy). A bounded window
+# salts by time slice, an unbounded one replicates.
 # ---------------------------------------------------------------------------
 
 
-@pytest.mark.parametrize("strategy,salt_mode",
-                         [("cogroup", "time_slice"), ("cogroup", "replicate")])
+@pytest.mark.parametrize("bounded", [True, False], ids=["bounded", "unbounded"])
 @settings(max_examples=8, deadline=None, derandomize=True,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(fact=fact_rows, obs=obs_rows, win=windows)
-def test_salted_swa_matches_brute_force(spark, strategy, salt_mode,
-                                        fact, obs, win):
+def test_salted_swa_matches_brute_force(spark, bounded, fact, obs, win):
     width, delay = win
+    if not bounded:
+        width = math.inf
     obs_df = spark.createDataFrame(
         [(i, k, float(t)) for i, (k, t) in enumerate(obs)],
         "obs_id long, k string, ts double")
@@ -332,13 +333,12 @@ def test_salted_swa_matches_brute_force(spark, strategy, salt_mode,
     ]
     got = {r["obs_id"]: r for r in join_window_agg_features(
         obs_df, fact_df, ["k"], ["k"], "ts", "ts", feats,
-        strategy=strategy, hot_keys_df=hot, salt_buckets=3,
-        salt_mode=salt_mode).collect()}
+        strategy="cogroup", hot_keys_df=hot, salt_buckets=3).collect()}
     for want in brute_force(obs, fact, width, delay):
         g = got[want["obs_id"]]
         for name in ("s", "n", "mx", "lt", "cd"):
             w, v = want[name], g[name]
-            ctx = (f"obs {want['obs_id']} {name} ({strategy}/{salt_mode}, "
+            ctx = (f"obs {want['obs_id']} {name} (salted, "
                    f"w={width} d={delay}): want {w} got {v}\n"
                    f"obs={obs}\nfact={fact}")
             if w is None:
